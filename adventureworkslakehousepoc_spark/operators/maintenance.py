@@ -476,6 +476,13 @@ def _classify_reclaimable(
     )
 
 
+def _hidden_from_spark(name: str) -> bool:
+    """Spark's file-index rule (InMemoryFileIndex.shouldFilterOutPathName):
+    '.'-prefixed names, and '_'-prefixed ones that are not 'key=value'
+    partition directories."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def vacuum_apply(
     spark: SparkSession,
     path: str,
@@ -525,15 +532,19 @@ def vacuum_apply(
     # (if fail-safe) block — and WALK the directory so partitioned logs
     # (parquet files in subdirectories, which spark.read.parquet reads)
     # get the same protection instead of an empty/partial footer set.
-    footer_schemas = {
-        frozenset(
-            (fld.name, str(fld.type))
-            for fld in pq.read_schema(os.path.join(root, f))
+    # Only what Spark's file index reads is walked: '_'/'.'-prefixed names
+    # (a sink's _spark_metadata, _temporary, .staging) are invisible to it.
+    footer_schemas = set()
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden_from_spark(d)]
+        footer_schemas.update(
+            frozenset(
+                (fld.name, str(fld.type))
+                for fld in pq.read_schema(os.path.join(root, f))
+            )
+            for f in files
+            if f.endswith(".parquet") and not _hidden_from_spark(f)
         )
-        for root, _dirs, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    }
     if len(footer_schemas) > 1:
         raise ValueError(
             f"vacuum_apply({path!r}): the log carries {len(footer_schemas)} "

@@ -1,25 +1,14 @@
 """Query registry: maps SURVEY.md §2 inventory rows (and extension operators)
 to (Spark callable, DuckDB oracle SQL) pairs consumed by ``__spark_entry__``.
 
-Registration ORDER matters: the driver's per-round correctness pass covers a
-50-query prefix of the registry, so each round must front the queries most
-in need of a fresh driver row. Rounds 4 and 5 both overflowed hand-planned
-windows; since round 6 the order is MECHANICAL, derived from the row-age
-ledger (``_row_age.py``, regenerated per round by ``scripts/row_age.py``):
+Queries and oracles are looked up by name, as DLT datasets are, so
+registration order carries no meaning: it is simply the order of
+``MODULES``. A name registered by two modules is an error rather than a
+silent shadow.
 
-1. queries with NO driver row ever (new this round, or prior-round window
-   overflow), in registration order;
-2. ``_CHANGED_OUTPUT`` — queries whose output changed after their last
-   green driver row, so the old row no longer attests current behavior;
-3. everything else ascending by (last-verified round, name) — the stalest
-   rows refresh first, automatically.
-
-tests/test_registry.py::test_round6_driver_window_composition enforces the
-derivation (and that groups 1+2 actually fit the 50-slot window), so a new
-registration can never silently land past position 50 again.
-
-Every registered query is ALSO oracle-compared locally by
-tests/test_oracle_parity.py each session regardless of window position.
+Every registered query is compared with its oracle by
+tests/test_oracle_parity.py, which also pins each oracle's output against
+tests/oracle_fingerprints.json.
 """
 
 from __future__ import annotations
@@ -28,132 +17,26 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import _row_age
+from . import advanced, analytics, extensions, parity, streaming_queries, tpch_suite
 
-# Driver window size (prefix of the registry the driver's correctness pass
-# covers each round).
-DRIVER_WINDOW = 50
+MODULES = (parity, extensions, streaming_queries, analytics, advanced, tpch_suite)
 
 
-def _self_heal_ledger(repo: str | None = None) -> tuple[dict[str, int], tuple[str, ...], int]:
-    """Effective ledger = committed ``_row_age.py`` cache, healed at import
-    against any ``CORRECTNESS_r*.json`` NEWER than the cache's
-    ``GENERATED_AFTER_ROUND``.
-
-    Rounds 8-12 each opened with the designed ledger-freshness tripwire red
-    at HEAD: the driver drops a new CORRECTNESS file between rounds, so the
-    committed cache necessarily predates it until a human runs
-    ``scripts/row_age.py --write``. Healing here applies the same two rules
-    the regeneration script would:
-
-    1. a fully-green row (rows+schema, hash true-or-absent) in a newer file
-       advances that query's LAST_VERIFIED — so last round's freshly
-       verified queries stop hogging the next window;
-    2. a green row in the NEWEST round attests any carried changed-output
-       flag for that query (``derive_changed_output``'s first-regen rule),
-       so attested flags clear without a manual regen.
-
-    New fingerprint DRIFT cannot be detected here (that needs a DuckDB
-    replay of every oracle); the committed FINGERPRINT table plus the
-    ``test_registry.py`` fingerprint tripwire still cover mid-round edits.
-    ``scripts/row_age.py --write`` remains the once-per-round persistence
-    step — this just guarantees HEAD orders the window correctly (and
-    pytest opens green) before that happens.
-    """
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-
-    last = dict(_row_age.LAST_VERIFIED)
-    changed = tuple(getattr(_row_age, "CHANGED_OUTPUT", ()))
-    gen_after = int(getattr(_row_age, "GENERATED_AFTER_ROUND", 0))
-
-    if repo is None:
-        repo = _os.path.dirname(
-            _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-        )
-    newer: dict[int, list[str]] = {}
-    for path in _glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r0*(\d+)\.json$", path)
-        if not m or int(m.group(1)) <= gen_after:
-            continue
-        try:
-            with open(path) as f:
-                rows = _json.load(f)
-        except (OSError, ValueError):
-            continue  # truncated/in-progress driver file: ignore, keep cache
-        greens = [
-            name
-            for name, r in rows.items()
-            if r.get("rows_match") is True
-            and r.get("schema_match") is True
-            and r.get("hash_match") in (True, None)
-        ]
-        newer[int(m.group(1))] = greens
-    if not newer:
-        return last, changed, gen_after
-
-    for rnd in sorted(newer):
-        for name in newer[rnd]:
-            last[name] = max(last.get(name, 0), rnd)
-    newest = max(newer)
-    attested = set(newer[newest])
-    changed = tuple(c for c in changed if c not in attested)
-    return last, changed, newest
-
-
-LAST_VERIFIED, _CHANGED_OUTPUT, EFFECTIVE_ROUND = _self_heal_ledger()
-
-
-def _round6_order(merged: dict) -> dict:
-    """Mechanical driver-window ordering from the row-age ledger:
-    never-verified first (registration order), then changed-output rows,
-    then changed-PLAN rows not yet re-attested (r16 — see
-    ``_changed_plan.py``), then everything ascending by (last-verified
-    round, name)."""
-    from ._changed_plan import CHANGED_PLAN
-
-    never = [k for k in merged if k not in LAST_VERIFIED]
-    changed = [k for k in _CHANGED_OUTPUT if k in merged and k not in never]
-    fronted = set(never) | set(changed)
-    plan = sorted(
-        (
-            k
-            for k, rnd in CHANGED_PLAN.items()
-            if k in merged and k not in fronted and LAST_VERIFIED.get(k, 0) < rnd
-        ),
-        key=lambda k: (CHANGED_PLAN[k], k),
-    )
-    fronted |= set(plan)
-    rest = sorted(
-        (k for k in merged if k not in fronted),
-        key=lambda k: (LAST_VERIFIED[k], k),
-    )
-    return {k: merged[k] for k in (*never, *changed, *plan, *rest)}
+def _merge(attr: str) -> dict:
+    out: dict = {}
+    for mod in MODULES:
+        for name, value in getattr(mod, attr).items():
+            if name in out:
+                raise ValueError(
+                    f"query {name!r} registered twice (again in {mod.__name__}.{attr})"
+                )
+            out[name] = value
+    return out
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from . import advanced, analytics, extensions, parity, streaming_queries, tpch_suite
-
-    out: dict[str, Callable] = {}
-    out.update(parity.QUERIES)
-    out.update(extensions.QUERIES)
-    out.update(streaming_queries.QUERIES)
-    out.update(analytics.QUERIES)
-    out.update(advanced.QUERIES)
-    out.update(tpch_suite.QUERIES)
-    return _round6_order(out)
+    return _merge("QUERIES")
 
 
 def all_oracles() -> dict[str, str]:
-    from . import advanced, analytics, extensions, parity, streaming_queries, tpch_suite
-
-    out: dict[str, str] = {}
-    out.update(parity.ORACLE)
-    out.update(extensions.ORACLE)
-    out.update(streaming_queries.ORACLE)
-    out.update(analytics.ORACLE)
-    out.update(advanced.ORACLE)
-    out.update(tpch_suite.ORACLE)
-    return _round6_order(out)
+    return _merge("ORACLE")

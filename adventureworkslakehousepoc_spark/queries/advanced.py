@@ -16,23 +16,10 @@ from ..catalog import load_tables
 from ..operators.asof import asof_join
 from ..operators.sessions import session_window_agg, sessionize
 from ..streaming.runner import run_available_now, stream_table
+from ._registrar import registrar
+from .parity import _t
 
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str):
-    return load_tables(spark, sf_dir, names)
+QUERIES, ORACLE, query = registrar()
 
 
 # ---------------------------------------------------------------------------

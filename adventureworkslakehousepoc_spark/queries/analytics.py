@@ -12,25 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
 from ..functions.expressions import exact_unscaled_sum, exact_unscaled_sum_over
+from ._registrar import registrar
+from .parity import _t
 
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str):
-    return load_tables(spark, sf_dir, names)
+QUERIES, ORACLE, query = registrar()
 
 
 @query(

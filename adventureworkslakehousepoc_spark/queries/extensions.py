@@ -40,19 +40,9 @@ from ..operators.text_analysis import (
     repetition_scores,
     token_counts,
 )
+from ._registrar import registrar
 
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLE, query = registrar()
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2492,10 +2482,6 @@ def collocation_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Round 5: preference-data / RLHF-prep + robust curation screens
 # ---------------------------------------------------------------------------
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_tables(spark, sf_dir, ("events",))["events"]
 
 
 @query(

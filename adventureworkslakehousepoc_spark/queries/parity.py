@@ -32,19 +32,9 @@ from ..operators.joins import interval_join, star_left_join
 from ..pipelines.medallion import SEGMENT_DECODE, medallion_context
 from ..sources.files import NOAA_BY_YEAR_SCHEMA, read_csv_with_schema
 from ..sources.fixed_width import FixedWidthField, parse_fixed_width, read_fixed_width
+from ._registrar import registrar
 
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLE, query = registrar()
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -30,19 +30,9 @@ from ..functions.expressions import exact_unscaled_sum as _exact_unscaled_sum
 from ..operators.joins import interval_join, star_left_join
 from ..streaming.cdf import ChangeFeed, latest_snapshot
 from ..streaming.runner import run_available_now, scratch_dir, stream_table, stream_tmp_root
+from ._registrar import registrar
 
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLE, query = registrar()
 
 
 # ---------------------------------------------------------------------------

@@ -27,52 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
 from ..functions.expressions import exact_unscaled_sum
+from ._registrar import registrar
+from .parity import _REV_SQL, _rev, _rev_sum, _rev_u, _t
 
-QUERIES: dict = {}
-ORACLE: dict[str, str] = {}
+QUERIES, ORACLE, query = registrar()
 
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return load_tables(spark, sf_dir, names)
-
-
-def _rev():
-    return F.col("l_extendedprice").cast("decimal(12,2)") * (
-        F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast("decimal(3,2)")
-    )
-
-
-# integer-unscaled twin of _rev() (see queries/parity.py): summing the
-# unscaled long through exact_unscaled_sum keeps aggregation on codegen'd
-# long adds (the decimal(26,4) sum buffer pays per-row BigDecimal), with a
-# bit-identical double result.
-def _rev_u():
-    p_cents = F.expr("cast(cast(l_extendedprice as decimal(12,2)) * 100 as bigint)")
-    d_cents = F.expr("cast(cast(l_discount as decimal(3,2)) * 100 as bigint)")
-    return p_cents * (F.lit(100) - d_cents)
-
-
-def _rev_sum():
-    """== F.sum(_rev()).cast("double"), via long partials."""
-    return exact_unscaled_sum(_rev_u(), 4)
-
-
-_REV_SQL = (
-    "CAST(l_extendedprice AS DECIMAL(12,2)) * "
-    "(CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(3,2)))"
-)
 
 _ZERO_DEC = "CAST(0 AS DECIMAL(12,2))"
 

@@ -71,8 +71,10 @@ def canonical_rows(df: pd.DataFrame) -> list[tuple]:
 
 
 def compare_query(spark_df, sql: str, sf_dir: str) -> tuple[bool, str]:
-    con = duckdb_connection(sf_dir)
-    oracle_pdf = con.execute(sql).df()
+    return compare_frames(spark_df, duckdb_connection(sf_dir).execute(sql).df())
+
+
+def compare_frames(spark_df, oracle_pdf: pd.DataFrame) -> tuple[bool, str]:
     spark_pdf = spark_df.toPandas()
     if sorted(spark_pdf.columns) != sorted(oracle_pdf.columns):
         return False, f"column mismatch: spark={sorted(spark_pdf.columns)} oracle={sorted(oracle_pdf.columns)}"

@@ -6,21 +6,32 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
-from .oracle_compare import compare_query
+from . import oracle_fingerprints
+from .oracle_compare import compare_frames, duckdb_connection
 
 QUERIES = entry_mod.queries()
 ORACLES = entry_mod.oracle_sql()
+FINGERPRINTS = oracle_fingerprints.load()
 
 
 def test_every_oracle_has_a_query():
-    missing = set(ORACLES) - set(QUERIES)
-    assert not missing, f"oracle_sql keys without queries(): {missing}"
+    """Every query carries an oracle (full value gate, not rows-only) and
+    every oracle a query; every oracle has a pinned fingerprint."""
+    assert set(ORACLES) == set(QUERIES), set(ORACLES) ^ set(QUERIES)
+    assert set(FINGERPRINTS) == set(ORACLES), set(FINGERPRINTS) ^ set(ORACLES)
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, sf_dir, name):
-    df = QUERIES[name](spark, sf_dir)
-    ok, msg = compare_query(df, ORACLES[name], sf_dir)
+    sql = ORACLES[name]
+    oracle_pdf = duckdb_connection(sf_dir).execute(sql).df()
+    # the pinned fingerprints are of the sf0.001 results
+    if sf_dir == entry_mod.SF0001:
+        assert oracle_fingerprints.fingerprint(sql, oracle_pdf) == FINGERPRINTS.get(name), (
+            f"{name}: oracle output differs from tests/oracle_fingerprints.json; "
+            "if the change is intended, run `python -m tests.oracle_fingerprints --write`"
+        )
+    ok, msg = compare_frames(QUERIES[name](spark, sf_dir), oracle_pdf)
     assert ok, f"{name}: {msg}"
 
 

@@ -4,8 +4,8 @@ equivalent, SURVEY.md §3)."""
 from __future__ import annotations
 
 import os
+import re
 import tempfile
-import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -276,73 +276,14 @@ def test_timestamp_encoding_drift_guard(spark, tmp_path):
     )
 
 
-def test_round6_driver_window_composition():
-    """The driver verifies a 50-query registry prefix. Rounds 4 and 5 both
-    overflowed hand-planned windows; since round 6 the order is derived
-    mechanically from the row-age ledger. This asserts the derivation holds
-    end-to-end: every never-driver-verified query and every changed-output
-    query sits INSIDE the window, and the remainder of the registry is
-    ordered stalest-first so refresh happens automatically."""
-    from adventureworkslakehousepoc_spark import queries as q
-
-    # the EFFECTIVE (self-healed) ledger — what the ordering actually uses;
-    # may be ahead of the committed _row_age.py right after a driver round
-    LAST_VERIFIED = q.LAST_VERIFIED
-
-    ordered = list(q.all_queries())
-    window = ordered[:q.DRIVER_WINDOW]
-
-    never = [k for k in ordered if k not in LAST_VERIFIED]
-    changed = [k for k in q._CHANGED_OUTPUT if k not in never]
-    # changed-PLAN rows (r16): output-identical plan rewrites not yet
-    # re-attested by a driver row run against the new plan — LIVE entries
-    # only (last green row predates the round the rewrite shipped in)
-    from adventureworkslakehousepoc_spark.queries._changed_plan import CHANGED_PLAN
-
-    plan = [
-        k
-        for k, rnd in CHANGED_PLAN.items()
-        if k in ordered
-        and k not in never
-        and k not in changed
-        and LAST_VERIFIED.get(k, 0) < rnd
-    ]
-    # groups 1+2+3 must FIT the window — if this fails, the round added
-    # more new/changed queries than the window can verify: stop adding.
-    assert len(never) + len(changed) + len(plan) <= q.DRIVER_WINDOW, (
-        f"{len(never)} never-verified + {len(changed)} changed-output "
-        f"+ {len(plan)} changed-plan queries exceed the "
-        f"{q.DRIVER_WINDOW}-slot driver window"
-    )
-    assert set(never) <= set(window), f"never-verified outside window: {set(never) - set(window)}"
-    assert set(changed) <= set(window), f"changed-output outside window: {set(changed) - set(window)}"
-    assert set(plan) <= set(window), f"changed-plan outside window: {set(plan) - set(window)}"
-    # every CHANGED_PLAN key must exist in the registry (catch typos —
-    # a misspelled entry would silently front nothing)
-    assert set(CHANGED_PLAN) <= set(ordered), (
-        f"CHANGED_PLAN names not in registry: {set(CHANGED_PLAN) - set(ordered)}"
-    )
-    # the rest is stalest-first: last-verified rounds must be non-decreasing
-    rest = [k for k in ordered if k in LAST_VERIFIED and k not in changed and k not in plan]
-    ages = [LAST_VERIFIED[k] for k in rest]
-    assert ages == sorted(ages), "registry tail not ordered stalest-first"
-    # every windowed query must carry an oracle (full hash gate, not rows-only)
-    oracles = q.all_oracles()
-    assert [k for k in window if k not in oracles] == []
-    # ordering of queries and oracles must agree (driver zips the prefix)
-    assert list(oracles)[:q.DRIVER_WINDOW] == window
-
-
 def test_driver_window_schemas_are_scalar_only(spark):
-    """The driver's rows-only canonicalizer sorts pandas tuples — an array/
-    map/struct/binary output column crashes it (`TypeError: unhashable
-    type`), which is how round 4 lost the `agg_percentiles_approx` row.
-    EVERY registered query must therefore emit scalar columns only, not
-    just the current 50-query window: queries past the window front the
-    NEXT round's window, so a non-scalar schema there is a delayed driver
-    crash. Streaming queries are excluded (building them executes streams;
-    their sinks are parquet-materialized scalar relations by construction
-    and each has its own oracle row)."""
+    """The scalar-only rule exists for the canonical comparator: it sorts
+    tuples of scalar cells, and an array/map/struct/binary output column
+    crashes it (`TypeError: unhashable type`), which is how round 4 lost the
+    `agg_percentiles_approx` row. Every registered query must therefore
+    emit scalar columns only. Streaming queries are excluded (building them
+    executes streams; their sinks are parquet-materialized scalar relations
+    by construction and each has its own oracle row)."""
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()
@@ -359,96 +300,55 @@ def test_driver_window_schemas_are_scalar_only(spark):
     assert not offenders, offenders
 
 
-def test_row_age_ledger_is_current():
-    """The mechanical window ordering is only correct if the ledger reflects
-    the LATEST driver round. Since round 13 the registry SELF-HEALS at
-    import (queries._self_heal_ledger applies newer CORRECTNESS files over
-    the committed cache), so a fresh driver file can no longer leave HEAD
-    red — the hard assert is on the EFFECTIVE ledger. A stale committed
-    cache is downgraded to a UserWarning prompting the once-per-round
-    `python scripts/row_age.py --write` persistence step (which also runs
-    the DuckDB fingerprint drift detection self-healing cannot)."""
-    import glob
-    import re
-    import warnings
-
+def test_query_registry_rejects_duplicate_names(monkeypatch):
+    """A name registered twice, in one query module or in two, must raise
+    instead of silently shadowing the first registration."""
     from adventureworkslakehousepoc_spark import queries as q
-    from adventureworkslakehousepoc_spark.queries import _row_age
+    from adventureworkslakehousepoc_spark.queries import parity, tpch_suite
+
+    name = next(iter(parity.ORACLE))
+    with pytest.raises(ValueError, match=re.escape(repr(name))):
+        parity.query(name)(parity.QUERIES[name])
+    monkeypatch.setitem(tpch_suite.QUERIES, name, parity.QUERIES[name])
+    with pytest.raises(ValueError, match=re.escape(repr(name))):
+        q.all_queries()
+    monkeypatch.setitem(tpch_suite.ORACLE, name, parity.ORACLE[name])
+    with pytest.raises(ValueError, match=re.escape(repr(name))):
+        q.all_oracles()
+
+
+def test_query_registry_import_does_no_file_io():
+    """Importing the query registry and merging it reads no data files:
+    no glob, and no open of a non-Python path under the repo."""
+    import subprocess
+    import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [
-        int(m.group(1))
-        for f in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r0*(\d+)\.json$", f))
-    ]
-    latest = max(rounds, default=0)
-    assert q.EFFECTIVE_ROUND >= latest, (
-        f"self-healed ledger stuck at r{q.EFFECTIVE_ROUND} but "
-        f"CORRECTNESS_r{latest:02d}.json exists — _self_heal_ledger failed "
-        "to apply it"
+    script = """
+import os, sys
+repo = sys.argv[1]
+sys.path.insert(0, repo)
+seen = []
+
+def hook(event, args):
+    if event.startswith("glob.glob"):
+        seen.append((event, args[0]))
+    elif event == "open" and isinstance(args[0], (str, bytes)):
+        path = os.path.abspath(os.fsdecode(args[0]))
+        if path.startswith(repo + os.sep) and not path.endswith((".py", ".pyc")):
+            seen.append((event, path))
+
+sys.addaudithook(hook)
+from adventureworkslakehousepoc_spark import queries
+queries.all_queries()
+queries.all_oracles()
+print(seen)
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script, repo],
+        capture_output=True, text=True, check=True,
     )
-    if _row_age.GENERATED_AFTER_ROUND < latest:
-        warnings.warn(
-            f"committed _row_age.py cache predates r{latest} (self-healed "
-            "in-memory; persist + run drift detection with "
-            "`python scripts/row_age.py --write` and commit)",
-            UserWarning,
-            stacklevel=1,
-        )
-
-
-def test_self_heal_ledger_applies_newer_driver_files(tmp_path):
-    """_self_heal_ledger must (1) advance LAST_VERIFIED from green rows in
-    CORRECTNESS files newer than the committed cache, (2) clear changed-
-    output flags attested by a green row in the NEWEST healed round only,
-    (3) ignore non-green rows and unreadable files, and (4) be a no-op when
-    no newer file exists."""
-    import json
-
-    from adventureworkslakehousepoc_spark import queries as q
-    from adventureworkslakehousepoc_spark.queries import _row_age
-
-    gen_after = _row_age.GENERATED_AFTER_ROUND
-    committed_changed = tuple(getattr(_row_age, "CHANGED_OUTPUT", ()))
-
-    # (4) empty repo dir → exactly the committed cache
-    last, changed, rnd = q._self_heal_ledger(str(tmp_path))
-    assert last == dict(_row_age.LAST_VERIFIED)
-    assert changed == committed_changed
-    assert rnd == gen_after
-
-    # stage two newer rounds: N+1 greens "alpha" (and a red "beta"),
-    # N+2 greens "beta" plus a rows-only (hash null) "gamma"
-    def write(rnd, rows):
-        with open(tmp_path / f"CORRECTNESS_r{rnd:02d}.json", "w") as f:
-            json.dump(rows, f)
-
-    green = {"rows_match": True, "schema_match": True, "hash_match": True}
-    write(gen_after + 1, {"alpha": green,
-                          "beta": {**green, "rows_match": False}})
-    write(gen_after + 2, {"beta": green,
-                          "gamma": {**green, "hash_match": None}})
-    # an older file must be ignored even if present
-    write(gen_after, {"stale_row": green})
-    # a truncated file must not abort healing
-    (tmp_path / f"CORRECTNESS_r{gen_after + 3:02d}.json").write_text("{trunc")
-
-    last, changed, rnd = q._self_heal_ledger(str(tmp_path))
-    assert rnd == gen_after + 2
-    assert last["alpha"] == gen_after + 1
-    assert last["beta"] == gen_after + 2       # red in N+1, green in N+2
-    assert last["gamma"] == gen_after + 2      # rows-only counts as green
-    assert "stale_row" not in last or last.get("stale_row") != gen_after
-
-    # (2) attestation: flags clear only for queries green in the NEWEST round
-    orig = getattr(_row_age, "CHANGED_OUTPUT", ())
-    try:
-        _row_age.CHANGED_OUTPUT = ("alpha", "beta")
-        last, changed, rnd = q._self_heal_ledger(str(tmp_path))
-        assert "beta" not in changed, "green in newest round must attest"
-        assert "alpha" in changed, "green in an OLDER healed round must NOT attest"
-    finally:
-        _row_age.CHANGED_OUTPUT = orig
+    assert out.stdout.strip().splitlines()[-1] == "[]", out.stdout
 
 
 def test_scratch_dirs_swept_at_interpreter_exit(tmp_path):
@@ -471,115 +371,6 @@ def test_scratch_dirs_swept_at_interpreter_exit(tmp_path):
     created = out.stdout.strip().splitlines()[-1]
     assert created.startswith(str(tmp_path))
     assert not os.path.exists(created), "scratch dir survived interpreter exit"
-
-
-def test_ledger_fingerprints_are_current():
-    """Mechanical changed-output detection (replaces the hand list that
-    silently missed text_boilerplate_flags for two rounds): the ledger
-    stores a fingerprint per query — sha256(oracle SQL + canonical DuckDB
-    sf0.001 result) — and scripts/row_age.py flags drift as CHANGED_OUTPUT
-    at regeneration. This tripwire forces that regeneration: any edit that
-    changes a query's observable output makes the committed fingerprints
-    stale, and the window would front the wrong rows. Fix with
-    `python scripts/row_age.py --write` and commit."""
-    import importlib.util
-
-    from adventureworkslakehousepoc_spark import queries as q
-    from adventureworkslakehousepoc_spark.queries import _row_age
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "row_age_script", os.path.join(repo, "scripts", "row_age.py")
-    )
-    script = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(script)
-
-    current = script.compute_fingerprints()
-    recorded = getattr(_row_age, "FINGERPRINT", {})
-    drifted = sorted(
-        k for k in current if recorded.get(k) != current[k]
-    ) + sorted(k for k in recorded if k not in current)
-    assert not drifted, (
-        f"{len(drifted)} queries' output fingerprints are stale in the "
-        f"ledger (first few: {drifted[:8]}) — run "
-        "`python scripts/row_age.py --write` and commit"
-    )
-    # The registry's changed-output ordering input is the SELF-HEALED view
-    # of the ledger's table: when a driver CORRECTNESS file newer than the
-    # committed cache exists, _self_heal_ledger clears flags attested by
-    # that round's green rows — so comparing against the committed tuple
-    # would go red the moment the driver lands (the r8-r13 failure mode).
-    # Assert equality against the committed tuple only when the cache is
-    # current; otherwise re-derive the healed expectation independently and
-    # assert against THAT, warning that a regen is due.
-    committed = tuple(getattr(_row_age, "CHANGED_OUTPUT", ()))
-    cache_round = int(getattr(_row_age, "GENERATED_AFTER_ROUND", 0))
-    if q.EFFECTIVE_ROUND == cache_round:
-        assert q._CHANGED_OUTPUT == committed
-    else:
-        _, healed, _ = q._self_heal_ledger()
-        assert q._CHANGED_OUTPUT == healed
-        warnings.warn(
-            f"row-age cache generated after r{cache_round} but driver files "
-            f"exist through r{q.EFFECTIVE_ROUND}; ordering is self-healed — "
-            "persist it with `python scripts/row_age.py --write` and commit",
-            UserWarning,
-            stacklevel=1,
-        )
-
-
-def test_changed_output_derivation_rules():
-    """The fingerprint-drift derivation in scripts/row_age.py: a drift is
-    excused (attested) ONLY when the regeneration is the first after a new
-    driver round AND that round green-verified the query; mid-round
-    regenerations can never attest (the edit post-dates the driver run);
-    existing flags persist until attested the same way."""
-    import importlib.util
-    import types
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "row_age_script2", os.path.join(repo, "scripts", "row_age.py")
-    )
-    script = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(script)
-    derive = script.derive_changed_output
-
-    def prev(gen_round, fp, changed=()):
-        m = types.SimpleNamespace()
-        m.GENERATED_AFTER_ROUND = gen_round
-        m.FINGERPRINT = fp
-        m.CHANGED_OUTPUT = changed
-        return m
-
-    # round-start regen after driver round 7: drifted q verified in r7 →
-    # attested, not flagged; drifted q NOT verified in r7 → flagged
-    last = {"a": 7, "b": 3}
-    new_fp = {"a": "x2", "b": "y2"}
-    old = prev(6, {"a": "x1", "b": "y1"})
-    assert derive(last, 7, new_fp, old) == ["b"]
-
-    # mid-round regen (ledger already at the latest driver round): drift is
-    # NEVER attested, even for a query verified in that round — the edit
-    # happened after the driver ran
-    old = prev(7, {"a": "x1", "b": "y2"})
-    assert derive(last, 7, new_fp, old) == ["a"]
-
-    # carried flags: an old flag on an unverified query persists even with
-    # no new drift; it clears once a round-start regen sees a green row
-    old = prev(6, {"a": "x2", "b": "y2"}, changed=("b",))
-    assert derive(last, 7, new_fp, old) == ["b"]
-    old = prev(6, {"a": "x2", "b": "y2"}, changed=("a",))
-    assert derive(last, 7, new_fp, old) == []
-
-    # a flag on a query that left the registry is dropped
-    old = prev(6, {"a": "x2", "b": "y2"}, changed=("gone",))
-    assert derive(last, 7, new_fp, old) == []
-
-    # first migration (no FINGERPRINT on the old module): nothing flagged
-    old = types.SimpleNamespace()
-    old.GENERATED_AFTER_ROUND = 6
-    assert derive(last, 7, new_fp, old) == []
 
 
 # ---------------------------------------------------------------------------

@@ -181,6 +181,54 @@ def test_vacuum_apply_refuses_evolved_log(spark, tmp_path):
     assert sorted(os.listdir(p)) == files_before  # nothing deleted/moved
 
 
+def test_vacuum_apply_schema_guard_sees_only_spark_visible_files(spark, tmp_path):
+    """The schema guard walks the files spark.read.parquet reads: a
+    mismatched parquet under a sink's _spark_metadata/ does not block a
+    valid vacuum, while one in a visible partition directory is refused."""
+    import os
+
+    from adventureworkslakehousepoc_spark.operators.maintenance import (
+        vacuum_apply,
+    )
+
+    schema = (
+        "k bigint, v int, _change_type string, _commit_version int, "
+        "_commit_timestamp timestamp"
+    )
+    t = dt.datetime(2024, 1, 1)
+    rows = [(1, 10, "insert", 1, t), (1, 11, "update_postimage", 2, t)]
+    stray = spark.createDataFrame(
+        [(2, 2**40, "extra", "insert", 3, t)],
+        "k bigint, v bigint, note string, _change_type string, "
+        "_commit_version int, _commit_timestamp timestamp",
+    )
+
+    # 1) a streaming sink whose _spark_metadata/ holds a stray parquet
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, schema).write.parquet(src)
+    sink = str(tmp_path / "sink")
+    (
+        spark.readStream.schema(schema).parquet(src)
+        .writeStream.format("parquet")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start(sink)
+        .awaitTermination()
+    )
+    stray.write.parquet(os.path.join(sink, "_spark_metadata", "stray"))
+    stats = vacuum_apply(spark, sink, ["k"], horizon_version=2)
+    assert stats["rows_removed"] == 1
+
+    # 2) the same file in a visible partition directory is still refused
+    p = str(tmp_path / "log")
+    spark.createDataFrame(rows, schema).write.parquet(p)
+    stray.write.parquet(os.path.join(p, "gen=2"))
+    files_before = sorted(os.path.join(r, f) for r, _, fs in os.walk(p) for f in fs)
+    with pytest.raises(ValueError, match="schema"):
+        vacuum_apply(spark, p, ["k"], horizon_version=2)
+    assert sorted(os.path.join(r, f) for r, _, fs in os.walk(p) for f in fs) == files_before
+
+
 # ---------------------------------------------------------------------------
 # bounded arrow-scorer driver fetch (operators/similarity.py)
 # ---------------------------------------------------------------------------
