@@ -16,9 +16,8 @@ FINGERPRINTS = oracle_fingerprints.load()
 
 def test_every_oracle_has_a_query():
     """Every query carries an oracle (full value gate, not rows-only) and
-    every oracle a query; every oracle has a pinned fingerprint."""
+    every oracle a query."""
     assert set(ORACLES) == set(QUERIES), set(ORACLES) ^ set(QUERIES)
-    assert set(FINGERPRINTS) == set(ORACLES), set(FINGERPRINTS) ^ set(ORACLES)
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))

@@ -17,10 +17,9 @@ from adventureworkslakehousepoc_spark.plans.registry import DatasetRegistry, Pip
 
 def _stream_root():
     from adventureworkslakehousepoc_spark.streaming.runner import stream_tmp_root
-    import os as _os
 
     root = stream_tmp_root()
-    _os.makedirs(root, exist_ok=True)
+    os.makedirs(root, exist_ok=True)
     return root
 
 def test_lazy_topological_resolution(spark):
@@ -100,8 +99,6 @@ def test_medallion_run_materializes_warehouse(spark, sf_dir):
 
 def test_partitioned_write(spark, sf_dir):
     """S8 at scale: facts partitioned by date at write time (SURVEY §4.4)."""
-    import tempfile
-
     ctx = medallion_context(spark, sf_dir)
     wh = tempfile.mkdtemp(prefix="whp-", dir=_stream_root())
     out = ctx.run(wh, names=["fact_sales"], partition_by={"fact_sales": ["order_date"]})
@@ -118,8 +115,6 @@ def test_partitioned_write(spark, sf_dir):
     one = parts[0].split("=", 1)[1]
     pruned = back.filter(F.col("order_date") == one)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
-    import re
-
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "order_date" in m.group(1), (
         f"date predicate did not reach the scan as a PartitionFilter:\n{plan[:800]}"
@@ -349,6 +344,18 @@ print(seen)
         capture_output=True, text=True, check=True,
     )
     assert out.stdout.strip().splitlines()[-1] == "[]", out.stdout
+
+
+def test_ledger_fingerprints_are_current():
+    """tests/oracle_fingerprints.json pins one 16-hex-digit fingerprint per
+    registered oracle and no stale names; test_query_matches_oracle checks
+    each value against its DuckDB result."""
+    import __spark_entry__ as entry_mod
+    from tests import oracle_fingerprints
+
+    pinned, oracles = oracle_fingerprints.load(), set(entry_mod.oracle_sql())
+    assert set(pinned) == oracles, set(pinned) ^ oracles
+    assert all(re.fullmatch(r"[0-9a-f]{16}", v) for v in pinned.values()), pinned
 
 
 def test_scratch_dirs_swept_at_interpreter_exit(tmp_path):
