@@ -3649,12 +3649,12 @@ def dedup_containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     naive all-pairs join as its oracle. This row's oracle replays the
     identical bands+containment computation, so the gate is exact."""
     from ..operators.dedup import (
+        _fresh_cache,
+        _pair_overlap,
         doc_shingle_arrays,
         lsh_candidate_pairs,
         minhash_signatures,
     )
-
-    from ..operators.dedup import _fresh_cache
 
     # one-slot cache (see operators/dedup.py): the LSH containment pair
     # list is huge on duplicate-heavy corpora, so the result stays LAZY
@@ -3665,35 +3665,15 @@ def dedup_containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # silently drop the other's data.
     #
     # r16: shares the per-doc shingle-set ARRAY frame with the minhash
-    # family (one corpus shuffle); the intersection count is one
-    # array_intersect per candidate pair off two pair-keyed joins — the
-    # former shape exploded |pairs|·|A| (pair, shingle) rows through a
-    # keyed join plus a re-aggregating groupBy, plus a separate sizes
-    # groupBy over the stream (guide §2.3/§2.4).
+    # family (one corpus shuffle); the intersection counts come from the
+    # shared pair-overlap verify (two pair-keyed joins, one array
+    # intersection per candidate).
     arrs = _fresh_cache("minhash_doc_arrays", doc_shingle_arrays(_docs(spark, sf_dir)))
     pairs = lsh_candidate_pairs(
         minhash_signatures(arrs.select("doc_id", F.explode("shs").alias("sh")))
     )
-    za = arrs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shs").alias("shs_a"),
-        F.size("shs").cast("bigint").alias("n_a"),
-    )
-    zb = arrs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shs").alias("shs_b"),
-        F.size("shs").cast("bigint").alias("n_b"),
-    )
-    out = (
-        pairs.join(za, "doc_a")
-        .join(zb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("shs_a", "shs_b")).cast("bigint").alias("n_inter"),
-            "n_a",
-            "n_b",
-        )
+    return (
+        _pair_overlap(pairs, arrs, arrs)
         .select(
             "doc_a",
             "doc_b",
@@ -3710,7 +3690,6 @@ def dedup_containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("containment_b_micros") >= 700000)
         )
     )
-    return out
 
 
 _CONTAINMENT_EXACT_SQL = f"""

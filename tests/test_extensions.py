@@ -1261,6 +1261,25 @@ def test_incremental_minhash_equals_restricted_full_pass(spark, sf_dir):
     assert inc == expect and len(inc) > 0
 
 
+def test_incremental_minhash_keeps_overlapping_ids_apart(spark):
+    """A doc_id present in both the batch and the corpus names two different
+    documents: each pair end must read its own side's shingle set. With
+    corpus {1: T, 2: T} and batch {2: T}, the answer is new 2 against
+    corpus 1 and corpus 2, once each — not one row per merged set."""
+    from adventureworkslakehousepoc_spark.operators.dedup import (
+        incremental_minhash_new_duplicates,
+    )
+
+    t = " ".join(f"w{i}" for i in range(12))
+    corpus = spark.createDataFrame([(1, t), (2, t)], "doc_id bigint, text string")
+    new = spark.createDataFrame([(2, t)], "doc_id bigint, text string")
+    got = sorted(
+        (r["new_id"], r["corpus_id"], r["jaccard"])
+        for r in incremental_minhash_new_duplicates(corpus, new).collect()
+    )
+    assert got == [(2, 1, 1.0), (2, 2, 1.0)]
+
+
 def test_winsorize_equal_numerator_fractions_no_duplication(spark):
     """Fractions with equal numerators but different denominators — (1,4)
     and (1,2) — must select distinct bounds rows: matching on pct_num alone
@@ -1355,6 +1374,25 @@ def test_containment_exact_finds_quote_inclusion(spark):
     assert (1, 4) in rows and rows[(1, 4)]["n_inter"] == 8  # intra-family
     assert (2, 4) in rows  # copy inherits the rep's verdict
     assert not any(3 in p for p in rows)
+
+
+def test_containment_exact_orients_counts_with_member_ids(spark):
+    """Family expansion must swap n_a/n_b (and the micros) along with the
+    ids: the representative pair (1, 2) has the quote as doc_a, but its
+    copy 4 expands to member pair (2, 4), where the quote is doc_b."""
+    from adventureworkslakehousepoc_spark.operators.dedup import containment_prefix_pairs
+
+    quote = " ".join(f"w{i}" for i in range(10))
+    long_doc = quote + " " + " ".join(f"x{i}" for i in range(200))
+    docs = spark.createDataFrame(
+        [(1, quote), (2, long_doc), (4, quote)], "doc_id bigint, text string"
+    )
+    got = sorted(tuple(r) for r in containment_prefix_pairs(docs).collect())
+    assert got == [
+        (1, 2, 8, 8, 208, 1_000_000, 38_461),
+        (1, 4, 8, 8, 8, 1_000_000, 1_000_000),
+        (2, 4, 8, 208, 8, 38_461, 1_000_000),
+    ]
 
 
 def test_dedup_operators_cache_is_bounded(spark, sf_dir):

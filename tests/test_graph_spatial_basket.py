@@ -392,3 +392,43 @@ def test_containment_exact_equals_naive(spark, docs):
             if ca * 10 >= 7_000_000 or cb * 10 >= 7_000_000:
                 expect[(a, b)] = (inter, len(sh[a]), len(sh[b]))
     assert got == expect
+
+
+@settings(**_PSET)
+@given(
+    docs=st.lists(
+        st.lists(st.integers(0, 6), min_size=3, max_size=10),
+        min_size=1,
+        max_size=8,
+    ),
+    copies=st.lists(st.integers(0, 7), min_size=1, max_size=4),
+)
+def test_prefix_filter_jaccard_equals_naive_with_copies(spark, docs, copies):
+    """Exact-join property through the family collapse: on ANY small corpus
+    with planted exact copies (drawn docs repeated under new ids), the
+    prefix-filtered Jaccard join returns exactly the naive all-pairs
+    3-shingle Jaccard ≥ 0.5 — including the intra-family pairs, which only
+    the family expansion produces."""
+    from adventureworkslakehousepoc_spark.operators.dedup import prefix_filter_jaccard_pairs
+
+    texts = [" ".join(f"w{t}" for t in ws) for ws in docs]
+    texts += [texts[c % len(texts)] for c in copies]
+    rows = list(enumerate(texts))
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in prefix_filter_jaccard_pairs(df).collect()
+    }
+    sh = {}
+    for i, t in rows:
+        ws = t.split(" ")
+        sh[i] = {" ".join(ws[k:k + 3]) for k in range(len(ws) - 2)}
+    expect = {}
+    for a in sh:
+        for b in sh:
+            if a < b:
+                inter = len(sh[a] & sh[b])
+                j = inter / (len(sh[a]) + len(sh[b]) - inter)
+                if j >= 0.5:
+                    expect[(a, b)] = j
+    assert got == expect
