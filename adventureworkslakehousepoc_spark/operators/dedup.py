@@ -20,6 +20,11 @@ invariant:
 LSH banding is ``_band_keys``, shared by the self-join and the incremental
 join.
 
+Hamming-fingerprint core: SimHash here and the image/audio perceptual-hash
+joins in ``multimodal.py`` block on bigint fingerprints through one
+``hamming_pairs`` (banding, banded self-join, ``bit_count(xor)`` verify),
+guarded by one ``check_pigeonhole``.
+
 Cross-engine portability: hash functions are ``md5`` (bit-identical in every
 engine) and min/ordering is over the hex *string* (ASCII order), so a DuckDB
 oracle can replay the exact same signatures — the LSH candidate set is
@@ -52,6 +57,8 @@ __all__ = [
     "minhash_near_duplicates",
     "simhash_fingerprints",
     "simhash_near_duplicates",
+    "check_pigeonhole",
+    "hamming_pairs",
     "ngram_jaccard_pairs",
     "incremental_minhash_new_duplicates",
     "prefix_filter_jaccard_pairs",
@@ -598,6 +605,65 @@ def simhash_fingerprints(
     return sums.select("doc_id", fp.alias("simhash"))
 
 
+def check_pigeonhole(max_hamming: int, bands: int) -> None:
+    """Recall guard of every banded Hamming join: ``max_hamming`` differing
+    bits spread over ``bands`` disjoint bands leave at least one band
+    identical only while ``max_hamming <= bands - 1``. Past that, blocking
+    would silently drop true pairs, so the operator raises instead."""
+    if max_hamming > bands - 1:
+        raise ValueError(
+            f"max_hamming={max_hamming} breaks the pigeonhole recall guarantee"
+            f" for {bands} bands (must be <= {bands - 1})"
+        )
+
+
+def hamming_pairs(
+    fps: DataFrame,
+    bands: int,
+    band_bits: int,
+    max_hamming: int,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """Banded Hamming self-join over ``(doc_id, fp, *keys)`` bigint
+    fingerprints: band ``j`` is ``shiftright(fp, j·band_bits) & mask`` —
+    the raw bit pattern, so signed fingerprints band correctly (``div``/``%``
+    rounds negative values toward zero and mis-buckets them). Docs equal on
+    every key and on any one band are candidates, verified by exact
+    ``bit_count(xor) <= max_hamming``; with ``check_pigeonhole`` holding,
+    recall is exact. Returns ``(doc_a, doc_b, *keys, hamming)``,
+    ``doc_a < doc_b``, ``hamming`` an int.
+
+    The only shuffle is on (keys, band, band value); ``fps`` is read by both
+    join sides, so callers pass a cached or checkpointed frame."""
+    check_pigeonhole(max_hamming, bands)
+    mask = (1 << band_bits) - 1
+    band_structs = [
+        F.struct(
+            F.lit(j).alias("band"),
+            F.expr(f"shiftright(fp, {j * band_bits}) & {mask}").alias("val"),
+        )
+        for j in range(bands)
+    ]
+    banded = fps.select(
+        "doc_id", "fp", *keys, F.explode(F.array(*band_structs)).alias("b")
+    ).select("doc_id", "fp", *keys, "b.band", "b.val")
+    a, b = banded.alias("a"), banded.alias("b")
+    cond = F.col("a.doc_id") < F.col("b.doc_id")
+    for c in (*keys, "band", "val"):
+        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    return (
+        a.join(b, cond)
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            *[F.col(f"a.{k}").alias(k) for k in keys],
+            F.expr("bit_count(a.fp ^ b.fp)").alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
+    )
+
+
 def simhash_near_duplicates(
     docs: DataFrame,
     text_col: str = "text",
@@ -608,60 +674,24 @@ def simhash_near_duplicates(
 ) -> DataFrame:
     """SimHash near-dup via banded blocking: the 64-bit fingerprint splits
     into ``bands`` 16-bit bands; docs sharing any band value are candidates,
-    verified with ``bit_count(xor) ≤ max_hamming``.
+    verified with ``bit_count(xor) ≤ max_hamming`` (``hamming_pairs``).
 
-    Pigeonhole soundness: hamming ≤ bands−1 distributes ≤ bands−1 differing
-    bits over ``bands`` bands, so at least one band matches exactly — recall
-    is 1 for ``max_hamming ≤ bands−1`` (the defaults: 3 and 4). Scale: each
-    band has 2^16 values, so candidate buckets hold ~|corpus|/65536 rows (vs
-    256 buckets in a 16-bit/2-half geometry, which goes quadratic); the only
-    shuffle is on (band, 16-bit value)."""
-    if max_hamming > bands - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs at least {max_hamming + 1} bands "
-            f"for exact-recall blocking (got {bands})"
-        )
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
-    # persist: the banded self-join reads fps from both sides — without this
+    Pigeonhole soundness: recall is 1 for ``max_hamming ≤ bands−1`` (the
+    defaults: 3 and 4). Scale: each band has 2^16 values, so candidate
+    buckets hold ~|corpus|/65536 rows (vs 256 buckets in a 16-bit/2-half
+    geometry, which goes quadratic); the only shuffle is on (band, 16-bit
+    value)."""
+    check_pigeonhole(max_hamming, bands)
+    # cached: the banded self-join reads fps from both sides — without this
     # the whole fingerprint pipeline (explode + two aggregates) runs twice.
     # Tiny frame: one (bigint, bigint) row per doc.
     fps = _fresh_cache(
         "simhash_fps", simhash_fingerprints(docs, text_col, id_col, bits)
     )
-    banded = fps.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("part"),
-                        F.expr(f"shiftright(simhash, {j * band_bits}) & {mask}").alias("val"),
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("h"),
-    ).select("doc_id", "simhash", F.col("h.part").alias("part"), F.col("h.val").alias("val"))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    out = (
-        a.join(
-            b,
-            (F.col("a.part") == F.col("b.part"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr("bit_count(a.simhash ^ b.simhash)").alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+    return hamming_pairs(
+        fps.select("doc_id", F.col("simhash").alias("fp")),
+        bands, bits // bands, max_hamming,
     )
-    return out
 
 
 def ngram_jaccard_pairs(

@@ -14,6 +14,14 @@ Scale posture: payloads never pass through the driver; ``mapInPandas``
 streams Arrow batches per partition, and metadata extraction before decode
 lets partition pruning / predicate pushdown skip undecodable or oversized
 payloads at the scan.
+
+Each codec parses its header in one place, on the payload's hex:
+``_ppm_header`` (P6), ``_y4m_header`` (YUV4MPEG2), ``_wav_pcm_ok`` and
+``_le_at`` (canonical PCM WAV); ``_digits`` decodes an ASCII digit run.
+The image near-dup joins decode their content-derived P6 files through
+``_content_ppm_gray``; pHash and video sign DCT coefficients through
+``_sign_fp``. Every Hamming near-dup join here (aHash, pHash, audio) is
+``dedup.hamming_pairs`` behind ``dedup.check_pigeonhole``.
 """
 
 from __future__ import annotations
@@ -22,6 +30,9 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..plans.audit import eager_checkpoint
+from .dedup import check_pigeonhole, hamming_pairs
 
 __all__ = [
     "attach_binary_payload",
@@ -167,6 +178,82 @@ def sample_frames(payloads: DataFrame, every_nth: int = 10) -> DataFrame:
     return videos.mapInPandas(do_sample, schema)
 
 
+def _digits(run):
+    """Decimal value of an ASCII digit run matched in hex space (``3X`` per
+    digit)."""
+    return F.regexp_replace(run, "3(.)", "$1").cast("int")
+
+
+def _p6_payload(text_col: str, w_sql: str, h_sql: str):
+    """Canonical P6 file: header ``P6\\n<w> <h>\\n255\\n`` + w·h·3 raw RGB
+    bytes, the doc's md5 hex repeated and unhexed. ``w_sql``/``h_sql`` are
+    int SQL expressions shared by the header and the pixel length."""
+    header = F.concat(
+        F.lit("P6\n"), F.expr(w_sql).cast("string"), F.lit(" "),
+        F.expr(h_sql).cast("string"), F.lit("\n255\n"),
+    )
+    # 28 repeats x 32 hex chars = 896 >= 2 * max n_bytes (288)
+    return F.concat(
+        F.encode(header, "UTF-8"),
+        F.unhex(
+            F.expr(
+                f"substring(repeat(md5(encode({text_col}, 'UTF-8')), 28), 1, "
+                f"2 * ({w_sql}) * ({h_sql}) * 3)"
+            )
+        ),
+    )
+
+
+def _ppm_header(hx):
+    """Canonical P6 header of a hex payload, recognized and measured in hex
+    space (``P6\\n`` = ``50360A``, ASCII digits = ``3X`` pairs): ``(width,
+    height, maxval, hdr_hex_len)``; pixel bytes start at hex char
+    ``hdr_hex_len + 1``."""
+    pat = "^50360A((?:3[0-9])+)20((?:3[0-9])+)0A((?:3[0-9])+)0A"
+    runs = [F.regexp_extract(hx, pat, g) for g in (1, 2, 3)]
+    hdr_hex_len = (
+        F.lit(6) + F.length(runs[0]) + F.lit(2) + F.length(runs[1]) + F.lit(2)
+        + F.length(runs[2]) + F.lit(2)
+    )
+    return (*[_digits(r) for r in runs], hdr_hex_len)
+
+
+def _y4m_header(hx):
+    """YUV4MPEG2 stream header of a hex payload (C444, canonical parameter
+    order): ``(width, height, n_frames, hdr_hex, stride_hex)`` — header
+    length and per-frame stride ('FRAME\\n' marker + three w·h planes) in
+    hex chars."""
+    # 'YUV4MPEG2 W' = 595556344D504547322057; then digits (3X)+, ' H' =
+    # 2048, digits, ' F25:1 Ip A1:1 C444\n' fixed tail
+    pat = "^595556344D504547322057((?:3[0-9])+)2048((?:3[0-9])+)20"
+    wX, hX = F.regexp_extract(hx, pat, 1), F.regexp_extract(hx, pat, 2)
+    width, height = _digits(wX), _digits(hX)
+    # fixed pieces: 22 for 'YUV4MPEG2 W', 4 for ' H', 40 for the tail
+    hdr_hex = F.lit(22) + F.length(wX) + F.lit(4) + F.length(hX) + F.lit(40)
+    stride_hex = F.lit(12) + width * height * 6
+    n_frames = ((F.length(hx) - hdr_hex) / stride_hex).cast("int")
+    return width, height, n_frames, hdr_hex, stride_hex
+
+
+def _le_at(hx, off: int, n: int):
+    """Little-endian unsigned integer of ``n`` bytes at byte ``off`` of a
+    hex payload."""
+    parts = [F.substring(hx, 2 * (off + i) + 1, 2) for i in reversed(range(n))]
+    return F.conv(F.concat(*parts), 16, 10).cast("bigint")
+
+
+def _wav_pcm_ok(hx):
+    """Canonical 44-byte PCM WAV header of a hex payload: RIFF/WAVE magic,
+    'fmt ' and 'data' chunk ids at their fixed offsets, format tag 1."""
+    return (
+        (F.substring(hx, 1, 8) == "52494646")
+        & (F.substring(hx, 17, 8) == "57415645")
+        & (F.substring(hx, 25, 8) == "666D7420")
+        & (F.substring(hx, 73, 8) == "64617461")
+        & (_le_at(hx, 20, 2) == 1)
+    )
+
+
 def ppm_p6_encode(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Build REAL binary PPM (P6) image payloads — valid files any netpbm
     tool opens — entirely with codegen'd expressions (no Python row loop).
@@ -175,21 +262,8 @@ def ppm_p6_encode(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     pixel stream is the doc's md5 hex repeated and unhexed — deterministic
     and oracle-replayable. Output schema matches ``attach_binary_payload``:
     (doc_id, payload binary, media_type, byte_len)."""
-    w = (F.lit(4) + (F.col(id_col) % 5)).cast("int")
-    h = (F.lit(3) + (F.col(id_col) % 4)).cast("int")
-    header = F.concat(
-        F.lit("P6\n"), w.cast("string"), F.lit(" "), h.cast("string"), F.lit("\n255\n")
-    )
-    # 28 repeats x 32 hex chars = 896 >= 2 * max n_bytes (288); substring
-    # takes its length from the same (w, h) expressions as the header
-    payload = F.concat(
-        F.encode(header, "UTF-8"),
-        F.unhex(
-            F.expr(
-                f"substring(repeat(md5(encode({text_col}, 'UTF-8')), 28), 1, "
-                f"2 * (4 + {id_col} % 5) * (3 + {id_col} % 4) * 3)"
-            )
-        ),
+    payload = _p6_payload(
+        text_col, f"cast(4 + {id_col} % 5 as int)", f"cast(3 + {id_col} % 4 as int)"
     )
     return docs.select(
         F.col(id_col).alias("doc_id"),
@@ -221,16 +295,7 @@ def ppm_p6_decode(payloads: DataFrame, payload_col: str = "payload") -> DataFram
     in payload size; channel folds are ``aggregate`` over ``sequence``
     ranges (codegen'd, no shuffle at all until the caller aggregates)."""
     hx = F.hex(F.col(payload_col))
-    hdr_pat = "^50360A((?:3[0-9])+)20((?:3[0-9])+)0A((?:3[0-9])+)0A"
-    wheX = F.regexp_extract(hx, hdr_pat, 1)
-    hheX = F.regexp_extract(hx, hdr_pat, 2)
-    mheX = F.regexp_extract(hx, hdr_pat, 3)
-    dig = lambda c: F.regexp_replace(c, "3(.)", "$1").cast("int")  # noqa: E731
-    width, height, maxval = dig(wheX), dig(hheX), dig(mheX)
-    hdr_hex_len = (
-        F.lit(6) + F.length(wheX) + F.lit(2) + F.length(hheX) + F.lit(2)
-        + F.length(mheX) + F.lit(2)
-    )
+    width, height, maxval, hdr_hex_len = _ppm_header(hx)
     n_pixels = (width * height).cast("bigint")
     base = payloads.select(
         "doc_id",
@@ -364,30 +429,14 @@ def wav_pcm_decode(
     payload build a second time AND paid a doc-keyed shuffle for
     row-local data (guide §2.4)."""
     hx = F.hex(F.col(payload_col))
-
-    def le_at(byte_off: int, n_bytes: int):
-        """Parse an LE integer at a fixed byte offset from the hex."""
-        parts = [
-            F.substring(hx, 2 * (byte_off + i) + 1, 2)
-            for i in reversed(range(n_bytes))
-        ]
-        return F.conv(F.concat(*parts), 16, 10).cast("bigint")
-
-    ok = (
-        (F.substring(hx, 1, 8) == "52494646")
-        & (F.substring(hx, 17, 8) == "57415645")
-        & (F.substring(hx, 25, 8) == "666D7420")
-        & (F.substring(hx, 73, 8) == "64617461")
-        & (le_at(20, 2) == 1)  # PCM
-    )
-    base = payloads.filter(ok).select(
+    base = payloads.filter(_wav_pcm_ok(hx)).select(
         "doc_id",
         F.col(payload_col).alias("p"),
         hx.alias("hx"),
-        le_at(24, 4).alias("sample_rate"),
-        le_at(22, 2).cast("int").alias("n_channels"),
-        le_at(34, 2).cast("int").alias("bits_per_sample"),
-        (le_at(40, 4) / 2).cast("bigint").alias("n_samples"),
+        _le_at(hx, 24, 4).alias("sample_rate"),
+        _le_at(hx, 22, 2).cast("int").alias("n_channels"),
+        _le_at(hx, 34, 2).cast("int").alias("bits_per_sample"),
+        (_le_at(hx, 40, 4) / 2).cast("bigint").alias("n_samples"),
         *passthrough,
     )
     # 16-bit signed LE sample i: bytes 44+2i (LSB), 45+2i (MSB) → hex
@@ -459,7 +508,6 @@ def y4m_encode(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     frames ∈ 2..5); frame bytes are the doc's md5 hex stream unhexed.
     Output schema matches ``attach_binary_payload``."""
     did = F.col(id_col)
-    w = F.lit(4)
     h = (F.lit(2) + did % 3).cast("int")
     n_frames = (F.lit(2) + did % 4).cast("int")
     header = F.concat(
@@ -467,7 +515,6 @@ def y4m_encode(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     )
     # frame payload hex: 3·w·h bytes per frame → 6·w·h hex chars; max
     # 5 frames × 4×4 → 480 chars ≤ 15 × 32 = 480
-    frame_hex_len = (w * h * F.lit(6)).cast("int")
     # the repeated-md5 hex stream is let-bound (one-element transform) so
     # it folds ONCE per row — the collapsed form re-hashed and re-repeated
     # it per frame (r12 loop-invariant HOF gate)
@@ -486,8 +533,7 @@ def y4m_encode(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
         payload.alias("payload"),
         F.lit("video/x-yuv4mpeg").alias("media_type"),
         F.length(payload).cast("bigint").alias("byte_len"),
-        F.lit(frame_hex_len).alias("_fhl"),
-    ).drop("_fhl")
+    )
 
 
 def y4m_decode(
@@ -512,21 +558,7 @@ def y4m_decode(
     fan-out); per-row work is linear in frame size; nothing shuffles
     until the caller aggregates."""
     hx = F.hex(F.col(payload_col))
-    # 'YUV4MPEG2 W' = 595556344D504547322057; then digits (3X)+, ' H' =
-    # 2048, digits, ' F25:1 Ip A1:1 C444\n' fixed tail
-    hdr_pat = "^595556344D504547322057((?:3[0-9])+)2048((?:3[0-9])+)20"
-    wX = F.regexp_extract(hx, hdr_pat, 1)
-    hX = F.regexp_extract(hx, hdr_pat, 2)
-    dig = lambda c: F.regexp_replace(c, "3(.)", "$1").cast("int")  # noqa: E731
-    width, height = dig(wX), dig(hX)
-    # header length in hex chars: fixed pieces (22 for 'YUV4MPEG2 W',
-    # 4 for ' H', 40 for ' F25:1 Ip A1:1 C444\n') + the digit runs
-    hdr_hex = F.lit(22) + F.length(wX) + F.lit(4) + F.length(hX) + F.lit(40)
-    frame_hex = width * height * 6  # 3 planes of w·h bytes
-    stride_hex = F.lit(12) + frame_hex  # 'FRAME\n' marker + frame bytes
-    n_frames = (
-        (F.length(hx) - hdr_hex) / stride_hex
-    ).cast("int")
+    width, height, n_frames, hdr_hex, stride_hex = _y4m_header(hx)
     base = payloads.select(
         "doc_id",
         hx.alias("hx"),
@@ -535,7 +567,6 @@ def y4m_decode(
         n_frames.alias("n_frames"),
         hdr_hex.alias("hh"),
         stride_hex.alias("sh"),
-        frame_hex.alias("fh"),
         *passthrough,
     ).filter(F.col("width").isNotNull() & (F.col("n_frames") >= 1))
     per_frame = base.select(
@@ -545,7 +576,6 @@ def y4m_decode(
         "n_frames",
         "hh",
         "sh",
-        "fh",
         "hx",
         *passthrough,
         F.explode(F.expr("sequence(0, n_frames - 1)")).alias("frame_idx"),
@@ -578,6 +608,50 @@ def y4m_decode(
     )
 
 
+def _content_ppm_gray(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Content-derived P6 images decoded to gray planes: ``(doc_id, w, h,
+    gs)``, ``gs[i]`` the mean of pixel i's RGB bytes. Dims derive from the
+    image digest, not the row id — an image's shape is a property of its
+    bytes, and identical content must yield identical files for dedup to
+    see it; the payload is ``ppm_p6_encode``'s canonical P6 layout."""
+    b0 = f"cast(conv(substring(md5({text_col}), 1, 2), 16, 10) as int)"
+    payload = _p6_payload(text_col, f"4 + {b0} % 5", f"3 + {b0} div 5 % 4")
+    enc = docs.select(F.col(id_col).alias("doc_id"), payload.alias("payload"))
+    hx = F.hex(F.col("payload"))
+    width, height, _, hdr_hex_len = _ppm_header(hx)
+    base = enc.select(
+        "doc_id",
+        width.alias("w"),
+        height.alias("h"),
+        hx.alias("hx"),
+        hdr_hex_len.alias("hh"),
+    )
+    byte_at = (
+        "cast(conv(substring(hx, hh + 2 * ({o}) + 1, 2), 16, 10) as bigint)"
+    )
+    gray_i = (
+        "(" + byte_at.format(o="3 * i") + " + " + byte_at.format(o="3 * i + 1")
+        + " + " + byte_at.format(o="3 * i + 2") + ") div 3"
+    )
+    return base.select(
+        "doc_id",
+        "w",
+        "h",
+        F.expr(f"transform(sequence(0, w * h - 1), i -> {gray_i})").alias("gs"),
+    )
+
+
+def _sign_fp(coefs: list[str]):
+    """DCT sign fingerprint: bit k is set iff AC coefficient ``coefs[k]``
+    is positive."""
+    return F.expr(
+        " + ".join(
+            f"if(({c}) > 0, cast({1 << k} as bigint), cast(0 as bigint))"
+            for k, c in enumerate(coefs)
+        )
+    )
+
+
 def image_ahash_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
@@ -605,64 +679,8 @@ def image_ahash_pairs(
     collision lists, never the corpus square. Fingerprints are 8 bytes —
     the index this builds is what image dedup ships to later snapshots.
     """
-    if max_hamming > bands - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} breaks the pigeonhole recall"
-            f" guarantee for {bands} bands (must be ≤ {bands - 1})"
-        )
-    # CONTENT-derived encode (dims from the image digest, not the row id —
-    # an image's shape is a property of its bytes, and identical content
-    # must yield identical files for dedup to see it): same canonical P6
-    # layout as ppm_p6_encode, genuine netpbm files
-    b0 = F.conv(F.substring(F.md5(F.col(text_col)), 1, 2), 16, 10).cast("int")
-    w = (F.lit(4) + b0 % 5).cast("int")
-    h = (F.lit(3) + (b0 / 5).cast("int") % 4).cast("int")
-    header = F.concat(
-        F.lit("P6\n"), w.cast("string"), F.lit(" "), h.cast("string"), F.lit("\n255\n")
-    )
-    payload = F.concat(
-        F.encode(header, "UTF-8"),
-        F.unhex(
-            F.expr(
-                f"substring(repeat(md5(encode({text_col}, 'UTF-8')), 28), 1, "
-                f"2 * (4 + cast(conv(substring(md5({text_col}), 1, 2), 16, 10) as int) % 5)"
-                f" * (3 + cast(conv(substring(md5({text_col}), 1, 2), 16, 10) as int) div 5 % 4) * 3)"
-            )
-        ),
-    )
-    enc = docs.select(F.col(id_col).alias("doc_id"), payload.alias("payload"))
-    hx = F.hex(F.col("payload"))
-    hdr_pat = "^50360A((?:3[0-9])+)20((?:3[0-9])+)0A((?:3[0-9])+)0A"
-    wheX = F.regexp_extract(hx, hdr_pat, 1)
-    hheX = F.regexp_extract(hx, hdr_pat, 2)
-    mheX = F.regexp_extract(hx, hdr_pat, 3)
-    dig = lambda c: F.regexp_replace(c, "3(.)", "$1").cast("int")  # noqa: E731
-    hdr_hex_len = (
-        F.lit(6) + F.length(wheX) + F.lit(2) + F.length(hheX) + F.lit(2)
-        + F.length(mheX) + F.lit(2)
-    )
-    base = enc.select(
-        "doc_id",
-        dig(wheX).alias("w"),
-        dig(hheX).alias("h"),
-        hx.alias("hx"),
-        hdr_hex_len.alias("hh"),
-    )
-    byte_at = (
-        "cast(conv(substring(hx, hh + 2 * ({o}) + 1, 2), 16, 10) as bigint)"
-    )
-    gray_i = (
-        "(" + byte_at.format(o="3 * i") + " + " + byte_at.format(o="3 * i + 1")
-        + " + " + byte_at.format(o="3 * i + 2") + ") div 3"
-    )
-    grays = base.select(
-        "doc_id",
-        "w",
-        "h",
-        F.expr(
-            f"transform(sequence(0, w * h - 1), i -> {gray_i})"
-        ).alias("gs"),
-    ).select(
+    check_pigeonhole(max_hamming, bands)
+    grays = _content_ppm_gray(docs, text_col, id_col).select(
         "doc_id",
         "w",
         "h",
@@ -676,8 +694,6 @@ def image_ahash_pairs(
     # whole hex→gray→mean→bits chain re-inlines into every band row and
     # BOTH join sides (measured 30× slower); this is also the "index this
     # builds" of the docstring — fingerprints persist, payloads don't
-    from ..plans.audit import eager_checkpoint
-
     fp = eager_checkpoint(
         grays.select(
             "doc_id",
@@ -691,46 +707,9 @@ def image_ahash_pairs(
         ),
         "image_ahash_fingerprints",
     )
-    banded = fp.select(
-        "doc_id",
-        "w",
-        "h",
-        "fp",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}),"
-                " j -> struct(j AS j, (fp div shiftleft(cast(1 as bigint),"
-                " j * 12)) % 4096 AS b))"
-            )
-        ).alias("bb"),
-    ).select("doc_id", "w", "h", "fp", F.col("bb.j").alias("j"), F.col("bb.b").alias("b"))
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.w") == F.col("b.w"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.j") == F.col("b.j"))
-            & (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.w").alias("width"),
-            F.col("a.h").alias("height"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.fp").alias("fp_b"),
-        )
-        .distinct()
+    return hamming_pairs(fp, bands, 12, max_hamming, keys=("w", "h")).select(
+        "doc_a", "doc_b", F.col("w").alias("width"), F.col("h").alias("height"), "hamming"
     )
-    return cands.select(
-        "doc_a",
-        "doc_b",
-        "width",
-        "height",
-        F.expr("bit_count(fp_a ^ fp_b)").cast("int").alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 # integer micro-fixed-point DCT basis: cos(pi*k/8) for k = 0..15 (the
@@ -832,54 +811,7 @@ def image_phash_pairs(
     candidate stream into 32 lists — fine at 10^5 images, quadratic
     grief at 10^9).
     """
-    if max_hamming > bands - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} breaks the pigeonhole recall"
-            f" guarantee for {bands} bands (must be <= {bands - 1})"
-        )
-    # same CONTENT-derived encode as image_ahash_pairs: dims from the
-    # image digest, canonical P6 payload, genuine netpbm files
-    b0 = F.conv(F.substring(F.md5(F.col(text_col)), 1, 2), 16, 10).cast("int")
-    w = (F.lit(4) + b0 % 5).cast("int")
-    h = (F.lit(3) + (b0 / 5).cast("int") % 4).cast("int")
-    header = F.concat(
-        F.lit("P6\n"), w.cast("string"), F.lit(" "), h.cast("string"), F.lit("\n255\n")
-    )
-    payload = F.concat(
-        F.encode(header, "UTF-8"),
-        F.unhex(
-            F.expr(
-                f"substring(repeat(md5(encode({text_col}, 'UTF-8')), 28), 1, "
-                f"2 * (4 + cast(conv(substring(md5({text_col}), 1, 2), 16, 10) as int) % 5)"
-                f" * (3 + cast(conv(substring(md5({text_col}), 1, 2), 16, 10) as int) div 5 % 4) * 3)"
-            )
-        ),
-    )
-    enc = docs.select(F.col(id_col).alias("doc_id"), payload.alias("payload"))
-    hx = F.hex(F.col("payload"))
-    hdr_pat = "^50360A((?:3[0-9])+)20((?:3[0-9])+)0A((?:3[0-9])+)0A"
-    wheX = F.regexp_extract(hx, hdr_pat, 1)
-    hheX = F.regexp_extract(hx, hdr_pat, 2)
-    mheX = F.regexp_extract(hx, hdr_pat, 3)
-    dig = lambda c: F.regexp_replace(c, "3(.)", "$1").cast("int")  # noqa: E731
-    hdr_hex_len = (
-        F.lit(6) + F.length(wheX) + F.lit(2) + F.length(hheX) + F.lit(2)
-        + F.length(mheX) + F.lit(2)
-    )
-    base = enc.select(
-        "doc_id",
-        dig(wheX).alias("w"),
-        dig(hheX).alias("h"),
-        hx.alias("hx"),
-        hdr_hex_len.alias("hh"),
-    )
-    byte_at = (
-        "cast(conv(substring(hx, hh + 2 * ({o}) + 1, 2), 16, 10) as bigint)"
-    )
-    gray_i = (
-        "(" + byte_at.format(o="3 * i") + " + " + byte_at.format(o="3 * i + 1")
-        + " + " + byte_at.format(o="3 * i + 2") + ") div 3"
-    )
+    check_pigeonhole(max_hamming, bands)
     # THREE MATERIALIZED STAGES (gray plane -> row DCT -> fingerprint),
     # each a flat literal-weight projection over the PREVIOUS stage's
     # stored array. The staging is load-bearing, not stylistic: with one
@@ -891,80 +823,32 @@ def image_phash_pairs(
     # per-image array (<=0.5 KB), the natural index-build artifacts.
     # The nearest-neighbor resample (cell (u, v) reads source pixel
     # ((u*w) div grid, (v*h) div grid) — defined for every w, h >= 1)
-    # is folded into the row-DCT index arithmetic.
-    ct = {4: DCT_COS_MICROS, 8: DCT16_COS_MICROS}[grid]
-    period = 4 * grid
-    rd_terms = []
-    for pcell in range(grid * grid):
-        u, y = pcell % grid, pcell // grid
-        terms = [
+    # is folded into the row-DCT element access.
+    def elem(name: str, i: int) -> str:
+        if name == "rd":
+            return f"element_at(rd, {i})"
+        y, x = divmod(i - 1, grid)
+        return (
             f"element_at(gs, cast(({y} * h div {grid}) * w"
             f" + ({x} * w div {grid}) + 1 as int))"
-            f" * cast({ct[((2 * x + 1) * u) % period]} as bigint)"
-            for x in range(grid)
-            if ct[((2 * x + 1) * u) % period]
-        ]
-        rd_terms.append(" + ".join(terms) if terms else "cast(0 as bigint)")
-    _, coefs = dct_sign_fp_terms(grid, lambda n, i: f"element_at({n}, {i})")
-    fp_expr = " + ".join(
-        f"if(({c}) > 0, cast({1 << k} as bigint), cast(0 as bigint))"
-        for k, c in enumerate(coefs)
-    )
-    from ..plans.audit import eager_checkpoint
+        )
 
+    rowdct, coefs = dct_sign_fp_terms(grid, elem)
     gs_df = eager_checkpoint(
-        base.select(
-            "doc_id",
-            "w",
-            "h",
-            F.expr(f"transform(sequence(0, w * h - 1), i -> {gray_i})").alias("gs"),
-        ),
-        "image_phash_gray",
+        _content_ppm_gray(docs, text_col, id_col), "image_phash_gray"
     )
     rd_df = eager_checkpoint(
         gs_df.select(
-            "doc_id", F.expr("array(" + ", ".join(rd_terms) + ")").alias("rd")
+            "doc_id", F.expr("array(" + ", ".join(rowdct) + ")").alias("rd")
         ),
         "image_phash_rowdct",
     )
     fp = eager_checkpoint(
-        rd_df.select("doc_id", F.expr(fp_expr).alias("fp")),
+        rd_df.select("doc_id", _sign_fp(coefs).alias("fp")),
         "image_phash_fingerprints",
     )
-    n_bits = grid * grid - 1
-    bpb = -(-n_bits // bands)  # ceil: every bit lands in exactly one band
-    banded = fp.select(
-        "doc_id",
-        "fp",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}),"
-                " j -> struct(j AS j, (fp div shiftleft(cast(1 as bigint),"
-                f" j * {bpb})) % {1 << bpb} AS b))"
-            )
-        ).alias("bb"),
-    ).select("doc_id", "fp", F.col("bb.j").alias("j"), F.col("bb.b").alias("b"))
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.j") == F.col("b.j"))
-            & (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.fp").alias("fp_b"),
-        )
-        .distinct()
-    )
-    return cands.select(
-        "doc_a",
-        "doc_b",
-        F.expr("bit_count(fp_a ^ fp_b)").cast("int").alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
+    # ceil: every one of the grid**2 - 1 bits lands in exactly one band
+    return hamming_pairs(fp, bands, -(-(grid * grid - 1) // bands), max_hamming)
 
 
 def crossmodal_pair_audit(
@@ -1127,33 +1011,14 @@ def audio_fingerprint_pairs(
     it per bit). Per-row work is linear in payload size; the bucket
     join streams band collision lists (2^16 buckets per band at the
     defaults), never the corpus square."""
+    check_pigeonhole(max_hamming, bands)
     n_bits = 4 * windows - 1
-    if max_hamming > bands - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} breaks the pigeonhole recall"
-            f" guarantee for {bands} bands (must be <= {bands - 1})"
-        )
-    from ..plans.audit import eager_checkpoint
-
     enc = wav_pcm_encode(docs, text_col=text_col, id_col=id_col)
     hx = F.hex(F.col("payload"))
-
-    def le_at(byte_off: int, n_bytes: int):
-        parts = [
-            F.substring(hx, 2 * (byte_off + i) + 1, 2)
-            for i in reversed(range(n_bytes))
-        ]
-        return F.conv(F.concat(*parts), 16, 10).cast("bigint")
-
-    ok = (
-        (F.substring(hx, 1, 8) == "52494646")
-        & (F.substring(hx, 17, 8) == "57415645")
-        & (le_at(20, 2) == 1)
-    )
-    base = enc.filter(ok).select(
+    base = enc.filter(_wav_pcm_ok(hx)).select(
         "doc_id",
         hx.alias("hx"),
-        (le_at(40, 4) / 2).cast("int").alias("n"),
+        (_le_at(hx, 40, 4) / 2).cast("int").alias("n"),
     )
     # stage 1: per-window integer band features folded DIRECTLY from the
     # hex — no decoded-sample array is ever materialized. The windows
@@ -1221,39 +1086,7 @@ def audio_fingerprint_pairs(
         ),
         "audio_fp_fingerprints",
     )
-    bpb = -(-n_bits // bands)
-    banded = fp.select(
-        "doc_id",
-        "fp",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}),"
-                " j -> struct(j AS j, (fp div shiftleft(cast(1 as bigint),"
-                f" j * {bpb})) % {1 << bpb} AS b))"
-            )
-        ).alias("bb"),
-    ).select("doc_id", "fp", F.col("bb.j").alias("j"), F.col("bb.b").alias("b"))
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.j") == F.col("b.j"))
-            & (F.col("a.b") == F.col("b.b"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.fp").alias("fp_b"),
-        )
-        .distinct()
-    )
-    return cands.select(
-        "doc_a",
-        "doc_b",
-        F.expr("bit_count(fp_a ^ fp_b)").cast("int").alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
+    return hamming_pairs(fp, bands, -(-n_bits // bands), max_hamming)
 
 
 def video_frame_fingerprints(
@@ -1274,19 +1107,9 @@ def video_frame_fingerprints(
     CollapseProject discipline; ALL frames' cells project in one nested
     transform over the let-bound hex BEFORE the frame fan-out, so payload
     bytes never copy into per-frame rows."""
-    from ..plans.audit import eager_checkpoint
-
     enc = y4m_encode(docs, text_col=text_col, id_col=id_col)
     hx = F.hex(F.col("payload"))
-    hdr_pat = "^595556344D504547322057((?:3[0-9])+)2048((?:3[0-9])+)20"
-    wX = F.regexp_extract(hx, hdr_pat, 1)
-    hX = F.regexp_extract(hx, hdr_pat, 2)
-    dig = lambda c: F.regexp_replace(c, "3(.)", "$1").cast("int")  # noqa: E731
-    hdr_hex = F.lit(22) + F.length(wX) + F.lit(4) + F.length(hX) + F.lit(40)
-    width, height = dig(wX), dig(hX)
-    frame_hex = width * height * 6
-    stride_hex = F.lit(12) + frame_hex
-    n_frames = ((F.length(hx) - hdr_hex) / stride_hex).cast("int")
+    width, height, n_frames, hdr_hex, stride_hex = _y4m_header(hx)
     base = enc.select(
         "doc_id",
         hx.alias("hx"),
@@ -1337,15 +1160,10 @@ def video_frame_fingerprints(
         ),
         "video_phash_rowdct",
     )
-    fp_expr = " + ".join(
-        f"if(({c}) > 0, cast({1 << k} as bigint), cast(0 as bigint))"
-        for k, c in enumerate(coefs)
-    )
-    fp = eager_checkpoint(
-        rd_df.select("doc_id", "nf", "fi", F.expr(fp_expr).alias("fp")),
+    return eager_checkpoint(
+        rd_df.select("doc_id", "nf", "fi", _sign_fp(coefs).alias("fp")),
         "video_phash_frame_fps",
     )
-    return fp
 
 
 def video_phash_pairs(
