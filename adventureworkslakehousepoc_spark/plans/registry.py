@@ -302,8 +302,20 @@ class PipelineContext:
         (S8 managed-table sink). ``partition_by`` maps dataset name → partition
         columns — facts partitioned by date at write time is the reference's
         physical-layout posture (SURVEY.md §4.4) and what enables partition
-        pruning at 100 TB. Returns {name: path}. Streaming datasets must be
-        run via ``streaming.runner`` instead (they need checkpoints)."""
+        pruning at 100 TB. Every key of ``partition_by`` must be a registered
+        dataset (``ValueError`` otherwise). Returns {name: path}. Streaming
+        datasets must be run via ``streaming.runner`` instead (they need
+        checkpoints).
+
+        Layout guarantee for a partitioned dataset: it is hash-distributed on
+        its partition columns into ``spark.sparkContext.defaultParallelism``
+        tasks before the write, so every core writes, and each partition
+        value lands in exactly one task and therefore in exactly one file.
+        The count is explicit because AQE would coalesce a small shuffle
+        back into one writer."""
+        unknown = [n for n in partition_by or {} if n not in self.registry]
+        if unknown:
+            raise ValueError(f"partition_by names unregistered datasets: {unknown}")
         out: dict[str, str] = {}
         for name in names or self.registry.names():
             df = self.dataframe(name)
@@ -314,7 +326,8 @@ class PipelineContext:
             writer = df.write.mode(mode)
             cols = (partition_by or {}).get(name)
             if cols:
-                writer = writer.partitionBy(*cols)
+                parallelism = self.spark.sparkContext.defaultParallelism
+                writer = df.repartition(parallelism, *cols).write.mode(mode).partitionBy(*cols)
             writer.parquet(path)
             out[name] = path
         return out

@@ -124,6 +124,75 @@ def test_partitioned_write(spark, sf_dir):
     assert len(pf) == 2 and "order_date" in pf[1].split("]", 1)[0], plan[:1200]
 
 
+def _days_ctx(spark, rows):
+    """One dataset ``days`` of (id, day): ``rows`` ids spread round-robin over
+    4 input partitions, day = 2024-01-01 + id % 50, NULL when id % 50 == 49."""
+    dp = DatasetRegistry()
+
+    @dp.table(name="days")
+    def days(ctx):
+        step = (F.col("id") % 50).cast("int")
+        day = F.when(step != 49, F.date_add(F.lit("2024-01-01").cast("date"), step))
+        return ctx.spark.range(rows).repartition(4).select("id", day.alias("day"))
+
+    return PipelineContext(dp, spark)
+
+
+def _last_write_plan(spark, path):
+    """Physical plan of the latest SQL execution that wrote ``path``, as the
+    SQL status store recorded it (searched newest first: a long session
+    holds hundreds of executions)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(execs.size())):
+        plan = execs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in plan and path in plan:
+            return plan
+    return None
+
+
+def test_run_rejects_unregistered_partition_by_name(spark):
+    ctx = _days_ctx(spark, 10)
+    wh = tempfile.mkdtemp(prefix="whu-", dir=_stream_root())
+    with pytest.raises(ValueError, match="'dys'"):
+        ctx.run(wh, partition_by={"dys": ["day"]})
+    assert os.listdir(wh) == []
+
+
+def test_partitioned_run_writes_one_file_per_partition_value(spark):
+    """A dataset arriving in 4 input partitions is hash-distributed on its
+    partition column before the write: each day directory holds exactly one
+    file (the input layout alone would give up to 4) and a NULL day is one
+    ``__HIVE_DEFAULT_PARTITION__`` file that reads back as NULL."""
+    ctx = _days_ctx(spark, 600)
+    wh = tempfile.mkdtemp(prefix="whl-", dir=_stream_root())
+    path = ctx.run(wh, partition_by={"days": ["day"]})["days"]
+    dirs = [d for d in os.listdir(path) if d.startswith("day=")]
+    assert len(dirs) == 50
+    assert "day=__HIVE_DEFAULT_PARTITION__" in dirs
+    for d in dirs:
+        files = os.listdir(os.path.join(path, d))
+        assert len([f for f in files if f.startswith("part-") and f.endswith(".parquet")]) == 1, d
+
+    back = spark.read.parquet(path)
+    live = ctx.dataframe("days")
+    assert back.dtypes == live.dtypes
+    assert back.exceptAll(live).count() == 0
+    assert live.exceptAll(back).count() == 0
+    assert back.filter(F.col("day").isNull()).count() == 12
+
+    n = spark.sparkContext.defaultParallelism
+    plan = _last_write_plan(spark, path)
+    assert plan and re.search(rf"hashpartitioning\(day#\d+, {n}\)", plan), plan
+
+
+def test_partitioned_run_of_empty_dataset_writes_no_partitions(spark):
+    ctx = _days_ctx(spark, 0)
+    wh = tempfile.mkdtemp(prefix="whe-", dir=_stream_root())
+    path = ctx.run(wh, partition_by={"days": ["day"]})["days"]
+    assert [d for d in os.listdir(path) if d.startswith("day=")] == []
+
+
 def test_three_part_names_in_catalog(spark, sf_dir):
     """§1.1 three-level namespace: catalog.schema.table flattens through
     `qualified()` into real Spark catalog databases + tables."""
