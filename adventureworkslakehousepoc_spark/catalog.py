@@ -13,11 +13,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 __all__ = [
     "qualified",
     "split_qualified",
     "TESTDATA_TABLES",
+    "read_input",
     "load_tables",
     "register_views",
     "ensure_database",
@@ -56,30 +58,57 @@ def split_qualified(name: str) -> tuple[str, ...]:
 # µs-aligned, so truncation is lossless here)
 _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
+# Raw inferred schema of each input file, keyed on the file's identity
+# (resolved path, inode, mtime, size): inferring reads parquet footers in a
+# Spark job, a read given the schema runs none. A rewrite in place changes
+# mtime/size and a replacement the inode, so a stale entry is never hit.
+# Schemas only, never DataFrames: every load stays a fresh relation, so two
+# loads of one table in one plan keep distinct attribute ids (self-joins).
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _input_schema(spark: SparkSession, path: str) -> StructType:
+    """Raw parquet schema of an input table (nanos read as long), inferred
+    once per file version. A directory-shaped table is keyed on every file
+    under it. Only for input data: written state (sinks, CDF logs,
+    maintained tables) changes under its reader and is always re-read."""
+    real = os.path.realpath(path)
+    files = sorted(os.path.join(r, f) for r, _, fs in os.walk(real) for f in fs) or [real]
+    key = tuple((f, s.st_ino, s.st_mtime_ns, s.st_size) for f in files for s in [os.stat(f)])
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return _SCHEMAS[key]
+
+
+def read_input(spark: SparkSession, sf_dir: str, name: str, reader=None, source=None) -> DataFrame:
+    """Read input table ``name`` with its memoized schema and normalized
+    timestamps. ``reader`` defaults to ``spark.read``; a stream passes its
+    ``spark.readStream`` and its staged directory as ``source``.
+
+    Pins session timezone to UTC so date extraction from naive parquet
+    timestamps matches the DuckDB oracle. Nanos stored as long become
+    microsecond TIMESTAMPs, and parquet timestamp[us] with
+    isAdjustedToUTC=false (TIMESTAMP_NTZ) is cast to session-tz TIMESTAMP
+    (value-preserving under UTC), so watermarks, unix-time extraction and
+    window range frames all work."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = _input_schema(spark, path)
+    fix = {}
+    for f in schema.fields:
+        if isinstance(f.dataType, LongType) and f.name in _NANOS_TS_COLS.get(name, ()):
+            fix[f.name] = F.timestamp_micros(F.expr(f"{f.name} div 1000"))
+        elif isinstance(f.dataType, TimestampNTZType):
+            fix[f.name] = F.col(f.name).cast("timestamp")
+    return (reader or spark.read).schema(schema).parquet(source or path).withColumns(fix)
+
 
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
 ) -> dict[str, DataFrame]:
-    """Load driver-generated parquet tables. Pins session timezone to UTC so
-    date extraction from naive parquet timestamps matches the DuckDB oracle."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    out = {}
-    for n in names:
-        path = os.path.join(sf_dir, f"{n}.parquet")
-        df = spark.read.parquet(path)
-        for col in _NANOS_TS_COLS.get(n, ()):
-            if dict(df.dtypes).get(col) == "bigint":
-                df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-        # parquet timestamp[us] with isAdjustedToUTC=false loads as TIMESTAMP_NTZ;
-        # normalize to session-tz TIMESTAMP (session tz pinned UTC above, so the
-        # cast is value-preserving vs DuckDB's naive timestamps) so downstream
-        # watermarks / unix-time extraction / window range frames all work.
-        for col, dtype in df.dtypes:
-            if dtype == "timestamp_ntz":
-                df = df.withColumn(col, F.col(col).cast("timestamp"))
-        out[n] = df
-    return out
+    """Load driver-generated parquet tables, each through ``read_input``."""
+    return {n: read_input(spark, sf_dir, n) for n in names}
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES) -> None:
@@ -116,9 +145,8 @@ def register_external_table(
     """Register existing parquet files as an external table under the
     ``catalog.schema`` database; returns the two-part name Spark resolves."""
     db = ensure_database(spark, catalog, schema)
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS `{db}`.`{table}` USING parquet LOCATION '{path}'"
-    )
+    loc = path.replace("\\", "\\\\").replace("'", "\\'")  # SQL string literal
+    spark.sql(f"CREATE TABLE IF NOT EXISTS `{db}`.`{table}` USING parquet LOCATION '{loc}'")
     return f"{db}.{table}"
 
 

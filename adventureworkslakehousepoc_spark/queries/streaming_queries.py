@@ -25,7 +25,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
+from ..catalog import _input_schema, load_tables
 from ..functions.expressions import exact_unscaled_sum as _exact_unscaled_sum
 from ..operators.joins import interval_join, star_left_join
 from ..streaming.cdf import ChangeFeed, latest_snapshot
@@ -568,7 +568,7 @@ def _events_stream_with_sentinels(spark: SparkSession, sf_dir: str) -> DataFrame
     # (timestamp[us] isAdjustedToUTC=false); sentinels must be written in the
     # SAME physical encoding as the source file since both share one stream
     # schema.
-    batch = spark.read.parquet(path)
+    batch = spark.read.schema(_input_schema(spark, path)).parquet(path)
     ts_is_nanos = dict(batch.dtypes).get("ts") == "bigint"
     # The sentinel timestamp (max(ts)+1h) is derived WITHOUT a driver
     # round-trip: the 1-row max aggregate stays a DataFrame and the two

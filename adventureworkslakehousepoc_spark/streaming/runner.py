@@ -23,7 +23,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import _NANOS_TS_COLS
+from ..catalog import read_input
 
 __all__ = ["stage_stream_dir", "stream_table", "run_available_now", "scratch_dir"]
 
@@ -154,9 +154,9 @@ def stream_table(
     with_source_file: bool = False,
 ) -> DataFrame:
     """Unbounded stream over a testdata table (S1 streaming table scan).
-    Schema comes from a batch read (explicit — no streaming inference);
-    nanosecond timestamp columns get the same long→micros conversion as the
-    batch loader so stream and batch plans are column-compatible.
+    Schema and timestamp normalization come from ``catalog.read_input``
+    (the memoized batch schema — no streaming inference), so stream and
+    batch plans are column-compatible.
     ``copies`` stages the same file N times — a deterministic duplicate
     generator for dedup operators (each staged file replays every row).
 
@@ -168,15 +168,12 @@ def stream_table(
     byte-identical partial row regardless of which micro-batch it lands in
     — ``input_file_name()`` alone would give each staged copy a distinct
     name and defeat that collapse."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     staged = stage_stream_dir(*([path] * copies))
-    df = reader.parquet(staged)
+    df = read_input(spark, sf_dir, name, reader, staged)
     if with_source_file:
         # staged basenames are globally unique (monotonic counter), so a
         # basename → realpath literal map resolves identity executor-side
@@ -193,15 +190,6 @@ def stream_table(
                 F.element_at(F.split(F.input_file_name(), "/"), -1),
             ),
         )
-    for col in _NANOS_TS_COLS.get(name, ()):
-        if dict(df.dtypes).get(col) == "bigint":
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-    # parquet timestamp[us] isAdjustedToUTC=false → TIMESTAMP_NTZ, on which
-    # watermarks are illegal; normalize to TIMESTAMP like the batch loader
-    # (session tz pinned UTC above, so the cast is value-preserving)
-    for col, dtype in df.dtypes:
-        if dtype == "timestamp_ntz":
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
 
 

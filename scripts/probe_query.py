@@ -1,8 +1,11 @@
 #!/usr/bin/env python
 """Isolate and time registered queries with the noop sink (guide §1.4):
-warm-up + min-of-N, inter-rep GC, per-query job descriptions.
+warm-up + min-of-N, inter-rep GC, per-query job descriptions, and the Spark
+jobs each build started (status-store job ids before and after the builder
+call: schema inference, eager checkpoints, streaming runs at build time).
 
 Usage: python scripts/probe_query.py [-n N] <query> [<query> ...]
+Prints per query: warm-up and rep seconds, and build_jobs=<warm-up>/<reps>.
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 """
 
@@ -15,6 +18,16 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from adventureworkslakehousepoc_spark.session import get_spark  # noqa: E402
+
+
+def newest_job_id(spark) -> int:
+    """Id of the newest job in the status store (-1 if none)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(30_000)
+    jobs = sc.statusStore().jobsList(None)
+    if jobs.size() == 0:
+        return -1
+    return max(jobs.apply(0).jobId(), jobs.apply(jobs.size() - 1).jobId())
 
 
 def main() -> None:
@@ -32,21 +45,27 @@ def main() -> None:
     queries = entry_mod.queries()
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
     for name in args:
-        def once() -> float:
+        def once() -> tuple[float, int]:
             t0 = time.perf_counter()
-            queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
+            j0 = newest_job_id(spark)
+            df = queries[name](spark, sf_dir)
+            build_jobs = newest_job_id(spark) - j0
+            df.write.format("noop").mode("overwrite").save()
+            return time.perf_counter() - t0, build_jobs
 
         spark.sparkContext.setJobDescription(f"probe: {name}")
-        warm = once()
-        reps = []
+        warm, warm_jobs = once()
+        reps, jobs = [], []
         for _ in range(n):
-            reps.append(once())
+            s, j = once()
+            reps.append(s)
+            jobs.append(j)
             spark._jvm.System.gc()
         spark.sparkContext.setJobDescription(None)
         print(
             f"{name}: warm={warm:.3f} min={min(reps):.3f} reps="
-            + ",".join(f"{r:.3f}" for r in reps),
+            + ",".join(f"{r:.3f}" for r in reps)
+            + f" build_jobs={warm_jobs}/" + ",".join(map(str, jobs)),
             flush=True,
         )
 

@@ -292,20 +292,27 @@ def test_three_part_namespace_resolves_via_real_catalog(spark, sf_dir):
     assert spark.catalog.tableExists("dev_bronze_stg_sales.stg_customer")
 
 
-def test_timestamp_encoding_drift_guard(spark, tmp_path):
-    """Regression tripwire for the round-3 NTZ outage: the driver may
-    regenerate `events` with its ts column in any of three parquet physical
-    encodings — TIMESTAMP(NANOS) (read as bigint under nanosAsLong),
-    TIMESTAMP(MICROS) isAdjustedToUTC=false (reads as TIMESTAMP_NTZ), or
-    TIMESTAMP(MICROS) isAdjustedToUTC=true (reads as TIMESTAMP). load_tables
-    (catalog.py) must normalize ALL THREE to TimestampType with identical
-    values; if the next regeneration changes encoding, this fails in one
-    obvious place instead of zeroing half the correctness window."""
+def test_external_table_location_with_quote_registers(spark, sf_dir, tmp_path):
+    """LOCATION is a SQL string literal: a directory named ``it's`` used to
+    end the literal early and raise ParseException."""
+    import shutil
+
+    from adventureworkslakehousepoc_spark.catalog import register_external_table
+
+    d = tmp_path / "it's"
+    d.mkdir()
+    shutil.copy(os.path.join(sf_dir, "region.parquet"), d)
+    spark.sql("DROP TABLE IF EXISTS `dev_bronze_quoted`.`region`")
+    name = register_external_table(spark, str(d), "dev_bronze", "quoted", "region")
+    assert spark.table(name).count() == 5
+
+
+def _ts_encodings():
+    """The same three `events` rows with ts in each of the three parquet
+    physical encodings the driver has produced."""
     import datetime as dt
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import TimestampType
 
     stamps = [
         dt.datetime(2024, 5, 1, 12, 0, 0),
@@ -313,7 +320,7 @@ def test_timestamp_encoding_drift_guard(spark, tmp_path):
         dt.datetime(2024, 5, 2, 23, 59, 59, 999999),
     ]
     ids = list(range(len(stamps)))
-    encodings = {
+    return {
         "nanos": pa.table(
             {"event_id": ids, "ts": pa.array(stamps, type=pa.timestamp("ns"))}
         ),
@@ -324,20 +331,107 @@ def test_timestamp_encoding_drift_guard(spark, tmp_path):
             {"event_id": ids, "ts": pa.array(stamps, type=pa.timestamp("us", tz="UTC"))}
         ),
     }
+
+
+def _loaded_ts(spark, sf_dir, tag):
+    from pyspark.sql.types import TimestampType
+
+    df = load_tables(spark, sf_dir, ("events",))["events"]
+    (ts_field,) = [f for f in df.schema.fields if f.name == "ts"]
+    assert isinstance(ts_field.dataType, TimestampType), (
+        f"{tag}: ts loaded as {ts_field.dataType}, want TimestampType"
+    )
+    return {r.event_id: r.ts for r in df.collect()}
+
+
+def test_timestamp_encoding_drift_guard(spark, tmp_path):
+    """Regression tripwire for the round-3 NTZ outage: the driver may
+    regenerate `events` with its ts column in any of three parquet physical
+    encodings — TIMESTAMP(NANOS) (read as bigint under nanosAsLong),
+    TIMESTAMP(MICROS) isAdjustedToUTC=false (reads as TIMESTAMP_NTZ), or
+    TIMESTAMP(MICROS) isAdjustedToUTC=true (reads as TIMESTAMP). load_tables
+    (catalog.py) must normalize ALL THREE to TimestampType with identical
+    values; if the next regeneration changes encoding, this fails in one
+    obvious place instead of zeroing half the correctness window."""
+    import pyarrow.parquet as pq
+
     seen = {}
-    for tag, tbl in encodings.items():
+    for tag, tbl in _ts_encodings().items():
         d = tmp_path / tag
         d.mkdir()
         pq.write_table(tbl, d / "events.parquet", store_schema=False)
-        df = load_tables(spark, str(d), ("events",))["events"]
-        (ts_field,) = [f for f in df.schema.fields if f.name == "ts"]
-        assert isinstance(ts_field.dataType, TimestampType), (
-            f"{tag}: ts loaded as {ts_field.dataType}, want TimestampType"
-        )
-        seen[tag] = {r.event_id: r.ts for r in df.collect()}
+        seen[tag] = _loaded_ts(spark, str(d), tag)
     assert seen["nanos"] == seen["us_ntz"] == seen["us_utc"], (
         f"value drift across encodings: {seen}"
     )
+
+
+def test_timestamp_encoding_rewritten_in_place_is_reinferred(spark, tmp_path):
+    """The drift guard on ONE path: `events.parquet` is rewritten in place
+    in each encoding and loaded after each write. load_tables memoizes each
+    input file's schema, so a memo that outlived its file version would read
+    the new encoding with the old schema and fail here."""
+    import pyarrow.parquet as pq
+
+    seen = {}
+    for tag, tbl in _ts_encodings().items():
+        pq.write_table(tbl, tmp_path / "events.parquet", store_schema=False)
+        seen[tag] = _loaded_ts(spark, str(tmp_path), tag)
+    assert seen["nanos"] == seen["us_ntz"] == seen["us_utc"], (
+        f"value drift across in-place rewrites: {seen}"
+    )
+
+
+def _newest_job_id(spark):
+    """Id of the newest job in the status store (-1 if none); a difference
+    of two readings is the number of jobs started in between."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(30_000)
+    jobs = sc.statusStore().jobsList(None)
+    if jobs.size() == 0:
+        return -1
+    return max(jobs.apply(0).jobId(), jobs.apply(jobs.size() - 1).jobId())
+
+
+def test_second_load_and_stream_of_a_file_start_no_jobs(spark, sf_dir, tmp_path):
+    """Schema inference runs a footer job the first time a file is read;
+    every later load_tables / stream_table of the same file version takes
+    the memoized schema and starts no Spark job."""
+    import shutil
+
+    from adventureworkslakehousepoc_spark.streaming.runner import stream_table
+
+    for name in ("orders", "events"):
+        shutil.copy(os.path.join(sf_dir, f"{name}.parquet"), tmp_path)
+    j0 = _newest_job_id(spark)
+    load_tables(spark, str(tmp_path), ("orders",))
+    j1 = _newest_job_id(spark)
+    assert j1 > j0, "first read of a fresh file should infer its schema"
+    load_tables(spark, str(tmp_path), ("orders",))
+    assert _newest_job_id(spark) == j1
+
+    stream_table(spark, str(tmp_path), "events")
+    j2 = _newest_job_id(spark)
+    assert j2 > j1, "first read of a fresh file should infer its schema"
+    events = stream_table(spark, str(tmp_path), "events")
+    assert _newest_job_id(spark) == j2
+    assert dict(events.dtypes)["ts"] == "timestamp"
+
+
+def test_two_loads_of_one_table_self_join(spark, sf_dir):
+    """The memo holds schemas, not DataFrames: two loads of `orders` are
+    distinct relations with their own attribute ids, so a self-join written
+    with each side's column references resolves and counts as DuckDB's."""
+    from tests.oracle_compare import duckdb_connection
+
+    a = load_tables(spark, sf_dir, ("orders",))["orders"]
+    b = load_tables(spark, sf_dir, ("orders",))["orders"]
+    n = a.join(b, (a.o_custkey == b.o_custkey) & (a.o_orderkey < b.o_orderkey)).count()
+    (want,) = duckdb_connection(sf_dir).execute(
+        "SELECT COUNT(*) FROM orders a JOIN orders b"
+        " ON a.o_custkey = b.o_custkey AND a.o_orderkey < b.o_orderkey"
+    ).fetchone()
+    assert n == want > 0
 
 
 def test_driver_window_schemas_are_scalar_only(spark):
