@@ -8,7 +8,7 @@ the final step of corpus dedup. Each iteration is one shuffle
 loop's only driver-side work is the convergence check (a count), never data.
 
 At 100 TB: the edge list is the (tiny) near-dup pair set, not the corpus, so
-iterations run on |pairs| rows; checkpoint every few rounds to truncate
+iterations run on |pairs| rows; every round is checkpointed to truncate
 lineage on long chains.
 """
 
@@ -25,7 +25,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iterations: int = 20,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Returns (node, component) where component = min node id reachable.
     ``edges`` is an undirected pair list; isolated nodes don't appear.
@@ -47,7 +46,7 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # cached handle for the CURRENT round's materialization. unpersist()
+    # cached handle for the seed labels. unpersist()
     # must target the exact cached plan — calling it on a derived select()
     # is a silent no-op (plan mismatch), which previously leaked one cached
     # pair-scale frame per iteration across a long session.
@@ -58,7 +57,7 @@ def connected_components(
         .persist()
     )
     cached: DataFrame | None = labels
-    for i in range(max_iterations):
+    for _ in range(max_iterations):
         # propagate: each node takes min(own label, neighbors' labels).
         # Materialize per round — without this the lineage re-derives every
         # prior round per iteration (quadratic recompute).
@@ -73,30 +72,21 @@ def connected_components(
             F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("new_label"),
             F.coalesce(F.col("nbr_label") < F.col("label"), F.lit(False)).alias("chg"),
         )
-        if (i + 1) % checkpoint_every == 0:
-            # eager checkpoint truncates lineage AND frees via GC — no
-            # manual cache entry to leak (the PageRank pattern)
-            stepped = stepped.localCheckpoint(eager=True)
-            changed = stepped.filter("chg").limit(1).count()
-            if cached is not None:
-                cached.unpersist()
-                cached = None
-        else:
-            stepped = stepped.persist()
-            # materialize THIS round before releasing the previous one —
-            # unpersisting first would force stepped to re-derive the whole
-            # prior-round lineage (the quadratic recompute this avoids)
-            changed = stepped.filter("chg").limit(1).count()
-            prev, cached = cached, stepped
-            if prev is not None:
-                prev.unpersist()
+        # eager checkpoint truncates lineage AND frees via GC — no manual
+        # cache entry to leak (the PageRank pattern); the seed labels are
+        # released once the first round has materialized from them
+        stepped = stepped.localCheckpoint(eager=True)
+        changed = stepped.filter("chg").limit(1).count()
+        if cached is not None:
+            cached.unpersist()
+            cached = None
         labels = stepped.select("u", F.col("new_label").alias("label"))
         if changed == 0:
             break
     out = labels.select(F.col("u").alias("node"), F.col("label").alias("component"))
     if cached is not None:
-        # the last round wasn't checkpointed, so the result still rides the
-        # cached frame — materialize before releasing it
+        # no round ran (max_iterations < 1), so the result still rides the
+        # cached seed — materialize before releasing it
         out = out.localCheckpoint(eager=True)
         cached.unpersist()
     return out

@@ -11,10 +11,10 @@ contract is ~150 LoC of pure Python:
 - ``PipelineContext.read(name)`` inside a generator resolves either another
   registered dataset (recursively materializing it — lazy topological order
   with memoization and cycle detection) or falls through to a catalog reader.
-- ``run()`` materializes every dataset; batch DataFrames land via
-  ``write.parquet``/``saveAsTable``, streaming DataFrames via ``writeStream``
-  with ``Trigger.AvailableNow`` and a per-table checkpoint (see
-  ``streaming.runner``).
+- ``run()`` materializes every batch dataset via
+  ``write.parquet``/``saveAsTable``; streaming datasets run through
+  ``streaming.runner`` (``Trigger.AvailableNow`` with a per-run
+  checkpoint).
 
 Plan construction is driver-local Python; all data movement stays inside
 Spark jobs — nothing here collects.

@@ -29,7 +29,12 @@ from ..catalog import _input_schema, load_tables
 from ..functions.expressions import exact_unscaled_sum as _exact_unscaled_sum
 from ..operators.joins import interval_join, star_left_join
 from ..streaming.cdf import ChangeFeed, latest_snapshot
-from ..streaming.runner import run_available_now, scratch_dir, stream_table, stream_tmp_root
+from ..streaming.runner import (
+    run_available_now,
+    run_foreach_batch,
+    scratch_dir,
+    stream_table,
+)
 from ._registrar import registrar
 
 QUERIES, ORACLE, query = registrar()
@@ -235,13 +240,11 @@ def st_incremental_gold_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/sinks.py::foreach_batch_merge_aggregates."""
 
     from ..catalog import load_tables
-    from ..streaming.runner import stage_stream_dir, stream_tmp_root
+    from ..streaming.runner import stage_stream_dir
     from ..streaming.sinks import foreach_batch_merge_aggregates, read_merge_state
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     slice_files = []
-    root = stream_tmp_root()
-    os.makedirs(root, exist_ok=True)
     for i in range(3):
         d = scratch_dir(f"ivm-slice{i}")
         ev.filter((F.col("event_id") % 3) == i).coalesce(1).write.mode(
@@ -321,7 +324,6 @@ def st_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.sinks import foreach_batch_upsert
 
     cf = _build_change_log(spark, sf_dir)
-    os.makedirs(stream_tmp_root(), exist_ok=True)
     state_dir = scratch_dir("upsert-q") + "/state"
     ckpt = scratch_dir("upsert-q-ck")
     foreach_batch_upsert(cf.read_stream(spark), state_dir, ["c_custkey"], ckpt)
@@ -426,21 +428,11 @@ def st_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     counts = running_counts_with_state(stream_table(spark, sf_dir, "events"))
     out = scratch_dir("stateful-out")
-    ckpt = scratch_dir("stateful-ck")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
 
-    q = (
-        counts.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("stateful stream did not terminate")
+    run_foreach_batch(counts, sink, "stateful")
     return spark.read.schema(counts.schema).parquet(out)
 
 
@@ -600,8 +592,6 @@ def _events_stream_with_sentinels(spark: SparkSession, sf_dir: str) -> DataFrame
     # unique dir per stream instance: a shared path would be clobbered by the
     # second reader's overwrite, dangling the first reader's staged symlink
     # (whose watermark then never advances past the real data)
-
-    os.makedirs(stream_tmp_root(), exist_ok=True)
     sent_path = scratch_dir("sentinel")
     sentinels.coalesce(1).write.mode("overwrite").parquet(sent_path)
     files = sorted(
@@ -781,6 +771,18 @@ def scd2_point_in_time_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (idempotent merges, or per-file partials for XOR).
 _MAINT_TRIGGER_DEFAULT = "16"
 
+
+def _maintenance_stream(
+    spark: SparkSession, sf_dir: str, name: str, **kw
+) -> DataFrame:
+    """``stream_table`` under the maintenance trigger:
+    $SPARK_GRAFT_STREAM_TRIGGER_FILES files per micro-batch, else
+    ``_MAINT_TRIGGER_DEFAULT``."""
+    trigger_files = int(
+        os.environ.get("SPARK_GRAFT_STREAM_TRIGGER_FILES", _MAINT_TRIGGER_DEFAULT)
+    )
+    return stream_table(spark, sf_dir, name, max_files_per_trigger=trigger_files, **kw)
+
 from .extensions import _HLL_SQL as _HLL_ORACLE_SQL  # noqa: E402
 
 
@@ -804,30 +806,16 @@ def st_hll_sketch_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     See operators/sketches.py::hll_registers/hll_summary."""
     from ..operators.sketches import hll_registers, hll_summary
 
-    trigger_files = int(
-        os.environ.get("SPARK_GRAFT_STREAM_TRIGGER_FILES", _MAINT_TRIGGER_DEFAULT)
-    )
-    docs = stream_table(
-        spark, sf_dir, "documents", max_files_per_trigger=trigger_files, copies=2
-    )
+    docs = _maintenance_stream(spark, sf_dir, "documents", copies=2)
     toks = docs.select(
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token")
     ).filter(F.col("token") != "")
     store = scratch_dir("hll-store")
-    ckpt = scratch_dir("hll-ckpt")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         hll_registers(batch_df, "token").write.mode("append").parquet(store)
 
-    q = (
-        toks.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("hll sketch stream did not terminate")
+    run_foreach_batch(toks, apply_batch, "hll-sketch")
 
     merged = (
         spark.read.parquet(store)
@@ -871,14 +859,8 @@ def st_bloom_filter_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     See operators/sketches.py::bloom_words/bloom_decontaminate."""
     from ..operators.sketches import bloom_decontaminate, bloom_ngrams, bloom_words
 
-    trigger_files = int(
-        os.environ.get("SPARK_GRAFT_STREAM_TRIGGER_FILES", _MAINT_TRIGGER_DEFAULT)
-    )
-    docs = stream_table(
-        spark, sf_dir, "documents", max_files_per_trigger=trigger_files, copies=2
-    )
+    docs = _maintenance_stream(spark, sf_dir, "documents", copies=2)
     store = scratch_dir("bloom-store")
-    ckpt = scratch_dir("bloom-ckpt")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         test_g = (
@@ -889,15 +871,7 @@ def st_bloom_filter_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         bloom_words(test_g, "g").write.mode("append").parquet(store)
 
-    q = (
-        docs.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("bloom bitmap stream did not terminate")
+    run_foreach_batch(docs, apply_batch, "bloom-bitmap")
 
     merged = (
         spark.read.parquet(store)
@@ -944,15 +918,9 @@ def st_ivf_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     batch_emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     codebook = ivf_base_codebook(batch_emb, n_centroids=16, append_mod=5)
 
-    trigger_files = int(
-        os.environ.get("SPARK_GRAFT_STREAM_TRIGGER_FILES", _MAINT_TRIGGER_DEFAULT)
-    )
-    emb = stream_table(
-        spark, sf_dir, "embeddings", max_files_per_trigger=trigger_files, copies=1
-    )
+    emb = _maintenance_stream(spark, sf_dir, "embeddings")
     store_cd = scratch_dir("ivf-cd-store")
     store_n = scratch_dir("ivf-n-store")
-    ckpt = scratch_dir("ivf-ckpt")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         appended = batch_df.filter(F.col("vec_id") % 5 == 0)
@@ -961,15 +929,7 @@ def st_ivf_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
         cd.write.mode("append").parquet(store_cd)
         cnt.write.mode("append").parquet(store_n)
 
-    q = (
-        emb.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("ivf sketch stream did not terminate")
+    run_foreach_batch(emb, apply_batch, "ivf-sketch")
 
     app_cd = (
         spark.read.parquet(store_cd)
@@ -1034,16 +994,8 @@ def st_fingerprint_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny rows. See operators/maintenance.py::dataset_fingerprints for the
     batch form.
     """
-    trigger_files = int(
-        os.environ.get("SPARK_GRAFT_STREAM_TRIGGER_FILES", _MAINT_TRIGGER_DEFAULT)
-    )
-    docs = stream_table(
-        spark,
-        sf_dir,
-        "documents",
-        max_files_per_trigger=trigger_files,
-        copies=2,
-        with_source_file=True,
+    docs = _maintenance_stream(
+        spark, sf_dir, "documents", copies=2, with_source_file=True
     )
     row_digest = F.conv(
         F.substring(
@@ -1061,7 +1013,6 @@ def st_fingerprint_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         10,
     ).cast("bigint")
     store = scratch_dir("fp-store")
-    ckpt = scratch_dir("fp-ckpt")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # within-batch replay guard: when both copies of a re-delivered
@@ -1083,15 +1034,7 @@ def st_fingerprint_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(store)
         )
 
-    q = (
-        docs.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("fingerprint maintenance stream did not terminate")
+    run_foreach_batch(docs, apply_batch, "fingerprint-maintenance")
 
     # replay-safe fold: a re-delivered file's partial row is byte-identical
     # (same group, same FILE identity, same count, same xor) and collapses

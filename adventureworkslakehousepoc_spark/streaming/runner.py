@@ -18,6 +18,7 @@ import atexit
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,7 +26,20 @@ from pyspark.sql import functions as F
 
 from ..catalog import read_input
 
-__all__ = ["stage_stream_dir", "stream_table", "run_available_now", "scratch_dir"]
+__all__ = [
+    "stage_stream_dir",
+    "stream_table",
+    "run_available_now",
+    "run_foreach_batch",
+    "scratch_dir",
+]
+
+# State-store count of every stream's stateful operators (see
+# ``run_available_now``); fixed at a stream's first checkpoint.
+STATE_PARTITIONS = 8
+_SHUFFLE_CONF = "spark.sql.shuffle.partitions"
+# held while a run swaps the session conf around ``start()``
+_CONF_LOCK = threading.Lock()
 
 # Per-call scratch dirs created this process (stream staging, checkpoints,
 # sinks, ORC round-trip output). Swept at interpreter exit so repeated
@@ -51,10 +65,14 @@ def stream_tmp_root() -> str:
     return "/tmp/awlh_stream"
 
 
-def _tmpdir(kind: str) -> str:
-    # resolved per call (not cached at import) so AWLH_STREAM_TMP set after
-    # module import is honored — e.g. pointing large-SF runs at disk instead
-    # of the RAM-backed /dev/shm default
+def scratch_dir(kind: str) -> str:
+    """Fresh per-call scratch directory under the session tmp root, removed
+    at interpreter exit. Use for any query-internal materialization (sink
+    round-trips, staged slices, checkpoints) instead of a bare
+    ``tempfile.mkdtemp``. The root is resolved per call (not cached at
+    import) so AWLH_STREAM_TMP set after module import is honored — e.g.
+    pointing large-SF runs at disk instead of the RAM-backed /dev/shm
+    default."""
     root = stream_tmp_root()
     os.makedirs(root, exist_ok=True)
     d = tempfile.mkdtemp(prefix=f"{kind}-", dir=root)
@@ -62,13 +80,6 @@ def _tmpdir(kind: str) -> str:
         atexit.register(_sweep_scratch)
     _SCRATCH_DIRS.append(d)
     return d
-
-
-def scratch_dir(kind: str) -> str:
-    """Fresh per-call scratch directory under the session tmp root, removed
-    at interpreter exit. Use for any query-internal materialization (sink
-    round-trips, staged slices) instead of a bare ``tempfile.mkdtemp``."""
-    return _tmpdir(kind)
 
 
 def stage_stream_dir(*parquet_files: str) -> str:
@@ -94,7 +105,7 @@ def stage_stream_dir(*parquet_files: str) -> str:
     conflicting layouts named (round-11 advice)."""
     import glob as _glob
 
-    d = _tmpdir("src")
+    d = scratch_dir("src")
     i = 0
     seen_layout: tuple[str, ...] | None = None
     seen_src: str | None = None
@@ -193,10 +204,41 @@ def stream_table(
     return df
 
 
+def _drive(writer, spark: SparkSession, run_id: str, checkpoint: str | None, on_start) -> None:
+    """Run one stream for one pipeline update: AvailableNow with a
+    checkpoint, awaited to termination. The only place the engine starts a
+    stream, so every run sizes its state store the same way and hands its
+    query to ``on_start``.
+
+    The session's shuffle-partition conf is set to ``STATE_PARTITIONS`` only
+    across ``start()`` — the stream clones the session there, so its plans
+    and its state store keep the constant — and restored under a module
+    lock, so overlapping runs cannot leave the session at the constant and
+    batch jobs in other threads do not plan with it while a stream runs.
+    ``on_start`` runs after the restore, before the await."""
+    writer = writer.option(
+        "checkpointLocation", checkpoint or scratch_dir(f"ckpt-{run_id}")
+    ).trigger(availableNow=True)
+    with _CONF_LOCK:
+        prev = spark.conf.get(_SHUFFLE_CONF)
+        spark.conf.set(_SHUFFLE_CONF, str(STATE_PARTITIONS))
+        try:
+            q = writer.start()
+        finally:
+            spark.conf.set(_SHUFFLE_CONF, prev)
+    if on_start is not None:
+        # hand the started query to the caller BEFORE awaiting — a
+        # metrics listener binds its tracked query id here, closing
+        # the foreign-termination cross-talk window (ADVICE r15)
+        on_start(q)
+    if not q.awaitTermination(600):
+        q.stop()
+        raise TimeoutError(f"stream {run_id} did not terminate")
+
+
 def run_available_now(
     df: DataFrame,
     name: str | None = None,
-    state_partitions: int | None = None,
     on_start=None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (AvailableNow + flush
@@ -204,40 +246,32 @@ def run_available_now(
     materialized result as a batch DataFrame. The streaming equivalent of the
     reference's one pipeline update (entry point A, SURVEY.md §3.1).
 
-    ``state_partitions`` sizes the stateful operators' store count — a
-    first-class knob, NOT inherited from the batch shuffle setting: state
-    partitioning is fixed at the first checkpoint and must be sized to the
-    key volume of THIS stream. Default: $AWLH_STREAM_SHUFFLE_PARTITIONS,
-    else 8 (right for the bounded local testdata, where 32 stores cost ~3 s
-    of pure per-store open/commit overhead per run — measured 4.4 s → 1.5 s
-    for ``st_windowed_agg`` at sf0.1). A 100 TB deployment sets hundreds.
-    The session conf is set only while this (synchronous) run plans and
-    executes, then restored."""
-    spark = df.sparkSession
-    if state_partitions is None:
-        state_partitions = int(os.environ.get("AWLH_STREAM_SHUFFLE_PARTITIONS", "8"))
+    Stateful operators get ``STATE_PARTITIONS`` (8) state stores, not the
+    batch shuffle setting: state partitioning is fixed at the first
+    checkpoint, and for the bounded local testdata 32 stores cost ~3 s of
+    pure per-store open/commit overhead per run (measured 4.4 s → 1.5 s for
+    ``st_windowed_agg`` at sf0.1). The session conf is held at the constant
+    only across ``start()`` (see ``_drive``)."""
     run_id = name or uuid.uuid4().hex[:8]
-    out = _tmpdir(f"out-{run_id}")
-    ckpt = _tmpdir(f"ckpt-{run_id}")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("checkpointLocation", ckpt)
-            .option("path", out)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if on_start is not None:
-            # hand the started query to the caller BEFORE awaiting — a
-            # metrics listener binds its tracked query id here, closing
-            # the foreign-termination cross-talk window (ADVICE r15)
-            on_start(q)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(f"stream {run_id} did not terminate")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.read.schema(df.schema).parquet(out)
+    out = scratch_dir(f"out-{run_id}")
+    writer = df.writeStream.outputMode("append").format("parquet").option("path", out)
+    _drive(writer, df.sparkSession, run_id, None, on_start)
+    return df.sparkSession.read.schema(df.schema).parquet(out)
+
+
+def run_foreach_batch(
+    df: DataFrame,
+    fn,
+    name: str | None = None,
+    checkpoint: str | None = None,
+    on_start=None,
+) -> None:
+    """Execute a streaming DataFrame to completion, calling
+    ``fn(batch_df, batch_id)`` on every micro-batch (foreachBatch sinks:
+    merges, sketch stores, custom state tables). Runs in ``update`` output
+    mode — what stateful operators such as ``applyInPandasWithState`` emit;
+    for a stateless plan Spark treats it as append. ``checkpoint`` defaults
+    to a fresh scratch dir; pass a kept one to resume a stream across runs."""
+    run_id = name or uuid.uuid4().hex[:8]
+    writer = df.writeStream.outputMode("update").foreachBatch(fn)
+    _drive(writer, df.sparkSession, run_id, checkpoint, on_start)

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from .cdf import latest_snapshot
+from .runner import run_foreach_batch
 
 __all__ = [
     "foreach_batch_upsert",
@@ -72,15 +73,7 @@ def foreach_batch_upsert(
         final = spark.read.parquet(tmp)
         final.write.mode("overwrite").parquet(state_dir)
 
-    q = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("foreachBatch upsert did not terminate")
+    run_foreach_batch(changes, apply_batch, "foreach-upsert", checkpoint_dir)
 
 
 def running_counts_with_state(events: DataFrame, key: str = "user_id") -> DataFrame:
@@ -305,13 +298,5 @@ def foreach_batch_merge_aggregates(
             shutil.rmtree(os.path.join(state_dir, meta[1]), ignore_errors=True)
         n_batches["n"] += 1
 
-    q = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("foreachBatch aggregate merge did not terminate")
+    run_foreach_batch(changes, apply_batch, "merge-aggregates", checkpoint_dir)
     return n_batches["n"]

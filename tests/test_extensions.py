@@ -896,12 +896,12 @@ def test_weak_label_votes_null_and_empty_text_vote_false(spark):
 
 def test_stream_tmp_env_honored_after_import(monkeypatch, tmp_path):
     """ADVICE r4: AWLH_STREAM_TMP set after module import must be honored by
-    _tmpdir (it used to be frozen in a module-level constant)."""
+    scratch_dir (it used to be frozen in a module-level constant)."""
     from adventureworkslakehousepoc_spark.streaming import runner
 
     target = str(tmp_path / "late-env")
     monkeypatch.setenv("AWLH_STREAM_TMP", target)
-    d = runner._tmpdir("probe")
+    d = runner.scratch_dir("probe")
     assert d.startswith(target)
 
 

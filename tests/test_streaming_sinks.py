@@ -14,7 +14,7 @@ from adventureworkslakehousepoc_spark.pipelines.medallion import (
     medallion_streaming_context,
 )
 from adventureworkslakehousepoc_spark.queries.streaming_queries import _build_change_log
-from adventureworkslakehousepoc_spark.streaming.runner import run_available_now
+from adventureworkslakehousepoc_spark.streaming.runner import run_available_now, run_foreach_batch
 from adventureworkslakehousepoc_spark.streaming.sinks import (
     foreach_batch_upsert,
     running_counts_with_state,
@@ -109,27 +109,10 @@ def test_apply_in_pandas_with_state_running_counts(spark, sf_dir):
 
 
 def run_available_now_update(df):
-    """Update-mode variant of the runner (stateful operators emit updates)."""
-    import tempfile as _tf
-
-    spark = df.sparkSession
-    out = _tf.mkdtemp(prefix="upd-out-", dir=_stream_root())
-    ckpt = _tf.mkdtemp(prefix="upd-ck-", dir=_stream_root())
+    """Every row a stateful stream emits (update mode), across its batches."""
     collected = []
-
-    def grab(batch_df, batch_id):
-        collected.append(batch_df.collect())
-
-    q = (
-        df.writeStream.foreachBatch(grab)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(600)
-    rows = [r for batch in collected for r in batch]
-    return spark.createDataFrame(rows, df.schema)
+    run_foreach_batch(df, lambda batch_df, _id: collected.extend(batch_df.collect()))
+    return df.sparkSession.createDataFrame(collected, df.schema)
 
 
 def test_streaming_medallion_dag_equals_batch(spark, sf_dir):
