@@ -67,14 +67,22 @@ _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 _SCHEMAS: dict[tuple, StructType] = {}
 
 
+def file_versions(paths) -> tuple:
+    """Identity of each file: ``(resolved path, st_ino, st_mtime_ns,
+    st_size)``, sorted by path. A rewrite in place changes mtime or size and
+    a replacement the inode, so two equal tuples name the same bytes."""
+    real = sorted(os.path.realpath(p) for p in paths)
+    return tuple((f, s.st_ino, s.st_mtime_ns, s.st_size) for f in real for s in [os.stat(f)])
+
+
 def _input_schema(spark: SparkSession, path: str) -> StructType:
     """Raw parquet schema of an input table (nanos read as long), inferred
     once per file version. A directory-shaped table is keyed on every file
     under it. Only for input data: written state (sinks, CDF logs,
     maintained tables) changes under its reader and is always re-read."""
     real = os.path.realpath(path)
-    files = sorted(os.path.join(r, f) for r, _, fs in os.walk(real) for f in fs) or [real]
-    key = tuple((f, s.st_ino, s.st_mtime_ns, s.st_size) for f in files for s in [os.stat(f)])
+    files = [os.path.join(r, f) for r, _, fs in os.walk(real) for f in fs] or [real]
+    key = file_versions(files)
     if key not in _SCHEMAS:
         _SCHEMAS[key] = spark.read.parquet(path).schema
     return _SCHEMAS[key]

@@ -7,7 +7,7 @@ stage is whole-stage-codegen'd and shuffle-parallel.
 Set-similarity core: the shingle-set joins (MinHash verify, prefix-filter
 Jaccard, containment, estimator calibration, incremental new×corpus, the LSH
 containment query) are built from ``doc_shingle_arrays`` — one per-doc sorted
-set array, one corpus shuffle — and four private helpers, each owning one
+set array, one corpus shuffle — and five private helpers, each owning one
 invariant:
 - ``_pair_overlap``: the ONLY place two sets are intersected; each pair end
   reads its own side's array, and the counts come back as bigints.
@@ -17,6 +17,10 @@ invariant:
   ``doc_a < doc_b`` re-established and id-tied columns swapped along.
 - ``_rarity_arrays``: each set as one array in the global rarest-first order,
   so a prefix is a slice and ``posexplode`` yields global ranks.
+- ``_set_index``: one input's families, representative sets and rank
+  arrays, built once and held in one-slot caches that are reused only while
+  the plan AND its input files are unchanged — the containment and
+  prefix-filter joins over the same docs pay the corpus pass once.
 LSH banding is ``_band_keys``, shared by the self-join and the incremental
 join.
 
@@ -42,8 +46,13 @@ Scale posture (100 TB corpus):
 
 from __future__ import annotations
 
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..catalog import file_versions
+from ..plans.audit import eager_checkpoint, record_plan
 
 __all__ = [
     "spread",
@@ -256,24 +265,25 @@ def _jaccard_verify(pairs: DataFrame, doc_arrays: DataFrame, threshold: float) -
 def _set_families(doc_arrays: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Identical-set family collapse: ``(fams, reps, rep_arrays)``.
 
-    ``fams`` is ``(doc_id, sig)`` with ``sig`` the md5 digest of the sorted
+    ``fams`` is ``doc_arrays`` plus ``sig``, the md5 digest of the sorted
     set (a projection of the arrays, no corpus shuffle); ``reps`` is
     ``(sig, rep_id)``, the min doc id per family; ``rep_arrays`` is the
-    ``doc_arrays`` rows of the representatives only. On a duplicate-heavy
-    corpus every copy floods every collision list, so candidate generation
-    and verification run over ``rep_arrays`` — compute quadratic only in
-    DISTINCT sets — and ``_family_pairs`` expands the verdicts back.
+    ``(doc_id, shs)`` rows of the representatives only, read off ``fams``.
+    On a duplicate-heavy corpus every copy floods every collision list, so
+    candidate generation and verification run over ``rep_arrays`` —
+    compute quadratic only in DISTINCT sets — and ``_family_pairs`` expands
+    the verdicts back.
 
-    ``fams`` and ``rep_arrays`` are persisted (each is referenced several
-    times downstream); the caller unpersists both."""
-    fams = doc_arrays.select(
-        "doc_id",
-        F.md5(F.concat_ws("\u0001", F.col("shs").cast("array<string>"))).alias("sig"),
-    ).persist()
+    Nothing is persisted here: ``_set_index`` holds ``fams`` (the one frame
+    that carries every doc's set, so the corpus shuffle runs once) and
+    ``rep_arrays`` in one-slot caches."""
+    fams = doc_arrays.withColumn(
+        "sig", F.md5(F.concat_ws("\u0001", F.col("shs").cast("array<string>")))
+    )
     reps = fams.groupBy("sig").agg(F.min("doc_id").alias("rep_id"))
-    rep_arrays = doc_arrays.join(
-        reps.select(F.col("rep_id").alias("doc_id")), "doc_id"
-    ).persist()
+    rep_arrays = fams.join(reps.select(F.col("rep_id").alias("doc_id")), "doc_id").select(
+        "doc_id", "shs"
+    )
     return fams, reps, rep_arrays
 
 
@@ -348,41 +358,84 @@ def _rarity_arrays(rep_arrays: DataFrame) -> DataFrame:
     )
 
 
+def _set_index(
+    docs: DataFrame, text_col: str, id_col: str, shingle_n: int, hashed: bool
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The set index of one docs frame, built once and shared by every
+    set-similarity join over it: ``(fams, reps, rep_sets, rank_arrays)``
+    from ``_set_families`` over ``doc_shingle_arrays`` and
+    ``_rarity_arrays`` over the representatives. ``fams``, ``rep_sets``
+    and ``rank_arrays`` each sit in their own ``_fresh_cache`` slot (keyed
+    by the shingle flavour), so a second join over the same unchanged input
+    reads all three from memory instead of re-running the corpus shuffle,
+    the family collapse and the rarity order. Callers must materialize
+    their results before returning: the next call on another input evicts
+    the slots."""
+    key = "hashed_sets" if hashed else "sets"
+    fams, reps, rep_sets = _set_families(
+        doc_shingle_arrays(docs, text_col, id_col, shingle_n, hashed=hashed)
+    )
+    fams = _fresh_cache(f"{key}_families", fams)
+    rep_sets = _fresh_cache(f"{key}_rep_sets", rep_sets)
+    return fams, reps, rep_sets, _fresh_cache(f"{key}_ranks", _rarity_arrays(rep_sets))
+
+
 # One-slot cache registry: high-traffic operators persist a corpus-scale
 # intermediate for intra-plan reuse (3 consumers share one shingle shuffle)
 # and must return LAZY results — eagerly checkpointing them costs ~0.5 s per
 # call on the headline dedup rows (measured r6). Unpersisting the PREVIOUS
 # call's frame when a new call arrives bounds a long session to one cached
 # frame per operator instead of one per call — leak-free asymptotically,
-# zero cost on the hot path.
+# zero cost on the hot path. Each slot holds (frame, input file versions).
 _LAST_CACHED: dict = {}
 _CACHE_LOCK = __import__("threading").Lock()
 
 
+def _input_versions(df: DataFrame) -> tuple:
+    """``catalog.file_versions`` of every file the frame's file relations
+    list. Read off the ANALYZED plan: ``DataFrame.inputFiles`` reads the
+    optimized plan, where a cached plan-equal frame already stands in for
+    the scan and the list comes back empty."""
+    plan = df._jdf.queryExecution().analyzed().collectLeaves()
+    leaves = (plan.apply(i) for i in range(plan.size()))
+    uris = [
+        urlparse(u)
+        for leaf in leaves
+        if leaf.getClass().getSimpleName() == "LogicalRelation"
+        and leaf.relation().getClass().getSimpleName() == "HadoopFsRelation"
+        for u in leaf.relation().location().inputFiles()
+    ]
+    # a non-local file has no stat here: its URI alone stands for it
+    return file_versions(unquote(u.path) for u in uris if u.scheme == "file") + tuple(
+        sorted(u.geturl() for u in uris if u.scheme != "file")
+    )
+
+
 def _fresh_cache(key: str, df: DataFrame) -> DataFrame:
-    """One-slot cache with same-plan reuse: a repeat call on the SAME input
-    (plan-equal via sameSemantics) returns the already-cached frame — the
-    shingle/fingerprint shuffle is not re-run, which is what makes warm
-    repeat evaluations fast. A call on a DIFFERENT input unpersists the
-    previous frame first (unpersisting after persist would drop the new
-    cache too — CacheManager matches by plan), so a long session holds at
-    most one cached frame per operator.
+    """One-slot cache with same-input reuse: a repeat call on the SAME input
+    returns the already-cached frame — the shingle/fingerprint shuffle is
+    not re-run, which is what makes warm repeat evaluations fast. A call on
+    a DIFFERENT input unpersists the previous frame first (unpersisting
+    after persist would drop the new cache too — CacheManager matches by
+    plan), so a long session holds at most one cached frame per slot.
 
-    STATIC-INPUT ASSUMPTION: sameSemantics compares logical plans, not
-    data — if the files under an identical plan are rewritten between
-    calls, the stale cached frame is served. That matches every caller
-    here (immutable testdata parquet; streaming paths never route through
-    this cache), but an operator over mutable tables must bypass it.
-    The slot mutation is guarded by a process-wide lock so concurrent
-    callers (e.g. parallel pytest workers sharing one session) cannot
-    interleave unpersist/persist on the same key."""
-    from ..plans.audit import record_plan
-
+    Same input means BOTH a plan-equal frame (sameSemantics) AND unchanged
+    input files: every file the analyzed plan's file relations list has the
+    (resolved path, st_ino, st_mtime_ns, st_size) it had when the slot was
+    filled — the identity ``catalog._input_schema`` keys on. A table
+    rewritten in place keeps its plan, so without the file check the stale
+    frame would be served; on a mismatch the old frame is unpersisted
+    before the new one is persisted, because CacheManager would otherwise
+    still substitute it into the new plan. The slot mutation is guarded by
+    a process-wide lock so concurrent callers (e.g. parallel pytest workers
+    sharing one session) cannot interleave unpersist/persist on the same
+    key."""
+    versions = _input_versions(df)
     with _CACHE_LOCK:
-        prev = _LAST_CACHED.get(key)
+        prev, prev_versions = _LAST_CACHED.get(key, (None, None))
         if prev is not None:
             try:
-                if prev.sameSemantics(df):
+                if prev_versions == versions and prev.sameSemantics(df):
                     record_plan(key, prev)  # consumer plans only show the
                     return prev  # InMemoryTableScan — surface the cached tree
             except Exception:
@@ -394,7 +447,7 @@ def _fresh_cache(key: str, df: DataFrame) -> DataFrame:
             del _LAST_CACHED[key]
         record_plan(key, df)
         df = df.persist()
-        _LAST_CACHED[key] = df
+        _LAST_CACHED[key] = (df, versions)
         return df
 
 
@@ -474,8 +527,6 @@ def incremental_minhash_new_duplicates(
     the arrays — the previous stream shape paid the distinct exchange
     plus a signature groupBy plus a verify groupBy per side (guide §2.4).
     """
-    from ..plans.audit import eager_checkpoint
-
     def banded(arrs: DataFrame) -> DataFrame:
         sigs = minhash_signatures(arrs.select("doc_id", F.explode("shs").alias("sh")), num_hashes)
         return _band_keys(sigs, bands, rows_per_band)
@@ -1147,15 +1198,13 @@ def prefix_filter_jaccard_pairs(
     # ~6n-byte strings — output is counts only, so identity is all that
     # matters (word_shingles documents the 2^-64 collision trade)
     #
-    # ONE corpus shuffle, ONE persisted frame (r15, guide §2.4): the raw
-    # (not pre-distincted) shingle stream folds straight into a per-doc
-    # sorted distinct ARRAY, and everything downstream derives from it
-    # without touching the corpus again: the family digest, set sizes, the
-    # rarity order and the verification sets (measured 6.5 → 3.9 s at
-    # sf0.1 against the stream-shaped form, identical output).
-    doc_arrays = doc_shingle_arrays(
-        docs, text_col, id_col, shingle_n, hashed=True
-    ).persist()
+    # ONE corpus shuffle (r15, guide §2.4): the raw shingle stream folds
+    # straight into a per-doc sorted distinct ARRAY, and everything
+    # downstream derives from it without touching the corpus again: the
+    # family digest, set sizes, the rarity order and the verification sets.
+    # The set index is shared with containment_prefix_pairs over the same
+    # input, so a second join pays none of it again.
+    #
     # Prefix filtering assumes an exact-deduped input — on a duplicate-heavy
     # corpus identical sets flood every prefix collision list and the
     # candidate join goes quadratic in the COPY count. So the prefix join
@@ -1163,11 +1212,7 @@ def prefix_filter_jaccard_pairs(
     # verified pairs expand back over family members at the end: output
     # identical to the naive all-pairs join, compute quadratic only in
     # DISTINCT similar sets.
-    fams, reps, rep_arrays = _set_families(doc_arrays)
-    # r16: rarest-first arrays instead of a row_number window over the
-    # representative stream (measured at sf0.1: prefix build 1.48 → 1.08 s,
-    # candidate join 1.35 → 0.78 s, identical candidates)
-    doc_arr = _rarity_arrays(rep_arrays)
+    fams, reps, rep_arrays, doc_arr = _set_index(docs, text_col, id_col, shingle_n, hashed=True)
     # p = n − ceil(t·n) + 1, with ceil(n·num/den) = (n·num + den − 1) div den
     pfx_len = (
         F.col("n_sh")
@@ -1218,16 +1263,9 @@ def prefix_filter_jaccard_pairs(
     rep_pairs = _jaccard_verify(cands, rep_arrays, threshold)
     cross, intra = _family_pairs(rep_pairs, fams, reps)
     out = cross.unionByName(intra.select("doc_a", "doc_b", F.lit(1.0).alias("jaccard")))
-    try:
-        # verified-pair-list-sized; eager so the shingle/family caches are
-        # released before returning
-        from ..plans.audit import eager_checkpoint
-
-        return eager_checkpoint(out, "prefix_filter_jaccard_pairs")
-    finally:
-        doc_arrays.unpersist()
-        fams.unpersist()
-        rep_arrays.unpersist()
+    # verified-pair-list-sized; eager so the result never reads a set-index
+    # slot that the next call on another input evicts
+    return eager_checkpoint(out, "prefix_filter_jaccard_pairs")
 
 
 def containment_prefix_pairs(
@@ -1287,27 +1325,16 @@ def containment_prefix_pairs(
     full-shingle-table shuffles.
     """
     # hashed shingle ids (8-byte ints) for the same reason as
-    # prefix_filter_jaccard_pairs: the output is pure counts.
-    #
-    # ONE corpus shuffle (r15, guide §2.4): the raw shingle stream folds
-    # straight into per-doc sorted distinct arrays, and the family digest
-    # is a projection of that frame instead of a second corpus-scale groupBy.
-    doc_sets = doc_shingle_arrays(
-        docs, text_col, id_col, shingle_n, hashed=True
-    ).persist()
-    from ..plans.audit import eager_checkpoint
-
-    # family collapse BEFORE any df work: everything downstream (df table,
-    # rank arrays, candidate generation, verification) is bounded by
-    # DISTINCT sets, which is what keeps the copy-heavy 30x probe linear.
-    fams, reps, rep_sets = _set_families(doc_sets)
-    # df over distinct sets = the global rarest-first order; the
-    # checkpointed rank-order frame serves prefix extraction and the
-    # full-side candidate explosion, while pair verification intersects the
-    # original collect_set arrays off rep_sets (measured 1.15 -> 0.79 s on
-    # the candidate verify at sf0.1 vs intersecting the transform-built
-    # arrays, r16).
-    doc_arr = eager_checkpoint(_rarity_arrays(rep_sets), "containment_doc_arrays")
+    # prefix_filter_jaccard_pairs: the output is pure counts. Family
+    # collapse BEFORE any df work: everything downstream (df table, rank
+    # arrays, candidate generation, verification) is bounded by DISTINCT
+    # sets, which is what keeps the copy-heavy 30x probe linear. The
+    # rank-order frame serves prefix extraction and the full-side candidate
+    # explosion, while pair verification intersects the original
+    # collect_set arrays off rep_sets (measured 1.15 -> 0.79 s on the
+    # candidate verify at sf0.1 vs intersecting the transform-built arrays,
+    # r16). All of it is the set index prefix_filter_jaccard_pairs shares.
+    fams, reps, rep_sets, doc_arr = _set_index(docs, text_col, id_col, shingle_n, hashed=True)
     # t_a = ⌈t·n⌉ (the overlap a qualifying pair must reach on its smaller
     # side), prefix length p = n − t_a + 1, with ⌈n·num/den⌉ =
     # (n·num + den − 1) div den. posexplode positions are 0-based GLOBAL
@@ -1387,14 +1414,9 @@ def containment_prefix_pairs(
         F.expr("(n_inter * 1000000) div n_a").alias("containment_a_micros"),
         F.expr("(n_inter * 1000000) div n_b").alias("containment_b_micros"),
     )
-    try:
-        # verified-pair-list-sized: materialize eagerly so the shingle
-        # caches can be released before returning
-        return eager_checkpoint(out, "containment_prefix_pairs")
-    finally:
-        doc_sets.unpersist()
-        rep_sets.unpersist()
-        fams.unpersist()
+    # verified-pair-list-sized: materialized so the result never reads a
+    # set-index slot that the next call on another input evicts
+    return eager_checkpoint(out, "containment_prefix_pairs")
 
 
 def band_selectivity_curve(
@@ -1457,17 +1479,14 @@ def minhash_estimate_calibration(
     Without the collapse a duplicate-heavy corpus pays the shingle join once
     per COPY pair — measured 136 s on the 30× probe vs ~linear after. The
     representative-level joins are candidate-pair-scale (AQE broadcasts the
-    pair side); the shingle frame is the same one-slot cached frame the
-    dedup pipeline shares.
+    pair side); the families and representative sets are the one-slot
+    cached set index (``_set_index``) over the string shingle arrays.
     """
-    arrs = _fresh_cache(
-        "minhash_doc_arrays",
-        doc_shingle_arrays(docs, text_col, id_col, shingle_n),
-    )
-    # family digest is a PROJECTION of the cached arrays (r16 - previously
-    # a second corpus-scale groupBy over the shingle stream)
-    fams, reps, rep_arrs = _set_families(arrs)
-    # signature stream explodes off the persisted representative arrays -
+    # the set index over the string shingle arrays (the family digest is a
+    # projection of the arrays, no second corpus-scale groupBy); its
+    # rarest-first order is not read here
+    fams, reps, rep_arrs, _ = _set_index(docs, text_col, id_col, shingle_n, hashed=False)
+    # signature stream explodes off the cached representative arrays -
     # a map, no exchange; the groupBy below partial-aggregates so only
     # per-doc partials cross the wire. sigs is referenced three times
     # (banding + both lane joins), each under a different required
@@ -1519,13 +1538,9 @@ def minhash_estimate_calibration(
             "err_micros",
             F.col("est_jaccard_micros") - F.col("exact_jaccard_micros"),
         )
-        from ..plans.audit import eager_checkpoint
-
         return eager_checkpoint(out, "minhash_estimate_calibration")
     finally:
         sigs.unpersist()
-        rep_arrs.unpersist()
-        fams.unpersist()
 
 
 def soft_dedup_weights(

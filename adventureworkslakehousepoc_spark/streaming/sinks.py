@@ -67,11 +67,12 @@ def foreach_batch_upsert(
             merged = current.unionByName(batch_df)
         else:
             merged = batch_df
-        snapshot = latest_snapshot(merged, key_cols)
+        # the snapshot reads state_dir, so it is written once beside it and
+        # swapped in by a directory rename
         tmp = state_dir + ".tmp"
-        snapshot.write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(state_dir)
+        latest_snapshot(merged, key_cols).write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(state_dir, ignore_errors=True)
+        os.rename(tmp, state_dir)
 
     run_foreach_batch(changes, apply_batch, "foreach-upsert", checkpoint_dir)
 

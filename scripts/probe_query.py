@@ -1,11 +1,13 @@
 #!/usr/bin/env python
 """Isolate and time registered queries with the noop sink (guide §1.4):
-warm-up + min-of-N, inter-rep GC, per-query job descriptions, and the Spark
+warm-up + min-of-N, inter-rep GC, per-query job descriptions, the Spark
 jobs each build started (status-store job ids before and after the builder
-call: schema inference, eager checkpoints, streaming runs at build time).
+call: schema inference, eager checkpoints, streaming runs at build time),
+and the shuffle bytes written by the jobs each build and execute started.
 
 Usage: python scripts/probe_query.py [-n N] <query> [<query> ...]
-Prints per query: warm-up and rep seconds, and build_jobs=<warm-up>/<reps>.
+Prints per query: warm-up and rep seconds, build_jobs=<warm-up>/<reps> and
+shuffle_mb=<warm-up>/<reps>.
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 """
 
@@ -30,6 +32,24 @@ def newest_job_id(spark) -> int:
     return max(jobs.apply(0).jobId(), jobs.apply(jobs.size() - 1).jobId())
 
 
+def shuffle_mb(spark, first_job: int, last_job: int, since_ms: int) -> float:
+    """Shuffle-write MB of the stages that jobs ``first_job..last_job`` ran:
+    a stage they list but skipped, or ran before ``since_ms`` for an earlier
+    job, wrote nothing in this window."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    stage_ids = set()
+    for job_id in range(first_job, last_job + 1):
+        ids = store.job(job_id).stageIds()
+        stage_ids.update(ids.apply(k) for k in range(ids.size()))
+    written = 0
+    for sid in stage_ids:
+        stage = store.lastStageAttempt(sid)
+        submitted = stage.submissionTime()
+        if submitted.isDefined() and submitted.get().getTime() >= since_ms:
+            written += stage.shuffleWriteBytes()
+    return written / 1e6
+
+
 def main() -> None:
     args = sys.argv[1:]
     n = 3
@@ -45,27 +65,31 @@ def main() -> None:
     queries = entry_mod.queries()
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
     for name in args:
-        def once() -> tuple[float, int]:
+        def once() -> tuple[float, int, float]:
             t0 = time.perf_counter()
+            since_ms = int(time.time() * 1000)
             j0 = newest_job_id(spark)
             df = queries[name](spark, sf_dir)
             build_jobs = newest_job_id(spark) - j0
             df.write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0, build_jobs
+            mb = shuffle_mb(spark, j0 + 1, newest_job_id(spark), since_ms)
+            return time.perf_counter() - t0, build_jobs, mb
 
         spark.sparkContext.setJobDescription(f"probe: {name}")
-        warm, warm_jobs = once()
-        reps, jobs = [], []
+        warm, warm_jobs, warm_mb = once()
+        reps, jobs, mbs = [], [], []
         for _ in range(n):
-            s, j = once()
+            s, j, mb = once()
             reps.append(s)
             jobs.append(j)
+            mbs.append(mb)
             spark._jvm.System.gc()
         spark.sparkContext.setJobDescription(None)
         print(
             f"{name}: warm={warm:.3f} min={min(reps):.3f} reps="
             + ",".join(f"{r:.3f}" for r in reps)
-            + f" build_jobs={warm_jobs}/" + ",".join(map(str, jobs)),
+            + f" build_jobs={warm_jobs}/" + ",".join(map(str, jobs))
+            + f" shuffle_mb={warm_mb:.3f}/" + ",".join(f"{m:.3f}" for m in mbs),
             flush=True,
         )
 

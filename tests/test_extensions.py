@@ -1396,11 +1396,11 @@ def test_containment_exact_orients_counts_with_member_ids(spark):
 
 
 def test_dedup_operators_cache_is_bounded(spark, sf_dir):
-    """Leak contract, two tiers: prefix/containment (eager localCheckpoint +
-    unpersist) leave NO cache-manager entries; the hot lazy operators
-    (MinHash/SimHash/ngram) keep ONE persisted intermediate for intra-plan
-    reuse but swap it out on the next call — so repeated calls must not
-    grow the cache."""
+    """Leak contract: the lazy operators (MinHash/SimHash/ngram) and the
+    set-index joins (prefix/containment, which return eager checkpoints but
+    keep their shared set index) hold ONE-slot caches that are swapped out
+    on the next call — so neither a repeat round on the same input nor a
+    call on a different input may grow the cache."""
     from adventureworkslakehousepoc_spark.catalog import load_tables
     from adventureworkslakehousepoc_spark.operators.dedup import (
         containment_prefix_pairs,
@@ -1410,27 +1410,122 @@ def test_dedup_operators_cache_is_bounded(spark, sf_dir):
         simhash_near_duplicates,
     )
 
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    cm.clearCache()
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    small = docs.filter(F.col("doc_id") % 7 == 0)
+    ops = (
+        prefix_filter_jaccard_pairs,
+        containment_prefix_pairs,
+        minhash_near_duplicates,
+        simhash_near_duplicates,
+        ngram_jaccard_pairs,
+    )
 
-    # tier 1: fully leak-free
-    for op in (prefix_filter_jaccard_pairs, containment_prefix_pairs):
-        op(small).count()
-    assert cm.isEmpty(), "an eager dedup operator left a cache entry behind"
+    def persistent_rdds_after(k):
+        for op in ops:
+            op(docs.filter(F.col("doc_id") % k == 0)).count()
+        # eager results are local checkpoints, which stay registered until
+        # the JVM collects them; the caches are the other persisted RDDs
+        rdds = spark._jsc.sc().getPersistentRDDs().values().iterator()
+        n = 0
+        while rdds.hasNext():
+            n += not rdds.next().isCheckpointed()
+        return n
 
-    # tier 2: bounded one-slot caches — a second round of calls must not
-    # add entries on top of the first round's
-    for op in (minhash_near_duplicates, simhash_near_duplicates, ngram_jaccard_pairs):
-        op(small).count()
-    n_rdds_round1 = spark._jsc.sc().getPersistentRDDs().size()
-    for op in (minhash_near_duplicates, simhash_near_duplicates, ngram_jaccard_pairs):
-        op(small).count()
-    n_rdds_round2 = spark._jsc.sc().getPersistentRDDs().size()
+    n_rdds_round1 = persistent_rdds_after(7)
+    n_rdds_round2 = persistent_rdds_after(7)
     assert n_rdds_round2 <= n_rdds_round1, (
         f"dedup caches grew across calls: {n_rdds_round1} -> {n_rdds_round2}"
     )
+    n_rdds_other = persistent_rdds_after(5)
+    assert n_rdds_other <= n_rdds_round1, (
+        f"dedup caches grew on another input: {n_rdds_round1} -> {n_rdds_other}"
+    )
+
+
+def test_set_index_is_shared_by_containment_and_prefix(spark, sf_dir):
+    """Containment then prefix over the same docs: the prefix join reads the
+    set index the containment join cached, so none of its Spark executions
+    reads a parquet file, and its pairs still equal the naive join."""
+    from adventureworkslakehousepoc_spark.catalog import load_tables
+    from adventureworkslakehousepoc_spark.operators.dedup import (
+        containment_prefix_pairs,
+        prefix_filter_jaccard_pairs,
+        word_shingles,
+    )
+    from adventureworkslakehousepoc_spark.plans.audit import capture_plans
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        seq = store.executionsList()
+        return {seq.apply(i).executionId() for i in range(seq.size())}
+
+    def parquet_files_read(eid):
+        # a plan graph also lists the plan that filled each cache it reads;
+        # the metric counts only what this execution's tasks scanned
+        nodes, values = store.planGraph(eid).allNodes(), store.executionMetrics(eid)
+        n = 0
+        for i in range(nodes.size()):
+            node = nodes.apply(i)
+            ms = node.metrics()
+            for k in range(ms.size() if node.name().startswith("Scan parquet") else 0):
+                if ms.apply(k).name() == "number of files read":
+                    v = values.get(ms.apply(k).accumulatorId())
+                    n += int(v.get()) if v.isDefined() else 0
+        return n
+
+    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
+    small = docs.filter(F.col("doc_id") % 3 == 0)
+    with capture_plans() as fragments:
+        containment_prefix_pairs(small)
+        before = execution_ids()
+        pairs = prefix_filter_jaccard_pairs(small)
+        ran = execution_ids() - before
+    plans = [plan for label, plan in fragments if label == "prefix_filter_jaccard_pairs"]
+    assert len(plans) == 1 and "InMemoryTableScan" in plans[0]
+    assert ran and sum(parquet_files_read(e) for e in ran) == 0, "the prefix join re-read its input"
+
+    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs.collect()}
+    sh = {}
+    for r in word_shingles(small).collect():
+        sh.setdefault(r["doc_id"], set()).add(r["sh"])
+    expect = {}
+    for a in sh:
+        for b in sh:
+            if a < b:
+                inter = len(sh[a] & sh[b])
+                j = inter / (len(sh[a]) + len(sh[b]) - inter)
+                if j >= 0.5:
+                    expect[(a, b)] = j
+    assert got == expect
+
+
+def test_fresh_cache_serves_no_stale_input(spark, sf_dir, tmp_path):
+    """A table rewritten in place keeps its plan, so a plan-equal cached
+    frame must still be dropped: the second call returns the new file's
+    pairs, none of the old ids."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from adventureworkslakehousepoc_spark.catalog import load_tables
+    from adventureworkslakehousepoc_spark.operators.dedup import (
+        containment_prefix_pairs,
+        minhash_near_duplicates,
+    )
+
+    src = pq.read_table(f"{sf_dir}/documents.parquet")
+    i = src.schema.get_field_index("doc_id")
+
+    def ids_after_rewrite(op, offset):
+        shifted = src.set_column(i, "doc_id", pc.add(src["doc_id"], offset))
+        pq.write_table(shifted, tmp_path / "documents.parquet")
+        docs = load_tables(spark, str(tmp_path), ("documents",))["documents"]
+        return {i for r in op(docs).collect() for i in (r["doc_a"], r["doc_b"])}
+
+    for op in (minhash_near_duplicates, containment_prefix_pairs):
+        assert ids_after_rewrite(op, 1_000_000)
+        got = ids_after_rewrite(op, 2_000_000)
+        assert got and min(got) >= 2_000_000, f"{op.__name__} served stale ids"
 
 
 def test_winsorize_excludes_nulls(spark):

@@ -84,6 +84,8 @@ def test_foreach_batch_upsert_incremental_batches(spark, sf_dir):
         for r in cf.latest_snapshot(spark, ["c_custkey"]).collect()
     }
     assert got == expected
+    # each batch's snapshot is swapped in whole: no staging copy is left
+    assert sorted(os.listdir(os.path.dirname(state_dir))) == ["state"]
 
 
 def test_apply_in_pandas_with_state_running_counts(spark, sf_dir):
