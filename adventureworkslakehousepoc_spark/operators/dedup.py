@@ -48,6 +48,7 @@ from __future__ import annotations
 
 from urllib.parse import unquote, urlparse
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -60,6 +61,7 @@ __all__ = [
     "word_shingles",
     "doc_shingle_arrays",
     "minhash_signatures",
+    "cached_signatures",
     "lsh_candidate_pairs",
     "band_selectivity_curve",
     "minhash_estimate_calibration",
@@ -429,13 +431,18 @@ def _fresh_cache(key: str, df: DataFrame) -> DataFrame:
     still substitute it into the new plan. The slot mutation is guarded by
     a process-wide lock so concurrent callers (e.g. parallel pytest workers
     sharing one session) cannot interleave unpersist/persist on the same
-    key."""
+    key. A hit whose frame something outside the slot uncached (a
+    ``spark.catalog.clearCache()``) is persisted again before it is
+    served."""
     versions = _input_versions(df)
     with _CACHE_LOCK:
         prev, prev_versions = _LAST_CACHED.get(key, (None, None))
         if prev is not None:
             try:
                 if prev_versions == versions and prev.sameSemantics(df):
+                    if prev.storageLevel == StorageLevel.NONE:
+                        # dropped outside the slot (clearCache): cache again
+                        prev.persist()
                     record_plan(key, prev)  # consumer plans only show the
                     return prev  # InMemoryTableScan — surface the cached tree
             except Exception:
@@ -486,12 +493,22 @@ def minhash_near_duplicates(
         "minhash_doc_arrays",
         doc_shingle_arrays(docs, text_col, id_col, shingle_n),
     )
-    sigs = minhash_signatures(
-        arrs.select("doc_id", F.explode("shs").alias("sh")), num_hashes
-    )
-    pairs = lsh_candidate_pairs(sigs, bands, rows_per_band)
+    pairs = lsh_candidate_pairs(cached_signatures(arrs, num_hashes), bands, rows_per_band)
     return _fresh_cache(
         "minhash_pairs", _jaccard_verify(pairs, arrs, threshold)
+    )
+
+
+def cached_signatures(arrs: DataFrame, num_hashes: int = 16) -> DataFrame:
+    """``minhash_signatures`` of ``(doc_id, shs)`` shingle arrays, held in the
+    one-slot ``minhash_signatures`` cache. The LSH band self-join reads its
+    input twice, once on the probe side and once under the broadcast, so an
+    uncached signature frame runs the 4-md5-per-shingle aggregate twice per
+    call. Every caller over the ``minhash_doc_arrays`` slot shares this key:
+    their plans are equal, so they hit one CacheManager entry anyway."""
+    return _fresh_cache(
+        "minhash_signatures",
+        minhash_signatures(arrs.select("doc_id", F.explode("shs").alias("sh")), num_hashes),
     )
 
 

@@ -3651,9 +3651,9 @@ def dedup_containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import (
         _fresh_cache,
         _pair_overlap,
+        cached_signatures,
         doc_shingle_arrays,
         lsh_candidate_pairs,
-        minhash_signatures,
     )
 
     # one-slot cache (see operators/dedup.py): the LSH containment pair
@@ -3667,11 +3667,10 @@ def dedup_containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16: shares the per-doc shingle-set ARRAY frame with the minhash
     # family (one corpus shuffle); the intersection counts come from the
     # shared pair-overlap verify (two pair-keyed joins, one array
-    # intersection per candidate).
+    # intersection per candidate). The signatures sit in the minhash
+    # family's signature slot, for the same reason.
     arrs = _fresh_cache("minhash_doc_arrays", doc_shingle_arrays(_docs(spark, sf_dir)))
-    pairs = lsh_candidate_pairs(
-        minhash_signatures(arrs.select("doc_id", F.explode("shs").alias("sh")))
-    )
+    pairs = lsh_candidate_pairs(cached_signatures(arrs))
     return (
         _pair_overlap(pairs, arrs, arrs)
         .select(

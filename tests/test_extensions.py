@@ -1528,6 +1528,67 @@ def test_fresh_cache_serves_no_stale_input(spark, sf_dir, tmp_path):
         assert got and min(got) >= 2_000_000, f"{op.__name__} served stale ids"
 
 
+def test_fresh_cache_recaches_a_slot_dropped_outside_it(spark, sf_dir):
+    """After ``clearCache()`` the slot's frame is no longer cached; the next
+    call on the same input must cache it again instead of serving it
+    uncached, which would re-run the corpus pass on every later call."""
+    from pyspark import StorageLevel
+
+    from adventureworkslakehousepoc_spark.catalog import load_tables
+    from adventureworkslakehousepoc_spark.operators.dedup import (
+        _LAST_CACHED,
+        minhash_near_duplicates,
+    )
+
+    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
+    minhash_near_duplicates(docs).count()
+    spark.catalog.clearCache()
+    minhash_near_duplicates(docs).count()
+    minhash_near_duplicates(docs).count()
+    assert _LAST_CACHED["minhash_doc_arrays"][0].storageLevel != StorageLevel.NONE
+
+
+def _signature_aggregate_runs(spark, df) -> int:
+    """Partial MinHash signature aggregates in the executed plan of a
+    collected frame, each cached plan counted once however many scans read
+    it: the number of times one execution computes the signatures."""
+    jvm = spark._jvm
+    seen, runs, stack = set(), 0, [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif name == "InMemoryTableScanExec":
+            builder = node.relation().cacheBuilder()
+            if jvm.System.identityHashCode(builder) not in seen:
+                seen.add(jvm.System.identityHashCode(builder))
+                stack.append(builder.cachedPlan())
+        else:
+            if name.endswith("AggregateExec"):
+                runs += "partial_min(substring(md5" in node.aggregateExpressions().toString()
+            children = node.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+    return runs
+
+
+def test_minhash_signatures_aggregate_once_per_call(spark, sf_dir):
+    """The LSH band self-join reads the signature frame on both sides; both
+    MinHash callers hold it in one cached slot, so a call computes the
+    16-lane aggregate once, not once per join side."""
+    from adventureworkslakehousepoc_spark.catalog import load_tables
+    from adventureworkslakehousepoc_spark.operators.dedup import minhash_near_duplicates
+    from adventureworkslakehousepoc_spark.queries.extensions import dedup_containment_pairs_q
+
+    spark.catalog.clearCache()
+    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
+    for df in (minhash_near_duplicates(docs), dedup_containment_pairs_q(spark, sf_dir)):
+        assert df.collect()
+        assert _signature_aggregate_runs(spark, df) == 1
+
+
 def test_winsorize_excludes_nulls(spark):
     """NULL values carry no rank in the bounds computation, so they must
     not count in the join-back either: greatest/least skip NULLs, and an
