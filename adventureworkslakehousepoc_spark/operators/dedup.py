@@ -10,17 +10,21 @@ containment query) are built from ``doc_shingle_arrays`` — one per-doc sorted
 set array, one corpus shuffle — and five private helpers, each owning one
 invariant:
 - ``_pair_overlap``: the ONLY place two sets are intersected; each pair end
-  reads its own side's array, and the counts come back as bigints.
-- ``_set_families``: identical sets collapse to one representative (min id)
-  by a digest of the sorted set, so joins run over DISTINCT sets.
-- ``_family_pairs``: representative verdicts expand over family members with
-  ``doc_a < doc_b`` re-established and id-tied columns swapped along.
+  reads its own side's array, the counts come back as bigints, and over the
+  family index they are bound once, so a threshold never re-intersects.
+- ``_set_index``: the family index of one input — one row per DISTINCT
+  shingle set ``(doc_id = min member, shs, hs, members)`` plus its rank
+  arrays, built in one corpus pass and held in two one-slot caches that are
+  reused only while the plan AND its input files are unchanged — the
+  containment, prefix-filter and calibration joins over the same docs pay
+  the corpus pass once.
+- ``_member_pairs``: representative verdicts expand over the carried
+  ``members`` arrays with ``doc_a < doc_b`` re-established and id-tied
+  columns swapped along — explodes, no join.
+- ``_intra_family_pairs``: member pairs within one family, each member
+  paired with the slice of ``members`` after it.
 - ``_rarity_arrays``: each set as one array in the global rarest-first order,
   so a prefix is a slice and ``posexplode`` yields global ranks.
-- ``_set_index``: one input's families, representative sets and rank
-  arrays, built once and held in one-slot caches that are reused only while
-  the plan AND its input files are unchanged — the containment and
-  prefix-filter joins over the same docs pay the corpus pass once.
 LSH banding is ``_band_keys``, shared by the self-join and the incremental
 join.
 
@@ -223,7 +227,13 @@ def doc_shingle_arrays(
     )
 
 
-def _pair_overlap(pairs: DataFrame, arrays_a: DataFrame, arrays_b: DataFrame) -> DataFrame:
+def _pair_overlap(
+    pairs: DataFrame,
+    arrays_a: DataFrame,
+    arrays_b: DataFrame,
+    set_col: str = "shs",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
     """Exact set overlap of candidate pairs: ``pairs`` (with ``doc_a``,
     ``doc_b``) keeps its columns and gains bigint ``n_inter`` = |A∩B|,
     ``n_a`` = |A| and ``n_b`` = |B|. ``doc_a`` looks up its set in
@@ -234,26 +244,42 @@ def _pair_overlap(pairs: DataFrame, arrays_a: DataFrame, arrays_b: DataFrame) ->
     The one verify step of every set-similarity join here: two equi-joins
     on the pair ids (candidate-bounded volume, no shingle-stream shuffle)
     and one codegen'd intersection of two ``collect_set``-built arrays,
-    which are sets by construction."""
-    da = arrays_a.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("_shs_a"))
-    db = arrays_b.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("_shs_b"))
-    return (
-        pairs.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select(
-            *pairs.columns,
-            F.size(F.array_intersect("_shs_a", "_shs_b")).cast("bigint").alias("n_inter"),
-            F.size("_shs_a").cast("bigint").alias("n_a"),
-            F.size("_shs_b").cast("bigint").alias("n_b"),
+    which are sets by construction.
+
+    Over the family index (``_set_index``) ``set_col`` names the array to
+    intersect (``shs`` or ``hs``) and each end also brings the ``carry``
+    columns, suffixed ``_a``/``_b`` (``members`` for ``_member_pairs``).
+    The counts are then bound once by a one-row ``inline``: a threshold on
+    ``n_inter`` cannot be pushed below the generator into the join
+    condition, where the intersection would run a second time."""
+    ends = [
+        arrays.select(
+            F.col("doc_id").alias(f"doc_{e}"), F.col(set_col).alias(f"_shs_{e}"),
+            *[F.col(c).alias(f"{c}_{e}") for c in carry],
         )
+        for e, arrays in (("a", arrays_a), ("b", arrays_b))
+    ]
+    joined = pairs.join(ends[0], "doc_a").join(ends[1], "doc_b")
+    counts = (
+        F.size(F.array_intersect("_shs_a", "_shs_b")).cast("bigint").alias("n_inter"),
+        F.size("_shs_a").cast("bigint").alias("n_a"),
+        F.size("_shs_b").cast("bigint").alias("n_b"),
+    )
+    if not carry:
+        return joined.select(*pairs.columns, *counts)
+    return joined.select(
+        *pairs.columns, *[f"{c}_{e}" for c in carry for e in "ab"],
+        F.inline(F.array(F.struct(*counts))),
     )
 
 
 def _jaccard_at_least(overlap: DataFrame, threshold: float) -> DataFrame:
     """``(doc_a, doc_b, jaccard)`` for the ``_pair_overlap`` rows whose exact
-    Jaccard |A∩B| / (|A|+|B|−|A∩B|) (one double division) is ≥ ``threshold``."""
+    Jaccard |A∩B| / (|A|+|B|−|A∩B|) (one double division) is ≥ ``threshold``;
+    family-index rows keep their ``members_a``/``members_b``."""
     jaccard = F.col("n_inter").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-    return overlap.select("doc_a", "doc_b", jaccard.alias("jaccard")).filter(
+    kept = [c for c in overlap.columns if c not in ("n_inter", "n_a", "n_b")]
+    return overlap.select(*kept, jaccard.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
 
@@ -264,77 +290,48 @@ def _jaccard_verify(pairs: DataFrame, doc_arrays: DataFrame, threshold: float) -
     return _jaccard_at_least(_pair_overlap(pairs, doc_arrays, doc_arrays), threshold)
 
 
-def _set_families(doc_arrays: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Identical-set family collapse: ``(fams, reps, rep_arrays)``.
-
-    ``fams`` is ``doc_arrays`` plus ``sig``, the md5 digest of the sorted
-    set (a projection of the arrays, no corpus shuffle); ``reps`` is
-    ``(sig, rep_id)``, the min doc id per family; ``rep_arrays`` is the
-    ``(doc_id, shs)`` rows of the representatives only, read off ``fams``.
-    On a duplicate-heavy corpus every copy floods every collision list, so
-    candidate generation and verification run over ``rep_arrays`` —
-    compute quadratic only in DISTINCT sets — and ``_family_pairs`` expands
-    the verdicts back.
-
-    Nothing is persisted here: ``_set_index`` holds ``fams`` (the one frame
-    that carries every doc's set, so the corpus shuffle runs once) and
-    ``rep_arrays`` in one-slot caches."""
-    fams = doc_arrays.withColumn(
-        "sig", F.md5(F.concat_ws("\u0001", F.col("shs").cast("array<string>")))
-    )
-    reps = fams.groupBy("sig").agg(F.min("doc_id").alias("rep_id"))
-    rep_arrays = fams.join(reps.select(F.col("rep_id").alias("doc_id")), "doc_id").select(
-        "doc_id", "shs"
-    )
-    return fams, reps, rep_arrays
-
-
-def _family_pairs(
-    rep_pairs: DataFrame,
-    fams: DataFrame,
-    reps: DataFrame,
-    oriented: tuple[tuple[str, str], ...] = (),
-) -> tuple[DataFrame, DataFrame]:
-    """Expand representative verdicts over family members: ``(cross, intra)``.
-
-    ``cross`` is every ``rep_pairs`` row (representative ``doc_a < doc_b``)
-    repeated for each member pair of the two families, re-keyed so
-    ``doc_a < doc_b`` holds for the members; the other columns carry over
-    verbatim — every quantity here is a function of the two SETS only.
-    ``oriented`` names column pairs tied to the id order (``n_a``/``n_b``):
-    when the member ids come out swapped, so do those values.
-
-    ``intra`` is ``(doc_a, doc_b, sig)``, every member pair WITHIN one
-    family (identical sets); each caller adds its own constant columns."""
-    ra = reps.select(F.col("rep_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    rb = reps.select(F.col("rep_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    ma = fams.select(F.col("sig").alias("sig_a"), F.col("doc_id").alias("m_a"))
-    mb = fams.select(F.col("sig").alias("sig_b"), F.col("doc_id").alias("m_b"))
+def _member_pairs(
+    rep_pairs: DataFrame, oriented: tuple[tuple[str, str], ...] = ()
+) -> DataFrame:
+    """Expand representative verdicts over family members: every
+    ``rep_pairs`` row (representatives ``doc_a < doc_b``, each end's family
+    in ``members_a``/``members_b`` from ``_pair_overlap``) repeated for each
+    member pair of the two families, re-keyed so ``doc_a < doc_b`` holds
+    for the members. Two explodes of the carried arrays, no join. The other
+    columns carry over verbatim — every quantity here is a function of the
+    two SETS only. ``oriented`` names column pairs tied to the id order
+    (``n_a``/``n_b``): when the member ids come out swapped, so do those
+    values."""
     in_order = F.col("m_a") < F.col("m_b")
-    carried = {c: F.col(c) for c in rep_pairs.columns if c not in ("doc_a", "doc_b")}
+    carried = {
+        c: F.col(c) for c in rep_pairs.columns
+        if c not in ("doc_a", "doc_b", "members_a", "members_b")
+    }
     for x, y in oriented:
         carried[x] = F.when(in_order, F.col(x)).otherwise(F.col(y))
         carried[y] = F.when(in_order, F.col(y)).otherwise(F.col(x))
-    cross = (
-        rep_pairs.join(ra, "doc_a")
-        .join(rb, "doc_b")
-        .join(ma, "sig_a")
-        .join(mb, "sig_b")
+    return (
+        rep_pairs.select("*", F.explode("members_a").alias("m_a"))
+        .select("*", F.explode("members_b").alias("m_b"))
         .select(
             F.least("m_a", "m_b").alias("doc_a"),
             F.greatest("m_a", "m_b").alias("doc_b"),
             *[col.alias(c) for c, col in carried.items()],
         )
     )
-    f1, f2 = fams.alias("f1"), fams.alias("f2")
-    intra = f1.join(
-        f2, (F.col("f1.sig") == F.col("f2.sig")) & (F.col("f1.doc_id") < F.col("f2.doc_id"))
-    ).select(
-        F.col("f1.doc_id").alias("doc_a"),
-        F.col("f2.doc_id").alias("doc_b"),
-        F.col("f1.sig").alias("sig"),
+
+
+def _intra_family_pairs(index: DataFrame) -> DataFrame:
+    """Every member pair WITHIN one family of the family index (identical
+    sets): ``doc_a``/``doc_b`` next to the family's index row. ``members``
+    is sorted, so pairing the member at position i with the slice after it
+    yields each pair once with ``doc_a < doc_b`` — a posexplode and an
+    explode per family, no self-join."""
+    return (
+        index.filter(F.size("members") > 1)
+        .select("*", F.posexplode("members").alias("_i", "doc_a"))
+        .select("*", F.explode(F.expr("slice(members, _i + 2, size(members))")).alias("doc_b"))
     )
-    return cross, intra
 
 
 def _rarity_arrays(rep_arrays: DataFrame) -> DataFrame:
@@ -361,25 +358,45 @@ def _rarity_arrays(rep_arrays: DataFrame) -> DataFrame:
 
 
 def _set_index(
-    docs: DataFrame, text_col: str, id_col: str, shingle_n: int, hashed: bool
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """The set index of one docs frame, built once and shared by every
-    set-similarity join over it: ``(fams, reps, rep_sets, rank_arrays)``
-    from ``_set_families`` over ``doc_shingle_arrays`` and
-    ``_rarity_arrays`` over the representatives. ``fams``, ``rep_sets``
-    and ``rank_arrays`` each sit in their own ``_fresh_cache`` slot (keyed
-    by the shingle flavour), so a second join over the same unchanged input
-    reads all three from memory instead of re-running the corpus shuffle,
-    the family collapse and the rarity order. Callers must materialize
-    their results before returning: the next call on another input evicts
-    the slots."""
-    key = "hashed_sets" if hashed else "sets"
-    fams, reps, rep_sets = _set_families(
-        doc_shingle_arrays(docs, text_col, id_col, shingle_n, hashed=hashed)
+    docs: DataFrame, text_col: str, id_col: str, shingle_n: int
+) -> tuple[DataFrame, DataFrame]:
+    """The family index of one docs frame, built in one corpus pass and
+    shared by every set-similarity join over it: ``(index, ranks)``.
+
+    ``index`` has one row per DISTINCT shingle set: ``(doc_id, shs, hs,
+    members)``, where ``members`` is the sorted array of the ids sharing
+    the set and ``doc_id`` its first (min) id, the family representative.
+    ``shs`` is the string set from ``doc_shingle_arrays``; ``hs`` is its
+    sorted ``xxhash64`` projection — the same values
+    ``word_shingles(hashed=True)`` gives, 8-byte ints for joins that only
+    need shingle identity. On a duplicate-heavy corpus every copy floods
+    every collision list, so candidate generation and verification run over
+    representatives only — compute quadratic only in DISTINCT sets — and
+    ``_member_pairs``/``_intra_family_pairs`` expand the verdicts from the
+    carried ``members`` arrays. Only the ids are grouped by the set digest;
+    the representative's set joins back, so the set arrays never cross the
+    family shuffle. ``ranks`` is ``_rarity_arrays`` over ``hs``.
+
+    Each sits in its own ``_fresh_cache`` slot, so a second join over the
+    same unchanged input reads both from memory instead of re-running the
+    corpus shuffle, the family collapse and the rarity order. Callers must
+    materialize their results before returning: the next call on another
+    input evicts the slots."""
+    # a null id is in no pair (doc_a < doc_b); dropping it up front also
+    # gives both branches below one plan, so they share the corpus shuffle
+    arrs = doc_shingle_arrays(docs.filter(F.col(id_col).isNotNull()), text_col, id_col, shingle_n)
+    families = arrs.groupBy(F.md5(F.concat_ws("\u0001", "shs")).alias("sig")).agg(
+        F.array_sort(F.collect_list("doc_id")).alias("members")
     )
-    fams = _fresh_cache(f"{key}_families", fams)
-    rep_sets = _fresh_cache(f"{key}_rep_sets", rep_sets)
-    return fams, reps, rep_sets, _fresh_cache(f"{key}_ranks", _rarity_arrays(rep_sets))
+    index = families.select(F.col("members")[0].alias("doc_id"), "members").join(
+        arrs, "doc_id"
+    ).select(
+        "doc_id", "shs", F.expr("array_sort(transform(shs, s -> xxhash64(s)))").alias("hs"),
+        "members",
+    )
+    index = _fresh_cache("set_families", index)
+    ranks = _rarity_arrays(index.select("doc_id", F.col("hs").alias("shs")))
+    return index, _fresh_cache("set_ranks", ranks)
 
 
 # One-slot cache registry: high-traffic operators persist a corpus-scale
@@ -1211,16 +1228,18 @@ def prefix_filter_jaccard_pairs(
     integer arithmetic in every engine. Verification is the exact Jaccard
     over candidate pairs only."""
     threshold = t_num / t_den
-    # hashed=True: every exchange/sort below carries 8-byte shingle ids, not
-    # ~6n-byte strings — output is counts only, so identity is all that
-    # matters (word_shingles documents the 2^-64 collision trade)
+    # hashed sets (the index's ``hs``): every exchange/sort below carries
+    # 8-byte shingle ids, not ~6n-byte strings — output is counts only, so
+    # identity is all that matters (word_shingles documents the 2^-64
+    # collision trade)
     #
     # ONE corpus shuffle (r15, guide §2.4): the raw shingle stream folds
     # straight into a per-doc sorted distinct ARRAY, and everything
     # downstream derives from it without touching the corpus again: the
-    # family digest, set sizes, the rarity order and the verification sets.
-    # The set index is shared with containment_prefix_pairs over the same
-    # input, so a second join pays none of it again.
+    # family collapse, set sizes, the rarity order and the verification
+    # sets. The family index is shared with containment_prefix_pairs and
+    # minhash_estimate_calibration over the same input, so a second join
+    # pays none of it again.
     #
     # Prefix filtering assumes an exact-deduped input — on a duplicate-heavy
     # corpus identical sets flood every prefix collision list and the
@@ -1229,7 +1248,7 @@ def prefix_filter_jaccard_pairs(
     # verified pairs expand back over family members at the end: output
     # identical to the naive all-pairs join, compute quadratic only in
     # DISTINCT similar sets.
-    fams, reps, rep_arrays, doc_arr = _set_index(docs, text_col, id_col, shingle_n, hashed=True)
+    index, doc_arr = _set_index(docs, text_col, id_col, shingle_n)
     # p = n − ceil(t·n) + 1, with ceil(n·num/den) = (n·num + den − 1) div den
     pfx_len = (
         F.col("n_sh")
@@ -1277,9 +1296,9 @@ def prefix_filter_jaccard_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    rep_pairs = _jaccard_verify(cands, rep_arrays, threshold)
-    cross, intra = _family_pairs(rep_pairs, fams, reps)
-    out = cross.unionByName(intra.select("doc_a", "doc_b", F.lit(1.0).alias("jaccard")))
+    rep_pairs = _jaccard_at_least(_pair_overlap(cands, index, index, "hs", ("members",)), threshold)
+    intra = _intra_family_pairs(index).select("doc_a", "doc_b", F.lit(1.0).alias("jaccard"))
+    out = _member_pairs(rep_pairs).unionByName(intra)
     # verified-pair-list-sized; eager so the result never reads a set-index
     # slot that the next call on another input evicts
     return eager_checkpoint(out, "prefix_filter_jaccard_pairs")
@@ -1347,11 +1366,11 @@ def containment_prefix_pairs(
     # arrays, candidate generation, verification) is bounded by DISTINCT
     # sets, which is what keeps the copy-heavy 30x probe linear. The
     # rank-order frame serves prefix extraction and the full-side candidate
-    # explosion, while pair verification intersects the original
-    # collect_set arrays off rep_sets (measured 1.15 -> 0.79 s on the
-    # candidate verify at sf0.1 vs intersecting the transform-built arrays,
-    # r16). All of it is the set index prefix_filter_jaccard_pairs shares.
-    fams, reps, rep_sets, doc_arr = _set_index(docs, text_col, id_col, shingle_n, hashed=True)
+    # explosion, while pair verification intersects the index's sorted
+    # ``hs`` arrays, not the rank-order ``arr`` (intersecting those measured
+    # 1.15 vs 0.79 s on the candidate verify at sf0.1, r16). All of it is
+    # the family index prefix_filter_jaccard_pairs shares.
+    index, doc_arr = _set_index(docs, text_col, id_col, shingle_n)
     # t_a = ⌈t·n⌉ (the overlap a qualifying pair must reach on its smaller
     # side), prefix length p = n − t_a + 1, with ⌈n·num/den⌉ =
     # (n·num + den − 1) div den. posexplode positions are 0-based GLOBAL
@@ -1403,7 +1422,7 @@ def containment_prefix_pairs(
     )
     # pair verification at PAIR-LIST scale (_pair_overlap): the shingle
     # table itself never shuffles again.
-    rep_pairs = _pair_overlap(cands, rep_sets, rep_sets).filter(
+    rep_pairs = _pair_overlap(cands, index, index, "hs", ("members",)).filter(
         # compare the rational directly — flooring to micros first loses
         # exactness whenever t_num·10^6 is not divisible by t_den (e.g.
         # t=1/3 would reject a pair with containment exactly 1/3); the
@@ -1415,17 +1434,11 @@ def containment_prefix_pairs(
     # member pair inherits its representatives' (n_inter, n_a, n_b), with
     # n_a/n_b following the member ids; intra-family pairs are identical
     # sets, containment 1.0 at the family's set size
-    cross, intra = _family_pairs(rep_pairs, fams, reps, oriented=(("n_a", "n_b"),))
-    set_sizes = rep_sets.select(
-        F.col("doc_id").alias("rep_id"), F.size("shs").cast("bigint").alias("n_set")
+    n_set = F.size("hs").cast("bigint")
+    intra = _intra_family_pairs(index).select(
+        "doc_a", "doc_b", n_set.alias("n_inter"), n_set.alias("n_a"), n_set.alias("n_b")
     )
-    intra = intra.join(reps.join(set_sizes, "rep_id"), "sig").select(
-        "doc_a",
-        "doc_b",
-        F.col("n_set").alias("n_inter"),
-        F.col("n_set").alias("n_a"),
-        F.col("n_set").alias("n_b"),
-    )
+    cross = _member_pairs(rep_pairs, oriented=(("n_a", "n_b"),))
     out = cross.unionByName(intra).select(
         "*",
         F.expr("(n_inter * 1000000) div n_a").alias("containment_a_micros"),
@@ -1497,39 +1510,36 @@ def minhash_estimate_calibration(
     per COPY pair — measured 136 s on the 30× probe vs ~linear after. The
     representative-level joins are candidate-pair-scale (AQE broadcasts the
     pair side); the families and representative sets are the one-slot
-    cached set index (``_set_index``) over the string shingle arrays.
+    cached family index (``_set_index``), read on its string sets.
     """
-    # the set index over the string shingle arrays (the family digest is a
-    # projection of the arrays, no second corpus-scale groupBy); its
-    # rarest-first order is not read here
-    fams, reps, rep_arrs, _ = _set_index(docs, text_col, id_col, shingle_n, hashed=False)
-    # signature stream explodes off the cached representative arrays -
-    # a map, no exchange; the groupBy below partial-aggregates so only
-    # per-doc partials cross the wire. sigs is referenced three times
-    # (banding + both lane joins), each under a different required
-    # distribution, so no exchange reuse applies - persist the
-    # doc-count-scale frame instead of re-running the 4-md5-per-shingle
-    # hot loop per reference.
-    sigs = minhash_signatures(
-        rep_arrs.select("doc_id", F.explode("shs").alias("sh")), num_hashes
+    # the family index over the string shingle sets; its rarest-first
+    # order is not read here
+    index, _ = _set_index(docs, text_col, id_col, shingle_n)
+    # signature stream explodes off the cached representative sets - a map,
+    # no exchange; the groupBy partial-aggregates so only per-doc partials
+    # cross the wire. The signatures join the index once and that frame is
+    # persisted: banding reads its lanes, and the pair verify reads each
+    # end's lanes, set and members through one join per end, instead of
+    # the 4-md5-per-shingle hot loop running once per reference.
+    lanes = [f"h{s}" for s in range(num_hashes)]
+    reps = index.join(
+        minhash_signatures(index.select("doc_id", F.explode("shs").alias("sh")), num_hashes),
+        "doc_id",
     ).persist()
     try:
-        pairs = lsh_candidate_pairs(sigs, bands, rows_per_band)
+        pairs = lsh_candidate_pairs(reps.select("doc_id", *lanes), bands, rows_per_band)
         n_matching = sum(
-            F.when(F.col(f"x.h{s}") == F.col(f"y.h{s}"), 1).otherwise(0)
-            for s in range(num_hashes)
-        )
-        lanes = (
-            pairs.join(sigs.alias("x"), F.col("doc_a") == F.col("x.doc_id"))
-            .join(sigs.alias("y"), F.col("doc_b") == F.col("y.doc_id"))
-            .select("doc_a", "doc_b", n_matching.cast("int").alias("n_matching_lanes"))
+            F.when(F.col(f"{h}_a") == F.col(f"{h}_b"), 1).otherwise(0) for h in lanes
         )
         # a candidate without shingles cannot exist (signatures derive from
         # shingles), so the overlap joins are inner and a shared-nothing
         # pair reads n_inter = 0 exactly
-        rep_report = _pair_overlap(lanes, rep_arrs, rep_arrs).select(
+        overlap = _pair_overlap(pairs, reps, reps, carry=("members", *lanes))
+        rep_report = overlap.withColumn("n_matching_lanes", n_matching.cast("int")).select(
             "doc_a",
             "doc_b",
+            "members_a",
+            "members_b",
             "n_matching_lanes",
             F.expr(
                 f"(n_matching_lanes * cast(1000000 as bigint)) div {num_hashes}"
@@ -1543,21 +1553,20 @@ def minhash_estimate_calibration(
         # verbatim; intra-family pairs are identical sets → every lane
         # matches, Jaccard exactly 1 — always LSH candidates (all bands
         # collide)
-        cross, intra = _family_pairs(rep_report, fams, reps)
-        intra = intra.select(
+        intra = _intra_family_pairs(index).select(
             "doc_a",
             "doc_b",
             F.lit(num_hashes).cast("int").alias("n_matching_lanes"),
             F.lit(1000000).cast("bigint").alias("est_jaccard_micros"),
             F.lit(1000000).cast("bigint").alias("exact_jaccard_micros"),
         )
-        out = cross.unionByName(intra).withColumn(
+        out = _member_pairs(rep_report).unionByName(intra).withColumn(
             "err_micros",
             F.col("est_jaccard_micros") - F.col("exact_jaccard_micros"),
         )
         return eager_checkpoint(out, "minhash_estimate_calibration")
     finally:
-        sigs.unpersist()
+        reps.unpersist()
 
 
 def soft_dedup_weights(

@@ -286,9 +286,12 @@ def weighted_systematic_sample(
     base = df.select(
         F.col(id_col).alias("doc_id"), F.col(weight_col).cast("bigint").alias("w")
     )
-    maxid = base.agg((F.max("doc_id") + 1).alias("n_ids"))
+    # floor(doc_id · n_buckets / n_ids) in decimal: exact and monotone in
+    # doc_id for every bigint key (the bigint product overflows near 2^62)
+    maxid = base.agg((F.max("doc_id").cast("decimal(20,0)") + 1).alias("n_ids"))
     bucketed = base.crossJoin(F.broadcast(maxid)).withColumn(
-        "bucket", F.expr(f"(doc_id * {n_buckets}) div n_ids").cast("int")
+        "bucket",
+        F.expr(f"(cast(doc_id as decimal(20,0)) * {n_buckets}) div n_ids").cast("int"),
     )
     wb = Window.partitionBy("bucket").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -3,11 +3,13 @@
 warm-up + min-of-N, inter-rep GC, per-query job descriptions, the Spark
 jobs each build started (status-store job ids before and after the builder
 call: schema inference, eager checkpoints, streaming runs at build time),
-and the shuffle bytes written by the jobs each build and execute started.
+the shuffle bytes written by the jobs each build and execute started, and
+the memory plus disk the persisted RDDs hold after each call (operator
+caches, local checkpoints).
 
 Usage: python scripts/probe_query.py [-n N] <query> [<query> ...]
-Prints per query: warm-up and rep seconds, build_jobs=<warm-up>/<reps> and
-shuffle_mb=<warm-up>/<reps>.
+Prints per query: warm-up and rep seconds, build_jobs=<warm-up>/<reps>,
+shuffle_mb=<warm-up>/<reps> and cached_mb=<warm-up>/<reps>.
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 """
 
@@ -50,6 +52,12 @@ def shuffle_mb(spark, first_job: int, last_job: int, since_ms: int) -> float:
     return written / 1e6
 
 
+def cached_mb(spark) -> float:
+    """Memory plus disk MB held by the persisted RDDs right now."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(i.memSize() + i.diskSize() for i in infos) / 1e6
+
+
 def main() -> None:
     args = sys.argv[1:]
     n = 3
@@ -65,7 +73,7 @@ def main() -> None:
     queries = entry_mod.queries()
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
     for name in args:
-        def once() -> tuple[float, int, float]:
+        def once() -> tuple[float, int, float, float]:
             t0 = time.perf_counter()
             since_ms = int(time.time() * 1000)
             j0 = newest_job_id(spark)
@@ -73,23 +81,25 @@ def main() -> None:
             build_jobs = newest_job_id(spark) - j0
             df.write.format("noop").mode("overwrite").save()
             mb = shuffle_mb(spark, j0 + 1, newest_job_id(spark), since_ms)
-            return time.perf_counter() - t0, build_jobs, mb
+            return time.perf_counter() - t0, build_jobs, mb, cached_mb(spark)
 
         spark.sparkContext.setJobDescription(f"probe: {name}")
-        warm, warm_jobs, warm_mb = once()
-        reps, jobs, mbs = [], [], []
+        warm, warm_jobs, warm_mb, warm_cached = once()
+        reps, jobs, mbs, cached = [], [], [], []
         for _ in range(n):
-            s, j, mb = once()
+            s, j, mb, c = once()
             reps.append(s)
             jobs.append(j)
             mbs.append(mb)
+            cached.append(c)
             spark._jvm.System.gc()
         spark.sparkContext.setJobDescription(None)
         print(
             f"{name}: warm={warm:.3f} min={min(reps):.3f} reps="
             + ",".join(f"{r:.3f}" for r in reps)
             + f" build_jobs={warm_jobs}/" + ",".join(map(str, jobs))
-            + f" shuffle_mb={warm_mb:.3f}/" + ",".join(f"{m:.3f}" for m in mbs),
+            + f" shuffle_mb={warm_mb:.3f}/" + ",".join(f"{m:.3f}" for m in mbs)
+            + f" cached_mb={warm_cached:.3f}/" + ",".join(f"{c:.3f}" for c in cached),
             flush=True,
         )
 

@@ -1115,6 +1115,32 @@ def test_weighted_systematic_sample_exact_and_partition_invariant(spark):
     assert hv[999] >= 40  # 100000 / (100000 + ~11000) of 50 probes
 
 
+def test_weighted_systematic_sample_keys_near_int64_max(spark):
+    """Keys near 2^62 (and the largest bigint) must not overflow the id
+    bucketing: the sample equals a pure-Python systematic sample — rows in
+    id order, probe count f(x) = ((2n·x div W) + 1) div 2, multiplicity
+    f(cum_end) − f(cum_start)."""
+    from adventureworkslakehousepoc_spark.operators.sampling import (
+        weighted_systematic_sample,
+    )
+
+    rows = [((1 << 62) + i * 7919, 10 + (i * 37) % 90) for i in range(200)]
+    rows.append(((1 << 63) - 1, 500))
+    n, total = 50, sum(w for _, w in rows)
+
+    def probes(x):
+        return ((2 * n * x) // total + 1) // 2
+
+    want, cum = set(), 0
+    for doc_id, w in sorted(rows):
+        if probes(cum + w) > probes(cum):
+            want.add((doc_id, w, cum, probes(cum + w) - probes(cum)))
+        cum += w
+    df = spark.createDataFrame(rows, "doc_id bigint, n_chars bigint")
+    got = {tuple(r) for r in weighted_systematic_sample(df, "n_chars", n_picks=n).collect()}
+    assert got == want and sum(r[3] for r in got) == n
+
+
 def test_pagerank_hub_outranks_leaves(spark):
     """On a star graph the center must outrank every leaf; ranks are exact
     integers and partition-invariant."""
@@ -1442,12 +1468,14 @@ def test_dedup_operators_cache_is_bounded(spark, sf_dir):
 
 
 def test_set_index_is_shared_by_containment_and_prefix(spark, sf_dir):
-    """Containment then prefix over the same docs: the prefix join reads the
-    set index the containment join cached, so none of its Spark executions
-    reads a parquet file, and its pairs still equal the naive join."""
+    """Containment then prefix then MinHash calibration over the same docs:
+    the later joins read the family index the containment join cached, so
+    none of their Spark executions reads a parquet file, and the prefix
+    pairs still equal the naive join."""
     from adventureworkslakehousepoc_spark.catalog import load_tables
     from adventureworkslakehousepoc_spark.operators.dedup import (
         containment_prefix_pairs,
+        minhash_estimate_calibration,
         prefix_filter_jaccard_pairs,
         word_shingles,
     )
@@ -1481,9 +1509,14 @@ def test_set_index_is_shared_by_containment_and_prefix(spark, sf_dir):
         before = execution_ids()
         pairs = prefix_filter_jaccard_pairs(small)
         ran = execution_ids() - before
+        minhash_estimate_calibration(small)
+        ran_calibration = execution_ids() - before - ran
     plans = [plan for label, plan in fragments if label == "prefix_filter_jaccard_pairs"]
     assert len(plans) == 1 and "InMemoryTableScan" in plans[0]
     assert ran and sum(parquet_files_read(e) for e in ran) == 0, "the prefix join re-read its input"
+    assert ran_calibration and sum(parquet_files_read(e) for e in ran_calibration) == 0, (
+        "the calibration re-read its input"
+    )
 
     got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs.collect()}
     sh = {}
