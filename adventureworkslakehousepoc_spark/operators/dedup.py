@@ -205,8 +205,7 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 8, rows_per_band: in
 
 
 def doc_shingle_arrays(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3,
-    hashed: bool = False,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
     """Per-doc sorted distinct shingle-set ARRAY: ``(doc_id, shs)`` — the
     r16 corpus pass shared by the whole minhash family (guide §2.4): the
@@ -221,7 +220,7 @@ def doc_shingle_arrays(
     three more corpus exchanges). Row width is bounded by doc length, so
     the array rows stay ordinary-sized at any corpus scale."""
     return (
-        word_shingles(docs, text_col, id_col, n, hashed=hashed, distinct=False)
+        word_shingles(docs, text_col, id_col, n, distinct=False)
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_set("sh")).alias("shs"))
     )

@@ -1,57 +1,19 @@
-"""Declarative data-quality expectations — the DLT/Lakeflow
-``@dp.expect`` / ``expect_or_drop`` surface of the reference's host platform,
-re-expressed as plain DataFrame ops.
+"""Data-quality operators over plain DataFrames: weak-supervision labeling
+and labeler agreement (``weak_label_votes``, ``labeler_agreement_kappa``,
+``dawid_skene_binary``), robust outlier and drift screens
+(``mad_outlier_flags``, ``psi_value_drift``), table audits
+(``referential_integrity_audit``, ``reconcile_tables``), imputation
+(``impute_group_mean``) and leakage-safe splits (``split_leakage_audit``,
+``cluster_safe_split``).
 
-The reference's transformations run on a platform whose pipeline decorator
-carries row-level expectations (keep / drop / quarantine + metrics); the
-reference code itself declares none, so this module supplies the capability
-rather than porting a specific rule set.
-
-Scale shape: ``expectation_metrics`` folds every constraint into ONE keyless
-aggregate pass (a conditional sum per constraint — map-side partials, one
-merged row) and unpivots with ``stack``, so metric collection costs one scan
-regardless of how many constraints are declared. ``enforce_expectations`` is
-a pure conjunctive filter — codegen'd, pushdown-eligible, zero shuffles.
+Row-level expectations (keep / drop / fail / quarantine and their violation
+counters) live in ``plans/expectations.py``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def expectation_metrics(df: DataFrame, expectations: dict[str, Column]) -> DataFrame:
-    """One row per expectation: (expectation, n_failed, n_passed).
-
-    A row fails an expectation when the predicate is false OR null (DLT
-    semantics: null means the constraint cannot be proven, so it fails).
-    """
-    aggs = [F.count(F.lit(1)).alias("__total")]
-    for name, pred in expectations.items():
-        aggs.append(
-            F.sum(F.when(pred, 0).otherwise(1)).alias(f"__f_{name}")
-        )
-    one = df.agg(*aggs)
-    pairs = ", ".join(
-        f"'{name}', __f_{name}" for name in expectations
-    )
-    n = len(expectations)
-    return one.select(
-        F.expr(f"stack({n}, {pairs}) AS (expectation, n_failed)"),
-        F.col("__total"),
-    ).select(
-        "expectation",
-        F.col("n_failed").cast("bigint").alias("n_failed"),
-        (F.col("__total") - F.col("n_failed")).cast("bigint").alias("n_passed"),
-    )
-
-
-def enforce_expectations(df: DataFrame, expectations: dict[str, Column]) -> DataFrame:
-    """expect_or_drop: keep only rows passing every expectation (null fails)."""
-    out = df
-    for pred in expectations.values():
-        out = out.filter(pred)
-    return out
 
 
 def weak_label_votes(

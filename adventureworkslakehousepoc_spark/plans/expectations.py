@@ -14,26 +14,28 @@ quality gate). Spark-first re-expression:
   is a ``filter`` whose else-branch is ``raise_error`` (the job aborts on
   the FIRST violating row, executor-side, with no extra pass or driver
   round-trip), ``keep`` leaves rows untouched.
-- Violation COUNTERS are a single partial-aggregated pass computing every
-  expectation's count in one job (one row out per expectation via the
-  explode-from-aggregate idiom — no per-expectation scans, no driver loop),
-  exposed both as a standalone auditable DataFrame
-  (``expectation_counters``) and — during ``PipelineContext.run()``
-  materialization — as ``DataFrame.observe`` metrics collected during the
-  SAME job that writes the table (zero additional scans, the Spark-native
-  equivalent of DLT's event-log expectation metrics).
+- Violation COUNTERS come from one aggregate, ``violation_aggregate``:
+  ``n_rows`` plus one NULL-is-violation sum per expectation. Every counter
+  in the engine is that aggregate, and every counters row is
+  ``counters_projection`` over its one result row:
+
+  - ``expectation_counters`` aggregates it over a batch DataFrame (one
+    map-side-combined pass, one row out per expectation via the
+    explode-from-aggregate idiom — no per-expectation scans, no driver
+    loop, no collect);
+  - ``PipelineContext(observe_expectations=True)`` attaches it as a
+    ``DataFrame.observe`` node, collected during the SAME job that writes
+    the table (the Spark-native equivalent of DLT's event-log metrics);
+  - ``streaming/quality.py`` observes it per micro-batch and passes the
+    listener's summed totals back through ``counters_projection``.
+
+- Referential constraints share one deduped key set (``_ref_keys``) and
+  one NULL-exempt orphan anti-join (``_orphans``) across the audit, the
+  drop enforcer and the quarantine relation.
 
 At 100 TB: constraints ride the scan (predicate pushdown applies to
 deterministic conjuncts), the counter pass is map-side-combined to
 |expectations| cells per task, and nothing ever collects row data.
-
-Relationship to ``operators/quality.py`` (round 4): that module ships the
-STANDALONE helpers — ``expectation_metrics`` (one-pass pass/fail counts for
-an ad-hoc dict of predicates, driver row ``dq_expectations_orders``) and a
-drop-only ``enforce_expectations``. This module is the PIPELINE contract on
-top: named policies per constraint (keep/drop/fail) declared as decorators
-on registry generators, fail-abort semantics, and run()-time observed
-metrics — what DLT actually exposes to a table author.
 """
 
 from __future__ import annotations
@@ -41,7 +43,7 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -54,6 +56,8 @@ __all__ = [
     "apply_expectations",
     "quarantine_rows",
     "expectation_counters",
+    "violation_aggregate",
+    "counters_projection",
     "AggregateExpectation",
     "AggregateExpectationError",
     "expect_unique",
@@ -61,7 +65,6 @@ __all__ = [
     "expect_fresh",
     "agg_expectations_of",
     "unique_violations",
-    "referential_violations",
     "freshness_status",
     "aggregate_expectation_counters",
     "enforce_aggregate_drops",
@@ -227,22 +230,28 @@ def quarantine_rows(
     return q
 
 
-def expectation_counters(
-    df: DataFrame, expectations: Sequence[Expectation], dataset: str = "<dataset>"
-) -> DataFrame:
-    """Violation counters as ONE aggregate pass over the PRE-enforcement
-    dataset: per expectation ``(dataset, expectation, policy, n_rows,
-    n_violations, violation_ppm)``. All expectations' counts reduce in the
-    same map-side-combined aggregate; the per-expectation rows come from
-    exploding an array of structs built from the aggregate's single row —
-    no per-expectation scans, no driver loop, no collect."""
-    if not expectations:
-        raise ValueError("expectation_counters: no expectations declared")
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("_n")] + [
-        F.sum((~e.passes()).cast("bigint")).cast("bigint").alias(f"_v{i}")
-        for i, e in enumerate(expectations)
+def violation_aggregate(expectations: Sequence[Expectation]) -> list[Column]:
+    """The one violation aggregate: ``n_rows`` plus, per expectation, the
+    number of rows where it does not pass (a NULL condition is a
+    violation), aliased by the expectation's name. Like any SQL SUM, a
+    violation sum over no rows is NULL. Aggregate it (``df.agg``) or
+    observe it (``df.observe``); ``counters_projection`` reads its result
+    row by position."""
+    return [F.count(F.lit(1)).alias("n_rows")] + [
+        F.sum((~e.passes()).cast("bigint")).alias(e.name) for e in expectations
     ]
-    one = df.agg(*aggs)
+
+
+def counters_projection(
+    totals: DataFrame, expectations: Sequence[Expectation], dataset: str
+) -> DataFrame:
+    """The counters relation ``(dataset, expectation, policy, n_rows,
+    n_violations, violation_ppm)``, one row per expectation, from a
+    one-row ``totals`` frame holding ``violation_aggregate``'s values in
+    its order (columns are read by position, so expectation names need no
+    quoting). The per-expectation rows come from exploding an array of
+    structs built from that single row."""
+    one = totals.toDF("_n", *[f"_v{i}" for i in range(len(expectations))])
     structs = F.array(
         *[
             F.struct(
@@ -263,10 +272,29 @@ def expectation_counters(
         F.col("e.policy").alias("policy"),
         "n_rows",
         F.col("e.n_violations").alias("n_violations"),
-        F.when(F.col("n_rows") > 0, F.floor(F.col("e.n_violations") * 1000000 / F.col("n_rows")))
-        .otherwise(F.lit(0))
+        F.when(
+            F.col("n_rows") > 0,
+            F.floor(F.col("e.n_violations") * 1000000 / F.col("n_rows")),
+        )
         .cast("bigint")
         .alias("violation_ppm"),
+    )
+
+
+def expectation_counters(
+    df: DataFrame, expectations: Sequence[Expectation], dataset: str = "<dataset>"
+) -> DataFrame:
+    """Violation counters as ONE aggregate pass over the PRE-enforcement
+    dataset: ``violation_aggregate`` reduced in one map-side-combined
+    aggregate, then ``counters_projection``.
+
+    Empty input follows SQL: ``n_rows`` is 0 and both ``n_violations`` (a
+    SUM over no rows) and ``violation_ppm`` (a ratio over no rows) are
+    NULL — "not measured", which a 0 would misreport as "measured clean"."""
+    if not expectations:
+        raise ValueError("expectation_counters: no expectations declared")
+    return counters_projection(
+        df.agg(*violation_aggregate(expectations)), expectations, dataset
     )
 
 
@@ -420,24 +448,26 @@ def unique_violations(df: DataFrame, exp: AggregateExpectation) -> DataFrame:
     )
 
 
-def referential_violations(
+def _ref_keys(ref_df: DataFrame, exp: AggregateExpectation) -> DataFrame:
+    """The referenced key set of one referential constraint: ``ref_cols``
+    renamed to the fk ``cols`` and deduplicated, so joins against it never
+    multiply rows."""
+    return ref_df.select(
+        *[F.col(r).alias(f) for f, r in zip(exp.cols, exp.ref_cols)]
+    ).dropDuplicates(list(exp.cols))
+
+
+def _orphans(
     df: DataFrame, ref_df: DataFrame, exp: AggregateExpectation
 ) -> DataFrame:
-    """Orphan detail audit: one row per orphaned fk tuple with its row
-    count. NULL fks are exempt first (MATCH SIMPLE), then a left-anti join
-    against the distinct referenced keys — Catalyst broadcasts the dim when
-    small, AQE handles the rest."""
+    """Orphan rows: rows of ``df`` whose fk tuple is non-NULL and absent
+    from the referenced keys. NULL fks are exempt first (MATCH SIMPLE),
+    then a left-anti join — Catalyst broadcasts the dim when small, AQE
+    handles the rest."""
     probe = df
     for c in exp.cols:
         probe = probe.filter(F.col(c).isNotNull())
-    keys = ref_df.select(
-        *[F.col(r).alias(f) for f, r in zip(exp.cols, exp.ref_cols)]
-    ).dropDuplicates(list(exp.cols))
-    return (
-        probe.join(keys, on=list(exp.cols), how="left_anti")
-        .groupBy(*[F.col(c) for c in exp.cols])
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
-    )
+    return probe.join(_ref_keys(ref_df, exp), on=list(exp.cols), how="left_anti")
 
 
 def freshness_status(df: DataFrame, exp: AggregateExpectation) -> DataFrame:
@@ -477,10 +507,8 @@ def _agg_violation_count(
                 f"aggregate expectation {exp.name!r}: referential audit "
                 f"needs a resolver for dataset {exp.ref!r}"
             )
-        counted = referential_violations(df, resolve(exp.ref), exp).agg(
-            F.coalesce(F.sum("n_rows"), F.lit(0)).cast("bigint").alias(
-                "n_violations"
-            )
+        counted = _orphans(df, resolve(exp.ref), exp).agg(
+            F.count(F.lit(1)).alias("n_violations")
         )
     elif exp.kind == "fresh":
         counted = freshness_status(df, exp).select(
@@ -564,9 +592,6 @@ def _keep_match_simple(df: DataFrame, ref_df: DataFrame, exp) -> DataFrame:
     (exempt). One left-outer join + filter — a single pass over ``df``;
     NULL join keys never equi-match, so exempt rows flow through with a
     NULL hit marker and are kept by the ``null_fk`` disjunct."""
-    keys = ref_df.select(
-        *[F.col(r).alias(f) for f, r in zip(exp.cols, exp.ref_cols)]
-    ).dropDuplicates(list(exp.cols))
     null_fk = None
     for c in exp.cols:
         cond = F.col(c).isNull()
@@ -577,7 +602,7 @@ def _keep_match_simple(df: DataFrame, ref_df: DataFrame, exp) -> DataFrame:
     marker = "_ref_hit"
     while marker in df.columns:
         marker += "_"
-    hit = keys.withColumn(marker, F.lit(1))
+    hit = _ref_keys(ref_df, exp).withColumn(marker, F.lit(1))
     cols = df.columns
     return (
         df.join(hit, on=list(exp.cols), how="left")
@@ -608,22 +633,12 @@ def aggregate_quarantine_rows(
     for exp in expectations:
         if exp.kind != "referential" or exp.policy not in ("drop", "quarantine"):
             continue
+        ref_df = resolve(exp.ref)
         if exp.policy == "quarantine":
-            # keys only feed the anti join — built inside the branch so a
-            # drop-policy constraint does not construct an unused relation
-            # (ADVICE r15)
-            keys = resolve(exp.ref).select(
-                *[F.col(r).alias(f) for f, r in zip(exp.cols, exp.ref_cols)]
-            ).dropDuplicates(list(exp.cols))
-            probe = cur
-            for c in exp.cols:
-                probe = probe.filter(F.col(c).isNotNull())
             parts.append(
-                probe.join(keys, on=list(exp.cols), how="left_anti").withColumn(
-                    "_violated", F.lit(exp.name)
-                )
+                _orphans(cur, ref_df, exp).withColumn("_violated", F.lit(exp.name))
             )
-        cur = _keep_match_simple(cur, resolve(exp.ref), exp)
+        cur = _keep_match_simple(cur, ref_df, exp)
     if not parts:
         raise ValueError(
             f"aggregate_quarantine_rows: dataset {dataset!r} declares no "

@@ -36,6 +36,7 @@ from .expectations import (
     enforce_aggregate_drops,
     expectations_of,
     quarantine_rows,
+    violation_aggregate,
 )
 
 __all__ = ["DatasetRegistry", "PipelineContext"]
@@ -163,18 +164,10 @@ class PipelineContext:
             # observation node: batch Observation does not apply there;
             # enforcement itself is plan-shaped and applies to both.)
             if self._observe_expectations and not df.isStreaming:
-                from pyspark.sql import functions as F
                 from pyspark.sql.observation import Observation
 
                 obs = Observation(f"expectations:{name}")
-                df = df.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_rows"),
-                    *[
-                        F.sum((~e.passes()).cast("bigint")).alias(e.name)
-                        for e in exps
-                    ],
-                )
+                df = df.observe(obs, *violation_aggregate(exps))
                 self._observations[name] = (obs, exps)
             df = apply_expectations(df, exps, dataset=name)
         agg_exps = agg_expectations_of(defn.fn)

@@ -462,22 +462,24 @@ def runtime_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DLT-style expectations (operators/quality.py): all constraints fold
-    into ONE keyless aggregate scan (conditional sums, map-side partials)
-    then unpivot — metric cost is one pass no matter how many rules. The
-    reference's host platform carries this surface on its pipeline
-    decorator; null predicates fail, per DLT semantics."""
-    from ..operators.quality import expectation_metrics
+    """DLT-style expectations as pass/fail counts: the constraints are
+    ``Expectation`` objects, and their counts are the one-pass
+    ``expectation_counters`` (plans/expectations.py) — every constraint
+    folds into ONE keyless aggregate scan, so metric cost is one pass no
+    matter how many rules. Null predicates fail, per DLT semantics."""
+    from ..plans.expectations import Expectation, expectation_counters
 
     o = _t(spark, sf_dir, "orders")["orders"]
-    return expectation_metrics(
-        o,
-        {
-            "custkey_not_null": F.col("o_custkey").isNotNull(),
-            "positive_totalprice": F.col("o_totalprice") > 0,
-            "known_status": F.col("o_orderstatus").isin("O", "F", "P"),
-            "orderdate_in_range": F.col("o_orderdate") >= F.lit("1992-01-01").cast("timestamp"),
-        },
+    exps = [
+        Expectation("custkey_not_null", "o_custkey IS NOT NULL"),
+        Expectation("positive_totalprice", "o_totalprice > 0"),
+        Expectation("known_status", "o_orderstatus IN ('O', 'F', 'P')"),
+        Expectation("orderdate_in_range", "o_orderdate >= TIMESTAMP '1992-01-01'"),
+    ]
+    return expectation_counters(o, exps, dataset="orders").select(
+        "expectation",
+        F.col("n_violations").alias("n_failed"),
+        (F.col("n_rows") - F.col("n_violations")).alias("n_passed"),
     )
 
 

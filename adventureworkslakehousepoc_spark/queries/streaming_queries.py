@@ -346,25 +346,13 @@ def st_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     None,  # set below — shares dim_geo's oracle
 )
 def st_dim_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    address = stream_table(spark, sf_dir, "customer").alias("a")
-    t = load_tables(spark, sf_dir, ("nation", "region"))
-    joined = star_left_join(
-        address,
-        [
-            (t["nation"].alias("sp"), F.col("a.c_nationkey") == F.col("sp.n_nationkey")),
-            (t["region"].alias("cr"), F.col("sp.n_regionkey") == F.col("cr.r_regionkey")),
-        ],
-    ).select(
-        F.concat(
-            F.col("a.c_custkey").cast("string"), F.lit("_"), F.col("a.c_mktsegment").cast("string")
-        ).alias("geography_id"),
-        F.col("a.c_name").alias("city"),
-        F.upper(F.substring(F.col("sp.n_name"), 1, 2)).alias("state_province_code"),
-        F.col("sp.n_name").alias("state_province_name"),
-        F.col("cr.r_regionkey").cast("string").alias("country_region_code"),
-        F.col("cr.r_name").alias("country_name"),
-    )
-    return run_available_now(joined, "dim-geo-stream")
+    """The registry's own ``dim_geo`` definition run through the streaming
+    medallion context: the customer driving table streams, the nation and
+    region lookups stay batch (``read_static``)."""
+    from ..pipelines.medallion import medallion_streaming_context
+
+    dim_geo = medallion_streaming_context(spark, sf_dir).dataframe("dim_geo")
+    return run_available_now(dim_geo, "dim-geo-stream")
 
 
 from .parity import ORACLE as _PARITY_ORACLE  # noqa: E402
@@ -1144,7 +1132,8 @@ def st_expectations_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     each micro-batch's plan, a ``StreamingQueryListener`` accumulates the
     per-batch partials (count/sum are associative over disjoint
     micro-batches, so the totals are exact whatever the trigger shape),
-    and the readout derives ppm in exact integer arithmetic. Violations
+    and the summed totals go through the batch counters projection
+    (``plans/expectations.py::counters_projection``). Violations
     are counted over the FULL input — rows a drop policy removes are
     still counted, exactly like the batch ``expectation_counters`` and
     DLT's event log. The oracle is the identical batch SQL over

@@ -29,10 +29,9 @@ import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
-from ..plans.expectations import Expectation
+from ..plans.expectations import Expectation, counters_projection, violation_aggregate
 
 __all__ = [
     "ExpectationMetricsListener",
@@ -114,17 +113,10 @@ class ExpectationMetricsListener(StreamingQueryListener):
 def observe_stream_expectations(
     df: DataFrame, expectations: Sequence[Expectation], name: str
 ) -> DataFrame:
-    """Attach the named pre-enforcement metrics node: total rows plus one
-    violation counter per expectation (NULL condition = violation, as
-    everywhere in the expectations contract)."""
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("n_rows"),
-        *[
-            F.sum((~e.passes()).cast("bigint")).alias(e.name)
-            for e in expectations
-        ],
-    )
+    """Attach the named pre-enforcement metrics node: the batch path's
+    ``violation_aggregate`` (total rows plus one violation counter per
+    expectation), evaluated per micro-batch."""
+    return df.observe(name, *violation_aggregate(expectations))
 
 
 def streamed_expectation_counters(
@@ -134,12 +126,12 @@ def streamed_expectation_counters(
     dataset: str,
 ) -> DataFrame:
     """Convert a terminated run's accumulated metrics into the SAME audit
-    relation the batch path emits (``plans.expectations.
-    expectation_counters``): one row per expectation with
-    ``(dataset, expectation, policy, n_rows, n_violations, violation_ppm)``.
-    The ppm derives in exact Python integer arithmetic from the summed
-    totals. Raises if the stream never terminated or emitted no metrics
-    (a silent zero-row audit would read as 'no violations')."""
+    relation the batch path emits: the listener's totals become one row
+    that goes through ``plans.expectations.counters_projection``, so the
+    ppm and the empty-input NULLs are the batch ones. A violation count
+    no micro-batch reported non-NULL stays NULL, as a SUM over no rows
+    is. Raises if the stream never terminated or emitted no metrics (a
+    silent zero-row audit would read as 'no violations')."""
     if not listener.wait_terminated():
         raise TimeoutError(
             f"streamed_expectation_counters({dataset!r}): listener never saw "
@@ -151,17 +143,12 @@ def streamed_expectation_counters(
             "metrics were delivered — was the observation attached and the "
             "stream non-empty?"
         )
-    n_rows = int(listener.totals.get("n_rows", 0))
-    rows = []
-    for e in expectations:
-        v = int(listener.totals.get(e.name, 0))
-        ppm = (v * 1_000_000) // n_rows if n_rows > 0 else 0
-        rows.append((dataset, e.name, e.policy, n_rows, v, ppm))
-    return spark.createDataFrame(
-        rows,
-        "dataset string, expectation string, policy string, "
-        "n_rows bigint, n_violations bigint, violation_ppm bigint",
+    totals = [listener.totals["n_rows"]]
+    totals += [listener.totals.get(e.name) for e in expectations]
+    one = spark.createDataFrame(
+        [totals], ", ".join(f"c{i} bigint" for i in range(len(totals)))
     )
+    return counters_projection(one, expectations, dataset)
 
 
 def run_gated_stream_with_counters(

@@ -143,24 +143,28 @@ def test_approx_percentile_within_bounds(spark, sf_dir):
 
 
 def test_enforce_expectations_drops_null_and_false(spark):
-    from adventureworkslakehousepoc_spark.operators.quality import (
-        enforce_expectations,
-        expectation_metrics,
+    from adventureworkslakehousepoc_spark.plans.expectations import (
+        Expectation,
+        apply_expectations,
+        expectation_counters,
     )
 
     df = spark.createDataFrame(
         [(1, 10.0), (2, -3.0), (3, None), (None, 5.0)],
         "id int, amount double",
     )
-    rules = {
-        "id_not_null": F.col("id").isNotNull(),
-        "amount_positive": F.col("amount") > 0,
-    }
-    kept = enforce_expectations(df, rules).collect()
+    rules = [
+        Expectation("id_not_null", "id IS NOT NULL", "drop"),
+        Expectation("amount_positive", "amount > 0", "drop"),
+    ]
+    kept = apply_expectations(df, rules).collect()
     # row 2 fails amount_positive, row 3's null amount FAILS (DLT null
     # semantics), row 4 fails id_not_null
     assert sorted(r.id for r in kept) == [1]
-    m = {r.expectation: (r.n_failed, r.n_passed) for r in expectation_metrics(df, rules).collect()}
+    m = {
+        r.expectation: (r.n_violations, r.n_rows - r.n_violations)
+        for r in expectation_counters(df, rules).collect()
+    }
     assert m == {"id_not_null": (1, 3), "amount_positive": (2, 2)}
 
 

@@ -671,6 +671,37 @@ def test_expectation_counters_requires_expectations(spark):
         expectation_counters(df, [])
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "expectations_violation_counters",
+        "dq_expectations_orders",
+        "st_expectations_counters",
+    ],
+)
+def test_expectation_counters_match_oracle_on_empty_input(
+    spark, sf_dir, tmp_path, name
+):
+    """Over an empty input table a violation count is a SUM over no rows
+    and the ppm a ratio over no rows: both NULL, as the oracle's SQL gives
+    them — batch, pass/fail and streamed counters alike."""
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry_mod
+    from adventureworkslakehousepoc_spark.catalog import TESTDATA_TABLES
+
+    from .oracle_compare import compare_frames, duckdb_connection
+
+    for t in TESTDATA_TABLES:
+        schema = pq.read_schema(os.path.join(sf_dir, f"{t}.parquet"))
+        pq.write_table(schema.empty_table(), tmp_path / f"{t}.parquet")
+    empty = str(tmp_path)
+    oracle = duckdb_connection(empty).execute(entry_mod.oracle_sql()[name]).df()
+    assert len(oracle) > 0
+    ok, msg = compare_frames(entry_mod.queries()[name](spark, empty), oracle)
+    assert ok, f"{name}: {msg}"
+
+
 def test_expectations_quarantine_routes_disjointly(spark):
     """expect_or_quarantine: kept ∪ quarantined = post-drop input with no
     overlap; NULL conditions route to quarantine; rows removed by an
