@@ -10,8 +10,8 @@ containment query) are built from ``doc_shingle_arrays`` — one per-doc sorted
 set array, one corpus shuffle — and five private helpers, each owning one
 invariant:
 - ``_pair_overlap``: the ONLY place two sets are intersected; each pair end
-  reads its own side's array, the counts come back as bigints, and over the
-  family index they are bound once, so a threshold never re-intersects.
+  reads its own side's array, the counts come back as bigints, bound once,
+  so a threshold never re-intersects.
 - ``_set_index``: the family index of one input — one row per DISTINCT
   shingle set ``(doc_id = min member, shs, hs, members)`` plus its rank
   arrays, built in one corpus pass and held in two one-slot caches that are
@@ -248,9 +248,10 @@ def _pair_overlap(
     Over the family index (``_set_index``) ``set_col`` names the array to
     intersect (``shs`` or ``hs``) and each end also brings the ``carry``
     columns, suffixed ``_a``/``_b`` (``members`` for ``_member_pairs``).
-    The counts are then bound once by a one-row ``inline``: a threshold on
+    The counts are bound once by a one-row ``inline``: a threshold on
     ``n_inter`` cannot be pushed below the generator into the join
-    condition, where the intersection would run a second time."""
+    condition, where the numerator and the denominator of a Jaccard would
+    each run the intersection again."""
     ends = [
         arrays.select(
             F.col("doc_id").alias(f"doc_{e}"), F.col(set_col).alias(f"_shs_{e}"),
@@ -264,8 +265,6 @@ def _pair_overlap(
         F.size("_shs_a").cast("bigint").alias("n_a"),
         F.size("_shs_b").cast("bigint").alias("n_b"),
     )
-    if not carry:
-        return joined.select(*pairs.columns, *counts)
     return joined.select(
         *pairs.columns, *[f"{c}_{e}" for c in carry for e in "ab"],
         F.inline(F.array(F.struct(*counts))),

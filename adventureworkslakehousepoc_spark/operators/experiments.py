@@ -54,6 +54,11 @@ def cuped_adjusted_lift(
       after subtracting θ(X − E[X]), θ itself, and the achieved variance
       reduction 1 − var(Y_adj)/var(Y) in ppm.
 
+    Empty input: an arm with no users has NULL moment sums (a SUM over no
+    rows) and a NULL count, so everything derived from it is NULL — over an
+    empty event log that is the whole row, as the oracle's SQL gives it. Only
+    a NULL sum over a non-empty arm is an overflow, and raises.
+
     Scale posture: one user-keyed shuffle for the per-user sums, then a
     2-row arm aggregate and a 1-row pooled aggregate joined by broadcast.
     """
@@ -132,19 +137,24 @@ def cuped_adjusted_lift(
     # SILENTLY (the decimal(19,0) cast above only fixes the per-row
     # product). A NULL moment must abort the readout, not flow into NULL
     # theta/lifts: every output derives through this guard, which
-    # raise_errors if any moment sum is NULL. Headroom for the record:
+    # raise_errors if a moment sum is NULL while its count (pooled ``pn``,
+    # per arm ``tn``/``cn``) is not. Headroom for the record:
     # sums of n·(per-user micro-sum)² stay under 10³⁸ for any corpus with
     # n·max(|x_micro|, |y_micro|)² < 10³⁸ — e.g. 10¹² users at 10¹³ micros
     # (10⁷ value units) each — so hitting this guard means the values need
     # a documented downscale, not a bigger type.
-    _moment_cols = ["pn", "psx", "psy", "psxy", "psxx", "psyy",
-                    "tn", "tsx", "tsy", "cn", "csx", "csy"]
+    _moment_sums = {
+        "pn": ["psx", "psy", "psxy", "psxx", "psyy"],
+        "tn": ["tsx", "tsy"],
+        "cn": ["csx", "csy"],
+    }
 
     def _guarded(expr):
         ok = None
-        for c in _moment_cols:
-            cond = F.col(c).isNotNull()
-            ok = cond if ok is None else (ok & cond)
+        for n, sums in _moment_sums.items():
+            for c in sums:
+                cond = F.col(c).isNotNull() | F.col(n).isNull()
+                ok = cond if ok is None else (ok & cond)
         return F.when(ok, expr).otherwise(
             F.raise_error(
                 F.lit(

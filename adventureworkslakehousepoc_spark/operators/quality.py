@@ -195,7 +195,8 @@ def referential_integrity_audit(
     partial-aggregated keyless counts; plus one keyless count of the child.
     Null child keys are orphans by definition here (they reference nothing),
     counted separately so the metric distinguishes broken links from absent
-    ones.
+    ones. A relationship whose child has no rows gets no row (its rate would
+    divide by zero), as a ``GROUP BY`` over the child's rows gives none.
     """
     out = None
     for name, child, child_key, parent, parent_key in relationships:
@@ -204,7 +205,7 @@ def referential_integrity_audit(
         totals = keys.agg(
             F.count(F.lit(1)).cast("bigint").alias("n_child_rows"),
             F.count_if(F.col("k").isNull()).cast("bigint").alias("n_null_keys"),
-        )
+        ).where(F.col("n_child_rows") > 0)
         orphans = (
             keys.where(F.col("k").isNotNull())
             .join(parents, "k", "left_anti")

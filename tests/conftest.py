@@ -22,3 +22,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_ORACLE
+
+
+@pytest.fixture(scope="session")
+def empty_sf_dir(tmp_path_factory):
+    """Every input table with its ``sf_dir`` schema and no rows."""
+    import pyarrow.parquet as pq
+
+    from adventureworkslakehousepoc_spark.catalog import TESTDATA_TABLES
+
+    out = tmp_path_factory.mktemp("empty_sf")
+    for t in TESTDATA_TABLES:
+        schema = pq.read_schema(os.path.join(SF_ORACLE, f"{t}.parquet"))
+        pq.write_table(schema.empty_table(), out / f"{t}.parquet")
+    return str(out)

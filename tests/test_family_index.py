@@ -111,3 +111,17 @@ def test_pair_intersection_is_computed_once(spark):
     counts = {label: plan.count("array_intersect(") for label, plan in fragments}
     assert counts["containment_prefix_pairs"] == 1
     assert counts["prefix_filter_jaccard_pairs"] == 1
+
+
+def test_minhash_verify_intersects_once(spark, sf_dir):
+    """MinHash verification binds each candidate pair's counts once: the
+    optimized plan of ``dedup_minhash_lsh`` holds one set intersection, not
+    one in the pushed join condition's numerator, one in its denominator
+    and one in the projection."""
+    import __spark_entry__ as entry_mod
+
+    df = entry_mod.queries()["dedup_minhash_lsh"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    # the result is a cached frame: once it has run, its adaptive plan
+    # prints the final plan and then the initial one
+    assert plan.split("== Initial Plan ==")[0].count("array_intersect(") == 1

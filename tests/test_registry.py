@@ -679,26 +679,33 @@ def test_expectation_counters_requires_expectations(spark):
         "st_expectations_counters",
     ],
 )
-def test_expectation_counters_match_oracle_on_empty_input(
-    spark, sf_dir, tmp_path, name
-):
+def test_expectation_counters_match_oracle_on_empty_input(spark, empty_sf_dir, name):
     """Over an empty input table a violation count is a SUM over no rows
     and the ppm a ratio over no rows: both NULL, as the oracle's SQL gives
     them — batch, pass/fail and streamed counters alike."""
-    import pyarrow.parquet as pq
-
     import __spark_entry__ as entry_mod
-    from adventureworkslakehousepoc_spark.catalog import TESTDATA_TABLES
 
     from .oracle_compare import compare_frames, duckdb_connection
 
-    for t in TESTDATA_TABLES:
-        schema = pq.read_schema(os.path.join(sf_dir, f"{t}.parquet"))
-        pq.write_table(schema.empty_table(), tmp_path / f"{t}.parquet")
-    empty = str(tmp_path)
-    oracle = duckdb_connection(empty).execute(entry_mod.oracle_sql()[name]).df()
+    oracle = duckdb_connection(empty_sf_dir).execute(entry_mod.oracle_sql()[name]).df()
     assert len(oracle) > 0
-    ok, msg = compare_frames(entry_mod.queries()[name](spark, empty), oracle)
+    ok, msg = compare_frames(entry_mod.queries()[name](spark, empty_sf_dir), oracle)
+    assert ok, f"{name}: {msg}"
+
+
+@pytest.mark.parametrize("name", ["referential_integrity_audit", "cuped_adjusted_lift"])
+def test_operator_matches_oracle_on_empty_tables(spark, empty_sf_dir, name):
+    """Over empty tables: a relationship with no child rows has no orphan
+    rate (it would divide by zero), and the oracle's GROUP BY gives it no
+    row; an A/B readout with no users has NULL counts and NULL moment sums
+    (SUMs over no rows), so its one row is NULL throughout, not an
+    overflow error."""
+    import __spark_entry__ as entry_mod
+
+    from .oracle_compare import compare_frames, duckdb_connection
+
+    oracle = duckdb_connection(empty_sf_dir).execute(entry_mod.oracle_sql()[name]).df()
+    ok, msg = compare_frames(entry_mod.queries()[name](spark, empty_sf_dir), oracle)
     assert ok, f"{name}: {msg}"
 
 
