@@ -4,27 +4,33 @@ Exact, MinHash+LSH, SimHash, and n-gram-Jaccard dedup — all expressed as
 declarative DataFrame ops (explode → hash → groupBy/join), no UDFs, so every
 stage is whole-stage-codegen'd and shuffle-parallel.
 
-Set-similarity core: the shingle-set joins (MinHash verify, prefix-filter
-Jaccard, containment, estimator calibration, incremental new×corpus, the LSH
-containment query) are built from ``doc_shingle_arrays`` — one per-doc sorted
-set array, one corpus shuffle — and five private helpers, each owning one
-invariant:
+Set-similarity core: the shingle-set joins (MinHash near-duplicates,
+prefix-filter Jaccard, exact and LSH containment, estimator calibration,
+incremental new×corpus) are built from ``doc_shingle_arrays`` — one per-doc
+sorted set array, one corpus shuffle — and six private helpers, each owning
+one invariant:
 - ``_pair_overlap``: the ONLY place two sets are intersected; each pair end
   reads its own side's array, the counts come back as bigints, bound once,
   so a threshold never re-intersects.
 - ``_set_index``: the family index of one input — one row per DISTINCT
-  shingle set ``(doc_id = min member, shs, hs, members)`` plus its rank
-  arrays, built in one corpus pass and held in two one-slot caches that are
-  reused only while the plan AND its input files are unchanged — the
-  containment, prefix-filter and calibration joins over the same docs pay
-  the corpus pass once.
+  shingle set ``(doc_id = min member, shs, hs, members)``, built in one
+  corpus pass and held in the one-slot ``set_families`` cache, reused only
+  while the plan AND its input files are unchanged — every join over the
+  same docs pays the corpus pass once.
+- ``_lsh_overlap``: the one MinHash path — the index's representatives
+  joined to their signatures in the one-slot ``set_signatures`` cache, LSH
+  candidates over them, and the ``_pair_overlap`` of each candidate with
+  both ends' ``members``; MinHash near-duplicates, LSH containment and the
+  calibration report all read it.
 - ``_member_pairs``: representative verdicts expand over the carried
   ``members`` arrays with ``doc_a < doc_b`` re-established and id-tied
   columns swapped along — explodes, no join.
 - ``_intra_family_pairs``: member pairs within one family, each member
   paired with the slice of ``members`` after it.
-- ``_rarity_arrays``: each set as one array in the global rarest-first order,
-  so a prefix is a slice and ``posexplode`` yields global ranks.
+- ``_rarity_arrays``: each set of the index as one array in the global
+  rarest-first order (the one-slot ``set_ranks`` cache, built by the
+  prefix-filtered joins only), so a prefix is a slice and ``posexplode``
+  yields global ranks.
 LSH banding is ``_band_keys``, shared by the self-join and the incremental
 join.
 
@@ -65,11 +71,11 @@ __all__ = [
     "word_shingles",
     "doc_shingle_arrays",
     "minhash_signatures",
-    "cached_signatures",
     "lsh_candidate_pairs",
     "band_selectivity_curve",
     "minhash_estimate_calibration",
     "minhash_near_duplicates",
+    "lsh_containment_pairs",
     "simhash_fingerprints",
     "simhash_near_duplicates",
     "check_pigeonhole",
@@ -147,14 +153,17 @@ def word_shingles(
     return exploded.distinct() if distinct else exploded
 
 
-def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
-    """MinHash signature per doc: h0..h{n-1}, min over shingles of a per-hash
-    8-hex-char lane (min over fixed-width hex strings — portable total order).
+def minhash_signatures(arrays: DataFrame, num_hashes: int = 16) -> DataFrame:
+    """MinHash signature per doc of ``(doc_id, shs)`` shingle-set arrays
+    (``doc_shingle_arrays``, or the family index): ``(doc_id, h0..h{n-1})``,
+    min over the doc's shingles of a per-hash 8-hex-char lane (min over
+    fixed-width hex strings — portable total order).
 
     Hash lanes: each ``md5('<seed>:' || shingle)`` yields 128 well-mixed bits,
     sliced into four independent 32-bit lanes — so 16 hash functions cost 4
     md5 evaluations per shingle row, not 16 (the md5 is the hot loop of the
-    whole near-dup pass). One partial-aggregated groupBy."""
+    whole near-dup pass). The shingle stream is an explode of the arrays (a
+    map, no exchange) into one partial-aggregated groupBy."""
     if num_hashes % 4:
         raise ValueError("num_hashes must be a multiple of 4 (4 lanes per md5)")
     aggs = []
@@ -164,6 +173,7 @@ def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
             aggs.append(
                 F.min(F.substring(digest, 8 * lane + 1, 8)).alias(f"h{4 * s + lane}")
             )
+    shingles = arrays.select("doc_id", F.explode("shs").alias("sh"))
     return shingles.groupBy("doc_id").agg(*aggs)
 
 
@@ -282,12 +292,6 @@ def _jaccard_at_least(overlap: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def _jaccard_verify(pairs: DataFrame, doc_arrays: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard ≥ ``threshold`` over candidate pairs only, both ends'
-    sets read from one ``doc_shingle_arrays`` frame."""
-    return _jaccard_at_least(_pair_overlap(pairs, doc_arrays, doc_arrays), threshold)
-
-
 def _member_pairs(
     rep_pairs: DataFrame, oriented: tuple[tuple[str, str], ...] = ()
 ) -> DataFrame:
@@ -332,18 +336,21 @@ def _intra_family_pairs(index: DataFrame) -> DataFrame:
     )
 
 
-def _rarity_arrays(rep_arrays: DataFrame) -> DataFrame:
-    """Each set as one rarest-first array: ``(doc_id, arr, n_sh)``, ``arr``
-    ordered by (document frequency over ``rep_arrays``, shingle) — the
-    consistent global order prefix filtering needs. A prefix is then a
-    positional slice and ``posexplode`` hands every token its global rank.
+def _rarity_arrays(index: DataFrame) -> DataFrame:
+    """Each hashed set ``hs`` of the family index as one rarest-first
+    array: ``(doc_id, arr, n_sh)``, ``arr`` ordered by (document frequency
+    over the index, shingle) — the consistent global order prefix
+    filtering needs. A prefix is then a positional slice and
+    ``posexplode`` hands every token its global rank. Held in the one-slot
+    ``set_ranks`` cache, so the second prefix join over the same input
+    reads it from memory.
 
     One df aggregate (vocabulary-bounded) and one doc-keyed regroup whose
     ``array_sort`` over (df, sh) structs replaces a row_number window over
     the whole shingle stream and its exchange + sort."""
-    rsh = rep_arrays.select("doc_id", F.explode("shs").alias("sh"))
+    rsh = index.select("doc_id", F.explode("hs").alias("sh"))
     freq = rsh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    return (
+    ranks = (
         rsh.join(freq, "sh")
         .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list(F.struct("df", "sh"))).alias("ts"))
@@ -353,18 +360,17 @@ def _rarity_arrays(rep_arrays: DataFrame) -> DataFrame:
             F.size("ts").alias("n_sh"),
         )
     )
+    return _fresh_cache("set_ranks", ranks)
 
 
-def _set_index(
-    docs: DataFrame, text_col: str, id_col: str, shingle_n: int
-) -> tuple[DataFrame, DataFrame]:
+def _set_index(docs: DataFrame, text_col: str, id_col: str, shingle_n: int) -> DataFrame:
     """The family index of one docs frame, built in one corpus pass and
-    shared by every set-similarity join over it: ``(index, ranks)``.
+    shared by every set-similarity join over it.
 
-    ``index`` has one row per DISTINCT shingle set: ``(doc_id, shs, hs,
-    members)``, where ``members`` is the sorted array of the ids sharing
-    the set and ``doc_id`` its first (min) id, the family representative.
-    ``shs`` is the string set from ``doc_shingle_arrays``; ``hs`` is its
+    One row per DISTINCT shingle set: ``(doc_id, shs, hs, members)``,
+    where ``members`` is the sorted array of the ids sharing the set and
+    ``doc_id`` its first (min) id, the family representative. ``shs`` is
+    the string set from ``doc_shingle_arrays``; ``hs`` is its
     sorted ``xxhash64`` projection — the same values
     ``word_shingles(hashed=True)`` gives, 8-byte ints for joins that only
     need shingle identity. On a duplicate-heavy corpus every copy floods
@@ -373,13 +379,16 @@ def _set_index(
     ``_member_pairs``/``_intra_family_pairs`` expand the verdicts from the
     carried ``members`` arrays. Only the ids are grouped by the set digest;
     the representative's set joins back, so the set arrays never cross the
-    family shuffle. ``ranks`` is ``_rarity_arrays`` over ``hs``.
+    family shuffle.
 
-    Each sits in its own ``_fresh_cache`` slot, so a second join over the
-    same unchanged input reads both from memory instead of re-running the
-    corpus shuffle, the family collapse and the rarity order. Callers must
-    materialize their results before returning: the next call on another
-    input evicts the slots."""
+    It sits in the ``set_families`` ``_fresh_cache`` slot, so a second join
+    over the same unchanged input reads it from memory instead of
+    re-running the corpus shuffle and the family collapse. The next call
+    on another input evicts the slot, so a result built on it is either
+    materialized before it is returned (the prefix and exact containment
+    joins, the calibration report) or lazy and meant to be read before
+    that call (the MinHash pair slot, LSH containment): read after it, a
+    lazy result recomputes the evicted index from its input."""
     # a null id is in no pair (doc_a < doc_b); dropping it up front also
     # gives both branches below one plan, so they share the corpus shuffle
     arrs = doc_shingle_arrays(docs.filter(F.col(id_col).isNotNull()), text_col, id_col, shingle_n)
@@ -392,9 +401,78 @@ def _set_index(
         "doc_id", "shs", F.expr("array_sort(transform(shs, s -> xxhash64(s)))").alias("hs"),
         "members",
     )
-    index = _fresh_cache("set_families", index)
-    ranks = _rarity_arrays(index.select("doc_id", F.col("hs").alias("shs")))
-    return index, _fresh_cache("set_ranks", ranks)
+    return _fresh_cache("set_families", index)
+
+
+def _lsh_overlap(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_n: int,
+    num_hashes: int,
+    bands: int,
+    rows_per_band: int,
+    carry: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """The one MinHash path over the family index of ``docs``: ``(index,
+    overlap)``, where ``overlap`` is the ``_pair_overlap`` (on ``hs``) of
+    every LSH candidate pair of representatives, each end carrying its
+    ``members`` and the signature-slot columns named in ``carry``.
+
+    Identical sets have identical signatures, so they collide on every
+    band: every intra-family pair is a candidate, which callers add from
+    ``_intra_family_pairs(index)``. A cross-family member pair collides
+    exactly when its representatives do, so ``_member_pairs`` over
+    ``overlap`` gives the rest of the all-docs candidate set. The
+    representatives' signatures join the index once, in the one-slot
+    ``set_signatures`` cache: the band self-join reads the lanes on both
+    sides and the verify reads each end's hashed set, members and lanes
+    through one join per end, so the 4-md5-per-shingle aggregate runs once
+    per input, not once per reference."""
+    index = _set_index(docs, text_col, id_col, shingle_n)
+    lanes = [f"h{s}" for s in range(num_hashes)]
+    signed = _fresh_cache(
+        "set_signatures",
+        index.drop("shs").join(minhash_signatures(index, num_hashes), "doc_id"),
+    )
+    pairs = lsh_candidate_pairs(signed.select("doc_id", *lanes), bands, rows_per_band)
+    return index, _pair_overlap(pairs, signed, signed, "hs", ("members", *carry))
+
+
+def _jaccard_pairs(index: DataFrame, overlap: DataFrame, threshold: float) -> DataFrame:
+    """``(doc_a, doc_b, jaccard)`` over every doc of the family index: the
+    representative pairs of ``overlap`` (members carried) with exact
+    Jaccard ≥ ``threshold``, expanded over their members, and every
+    intra-family pair at Jaccard 1."""
+    intra = _intra_family_pairs(index).select("doc_a", "doc_b", F.lit(1.0).alias("jaccard"))
+    return _member_pairs(_jaccard_at_least(overlap, threshold)).unionByName(intra)
+
+
+def _containment_pairs(index: DataFrame, overlap: DataFrame, t_num: int, t_den: int) -> DataFrame:
+    """``(doc_a, doc_b, n_inter, n_a, n_b, containment_a_micros,
+    containment_b_micros)`` over every doc of the family index: the
+    representative pairs of ``overlap`` where either containment reaches
+    ``t_num/t_den``, expanded over their members with ``n_a``/``n_b``
+    following the member ids, and every intra-family pair (identical sets,
+    containment 1 at the family's set size)."""
+    rep_pairs = overlap.filter(
+        # compare the rational directly — flooring to micros first loses
+        # exactness whenever t_num·10^6 is not divisible by t_den (e.g.
+        # t=1/3 would reject a pair with containment exactly 1/3); the
+        # micros columns in the output are display-only
+        (F.col("n_inter") * t_den >= t_num * F.col("n_a"))
+        | (F.col("n_inter") * t_den >= t_num * F.col("n_b"))
+    )
+    n_set = F.size("hs").cast("bigint")
+    intra = _intra_family_pairs(index).select(
+        "doc_a", "doc_b", n_set.alias("n_inter"), n_set.alias("n_a"), n_set.alias("n_b")
+    )
+    cross = _member_pairs(rep_pairs, oriented=(("n_a", "n_b"),))
+    return cross.unionByName(intra).select(
+        "*",
+        F.expr("(n_inter * 1000000) div n_a").alias("containment_a_micros"),
+        F.expr("(n_inter * 1000000) div n_b").alias("containment_b_micros"),
+    )
 
 
 # One-slot cache registry: high-traffic operators persist a corpus-scale
@@ -488,14 +566,13 @@ def minhash_near_duplicates(
     given md5) → exact-Jaccard verification ≥ threshold. Returns
     (doc_a, doc_b, jaccard).
 
-    The per-doc shingle-set ARRAYS feed three consumers (signature stream,
-    pair intersection, set sizes); they are persisted so the corpus pays
-    ONE shuffle (r16 — the cached frame was previously the distinct
-    stream, which the signature groupBy and the verify groupBy each
-    re-shuffled; the array form derives both as a map over the cache) —
-    at 100 TB this is the stage you'd materialize as a table instead.
+    Signatures, banding and verification run on the family index's
+    representatives (``_lsh_overlap``, shared with LSH containment and the
+    calibration report), so the corpus pays one shuffle and identical
+    copies never flood a band's collision list; verdicts expand over the
+    carried ``members``, and every intra-family pair is Jaccard 1.
 
-    The VERIFIED PAIR LIST is also held in the bounded one-slot cache: the
+    The VERIFIED PAIR LIST is held in the bounded one-slot cache: the
     near-dup graph feeds connected components, PageRank, AND triangle
     counting in one session, and each of those eagerly checkpoints its
     edge input — without the cache every consumer re-runs the whole
@@ -504,27 +581,25 @@ def minhash_near_duplicates(
     verified-pair-scale (tiny next to the corpus); at 100 TB this is the
     stage you'd materialize as a table shared by all downstream graph
     jobs."""
-    arrs = _fresh_cache(
-        "minhash_doc_arrays",
-        doc_shingle_arrays(docs, text_col, id_col, shingle_n),
+    index, overlap = _lsh_overlap(
+        docs, text_col, id_col, shingle_n, num_hashes, bands, rows_per_band
     )
-    pairs = lsh_candidate_pairs(cached_signatures(arrs, num_hashes), bands, rows_per_band)
-    return _fresh_cache(
-        "minhash_pairs", _jaccard_verify(pairs, arrs, threshold)
-    )
+    return _fresh_cache("minhash_pairs", _jaccard_pairs(index, overlap, threshold))
 
 
-def cached_signatures(arrs: DataFrame, num_hashes: int = 16) -> DataFrame:
-    """``minhash_signatures`` of ``(doc_id, shs)`` shingle arrays, held in the
-    one-slot ``minhash_signatures`` cache. The LSH band self-join reads its
-    input twice, once on the probe side and once under the broadcast, so an
-    uncached signature frame runs the 4-md5-per-shingle aggregate twice per
-    call. Every caller over the ``minhash_doc_arrays`` slot shares this key:
-    their plans are equal, so they hit one CacheManager entry anyway."""
-    return _fresh_cache(
-        "minhash_signatures",
-        minhash_signatures(arrs.select("doc_id", F.explode("shs").alias("sh")), num_hashes),
-    )
+def lsh_containment_pairs(docs: DataFrame) -> DataFrame:
+    """Asymmetric containment over the LSH candidate set of
+    ``minhash_near_duplicates`` at its defaults (``(doc_id, text)`` docs,
+    word 3-shingles, 16 lanes in 8×2 bands): every candidate pair where
+    |A∩B|/|A| or |A∩B|/|B| reaches 0.7, in the output schema of
+    ``containment_prefix_pairs`` (doc_a, doc_b, n_inter, n_a, n_b,
+    containment_a_micros, containment_b_micros), doc_a < doc_b. Recall is
+    LSH-candidate-limited by construction (Jaccard-tuned banding misses
+    most quote-inclusion pairs); ``containment_prefix_pairs`` is the
+    full-recall join. The result stays lazy: the pair list is huge on
+    duplicate-heavy corpora and streams into its consumer."""
+    index, overlap = _lsh_overlap(docs, "text", "doc_id", 3, 16, 8, 2)
+    return _containment_pairs(index, overlap, 7, 10)
 
 
 def incremental_minhash_new_duplicates(
@@ -560,8 +635,7 @@ def incremental_minhash_new_duplicates(
     plus a signature groupBy plus a verify groupBy per side (guide §2.4).
     """
     def banded(arrs: DataFrame) -> DataFrame:
-        sigs = minhash_signatures(arrs.select("doc_id", F.explode("shs").alias("sh")), num_hashes)
-        return _band_keys(sigs, bands, rows_per_band)
+        return _band_keys(minhash_signatures(arrs, num_hashes), bands, rows_per_band)
 
     arr_new = doc_shingle_arrays(new_docs, text_col, id_col, shingle_n).persist()
     arr_old = doc_shingle_arrays(corpus_docs, text_col, id_col, shingle_n).persist()
@@ -1235,9 +1309,9 @@ def prefix_filter_jaccard_pairs(
     # straight into a per-doc sorted distinct ARRAY, and everything
     # downstream derives from it without touching the corpus again: the
     # family collapse, set sizes, the rarity order and the verification
-    # sets. The family index is shared with containment_prefix_pairs and
-    # minhash_estimate_calibration over the same input, so a second join
-    # pays none of it again.
+    # sets. The family index is shared with every other set-similarity
+    # join over the same input, and the rarity order with
+    # containment_prefix_pairs, so a second join pays none of it again.
     #
     # Prefix filtering assumes an exact-deduped input — on a duplicate-heavy
     # corpus identical sets flood every prefix collision list and the
@@ -1246,7 +1320,8 @@ def prefix_filter_jaccard_pairs(
     # verified pairs expand back over family members at the end: output
     # identical to the naive all-pairs join, compute quadratic only in
     # DISTINCT similar sets.
-    index, doc_arr = _set_index(docs, text_col, id_col, shingle_n)
+    index = _set_index(docs, text_col, id_col, shingle_n)
+    doc_arr = _rarity_arrays(index)
     # p = n − ceil(t·n) + 1, with ceil(n·num/den) = (n·num + den − 1) div den
     pfx_len = (
         F.col("n_sh")
@@ -1294,12 +1369,12 @@ def prefix_filter_jaccard_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    rep_pairs = _jaccard_at_least(_pair_overlap(cands, index, index, "hs", ("members",)), threshold)
-    intra = _intra_family_pairs(index).select("doc_a", "doc_b", F.lit(1.0).alias("jaccard"))
-    out = _member_pairs(rep_pairs).unionByName(intra)
+    overlap = _pair_overlap(cands, index, index, "hs", ("members",))
     # verified-pair-list-sized; eager so the result never reads a set-index
     # slot that the next call on another input evicts
-    return eager_checkpoint(out, "prefix_filter_jaccard_pairs")
+    return eager_checkpoint(
+        _jaccard_pairs(index, overlap, threshold), "prefix_filter_jaccard_pairs"
+    )
 
 
 def containment_prefix_pairs(
@@ -1366,9 +1441,10 @@ def containment_prefix_pairs(
     # rank-order frame serves prefix extraction and the full-side candidate
     # explosion, while pair verification intersects the index's sorted
     # ``hs`` arrays, not the rank-order ``arr`` (intersecting those measured
-    # 1.15 vs 0.79 s on the candidate verify at sf0.1, r16). All of it is
-    # the family index prefix_filter_jaccard_pairs shares.
-    index, doc_arr = _set_index(docs, text_col, id_col, shingle_n)
+    # 1.15 vs 0.79 s on the candidate verify at sf0.1, r16). Both are the
+    # cached slots prefix_filter_jaccard_pairs shares.
+    index = _set_index(docs, text_col, id_col, shingle_n)
+    doc_arr = _rarity_arrays(index)
     # t_a = ⌈t·n⌉ (the overlap a qualifying pair must reach on its smaller
     # side), prefix length p = n − t_a + 1, with ⌈n·num/den⌉ =
     # (n·num + den − 1) div den. posexplode positions are 0-based GLOBAL
@@ -1419,32 +1495,14 @@ def containment_prefix_pairs(
         .distinct()
     )
     # pair verification at PAIR-LIST scale (_pair_overlap): the shingle
-    # table itself never shuffles again.
-    rep_pairs = _pair_overlap(cands, index, index, "hs", ("members",)).filter(
-        # compare the rational directly — flooring to micros first loses
-        # exactness whenever t_num·10^6 is not divisible by t_den (e.g.
-        # t=1/3 would reject a pair with containment exactly 1/3); the
-        # micros columns in the output are display-only
-        (F.col("n_inter") * t_den >= t_num * F.col("n_a"))
-        | (F.col("n_inter") * t_den >= t_num * F.col("n_b"))
-    )
-    # family expansion — containment is a set-level quantity, so every
-    # member pair inherits its representatives' (n_inter, n_a, n_b), with
-    # n_a/n_b following the member ids; intra-family pairs are identical
-    # sets, containment 1.0 at the family's set size
-    n_set = F.size("hs").cast("bigint")
-    intra = _intra_family_pairs(index).select(
-        "doc_a", "doc_b", n_set.alias("n_inter"), n_set.alias("n_a"), n_set.alias("n_b")
-    )
-    cross = _member_pairs(rep_pairs, oriented=(("n_a", "n_b"),))
-    out = cross.unionByName(intra).select(
-        "*",
-        F.expr("(n_inter * 1000000) div n_a").alias("containment_a_micros"),
-        F.expr("(n_inter * 1000000) div n_b").alias("containment_b_micros"),
-    )
+    # table itself never shuffles again. Containment is a set-level
+    # quantity, so member pairs inherit their representatives' counts.
+    overlap = _pair_overlap(cands, index, index, "hs", ("members",))
     # verified-pair-list-sized: materialized so the result never reads a
     # set-index slot that the next call on another input evicts
-    return eager_checkpoint(out, "containment_prefix_pairs")
+    return eager_checkpoint(
+        _containment_pairs(index, overlap, t_num, t_den), "containment_prefix_pairs"
+    )
 
 
 def band_selectivity_curve(
@@ -1507,64 +1565,41 @@ def minhash_estimate_calibration(
     Without the collapse a duplicate-heavy corpus pays the shingle join once
     per COPY pair — measured 136 s on the 30× probe vs ~linear after. The
     representative-level joins are candidate-pair-scale (AQE broadcasts the
-    pair side); the families and representative sets are the one-slot
-    cached family index (``_set_index``), read on its string sets.
+    pair side); the families, sets and signatures are the one-slot caches
+    of the MinHash path (``_lsh_overlap``) that ``minhash_near_duplicates``
+    reads too.
     """
-    # the family index over the string shingle sets; its rarest-first
-    # order is not read here
-    index, _ = _set_index(docs, text_col, id_col, shingle_n)
-    # signature stream explodes off the cached representative sets - a map,
-    # no exchange; the groupBy partial-aggregates so only per-doc partials
-    # cross the wire. The signatures join the index once and that frame is
-    # persisted: banding reads its lanes, and the pair verify reads each
-    # end's lanes, set and members through one join per end, instead of
-    # the 4-md5-per-shingle hot loop running once per reference.
     lanes = [f"h{s}" for s in range(num_hashes)]
-    reps = index.join(
-        minhash_signatures(index.select("doc_id", F.explode("shs").alias("sh")), num_hashes),
-        "doc_id",
-    ).persist()
-    try:
-        pairs = lsh_candidate_pairs(reps.select("doc_id", *lanes), bands, rows_per_band)
-        n_matching = sum(
-            F.when(F.col(f"{h}_a") == F.col(f"{h}_b"), 1).otherwise(0) for h in lanes
-        )
-        # a candidate without shingles cannot exist (signatures derive from
-        # shingles), so the overlap joins are inner and a shared-nothing
-        # pair reads n_inter = 0 exactly
-        overlap = _pair_overlap(pairs, reps, reps, carry=("members", *lanes))
-        rep_report = overlap.withColumn("n_matching_lanes", n_matching.cast("int")).select(
-            "doc_a",
-            "doc_b",
-            "members_a",
-            "members_b",
-            "n_matching_lanes",
-            F.expr(
-                f"(n_matching_lanes * cast(1000000 as bigint)) div {num_hashes}"
-            ).alias("est_jaccard_micros"),
-            F.expr("(n_inter * 1000000) div (n_a + n_b - n_inter)").alias(
-                "exact_jaccard_micros"
-            ),
-        )
-        # every per-pair quantity is a symmetric function of the two
-        # shingle SETS, so member pairs inherit their representatives' row
-        # verbatim; intra-family pairs are identical sets → every lane
-        # matches, Jaccard exactly 1 — always LSH candidates (all bands
-        # collide)
-        intra = _intra_family_pairs(index).select(
-            "doc_a",
-            "doc_b",
-            F.lit(num_hashes).cast("int").alias("n_matching_lanes"),
-            F.lit(1000000).cast("bigint").alias("est_jaccard_micros"),
-            F.lit(1000000).cast("bigint").alias("exact_jaccard_micros"),
-        )
-        out = _member_pairs(rep_report).unionByName(intra).withColumn(
-            "err_micros",
-            F.col("est_jaccard_micros") - F.col("exact_jaccard_micros"),
-        )
-        return eager_checkpoint(out, "minhash_estimate_calibration")
-    finally:
-        reps.unpersist()
+    index, overlap = _lsh_overlap(
+        docs, text_col, id_col, shingle_n, num_hashes, bands, rows_per_band, carry=tuple(lanes)
+    )
+    n_matching = sum(F.when(F.col(f"{h}_a") == F.col(f"{h}_b"), 1).otherwise(0) for h in lanes)
+    rep_report = overlap.withColumn("n_matching_lanes", n_matching.cast("int")).select(
+        "doc_a",
+        "doc_b",
+        "members_a",
+        "members_b",
+        "n_matching_lanes",
+        F.expr(f"(n_matching_lanes * cast(1000000 as bigint)) div {num_hashes}").alias(
+            "est_jaccard_micros"
+        ),
+        F.expr("(n_inter * 1000000) div (n_a + n_b - n_inter)").alias("exact_jaccard_micros"),
+    )
+    # every per-pair quantity is a symmetric function of the two shingle
+    # SETS, so member pairs inherit their representatives' row verbatim;
+    # intra-family pairs are identical sets → every lane matches, Jaccard
+    # exactly 1 — always LSH candidates (all bands collide)
+    intra = _intra_family_pairs(index).select(
+        "doc_a",
+        "doc_b",
+        F.lit(num_hashes).cast("int").alias("n_matching_lanes"),
+        F.lit(1000000).cast("bigint").alias("est_jaccard_micros"),
+        F.lit(1000000).cast("bigint").alias("exact_jaccard_micros"),
+    )
+    out = _member_pairs(rep_report).unionByName(intra).withColumn(
+        "err_micros", F.col("est_jaccard_micros") - F.col("exact_jaccard_micros")
+    )
+    return eager_checkpoint(out, "minhash_estimate_calibration")
 
 
 def soft_dedup_weights(

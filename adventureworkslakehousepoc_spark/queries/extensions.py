@@ -3647,48 +3647,11 @@ def dedup_containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-candidate-limited by construction; ``dedup_containment_exact`` is
     the FULL-recall path (prefix filtering on the smaller set), with the
     naive all-pairs join as its oracle. This row's oracle replays the
-    identical bands+containment computation, so the gate is exact."""
-    from ..operators.dedup import (
-        _fresh_cache,
-        _pair_overlap,
-        cached_signatures,
-        doc_shingle_arrays,
-        lsh_candidate_pairs,
-    )
+    identical bands+containment computation, so the gate is exact. See
+    operators/dedup.py::lsh_containment_pairs."""
+    from ..operators.dedup import lsh_containment_pairs
 
-    # one-slot cache (see operators/dedup.py): the LSH containment pair
-    # list is huge on duplicate-heavy corpora, so the result stays LAZY
-    # (streams into the sink) and the array cache is bounded to one
-    # frame instead of leaking per call. SAME slot key as the minhash
-    # family: the plans are identical, so a separate key would alias the
-    # same CacheManager entry anyway — and unpersisting either slot would
-    # silently drop the other's data.
-    #
-    # r16: shares the per-doc shingle-set ARRAY frame with the minhash
-    # family (one corpus shuffle); the intersection counts come from the
-    # shared pair-overlap verify (two pair-keyed joins, one array
-    # intersection per candidate). The signatures sit in the minhash
-    # family's signature slot, for the same reason.
-    arrs = _fresh_cache("minhash_doc_arrays", doc_shingle_arrays(_docs(spark, sf_dir)))
-    pairs = lsh_candidate_pairs(cached_signatures(arrs))
-    return (
-        _pair_overlap(pairs, arrs, arrs)
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_inter",
-            "n_a",
-            "n_b",
-            # exact integer div — a double divide + floor can flip at exact
-            # quotient boundaries (the repo-wide rule)
-            F.expr("(n_inter * 1000000) div n_a").alias("containment_a_micros"),
-            F.expr("(n_inter * 1000000) div n_b").alias("containment_b_micros"),
-        )
-        .filter(
-            (F.col("containment_a_micros") >= 700000)
-            | (F.col("containment_b_micros") >= 700000)
-        )
-    )
+    return lsh_containment_pairs(_docs(spark, sf_dir))
 
 
 _CONTAINMENT_EXACT_SQL = f"""

@@ -66,6 +66,8 @@ LONG_ARRAY_OFFSET = 16
 G1_REGION_TARGET = 2048
 G1_MIN_REGION = 2**20
 G1_MAX_REGION = 32 * 2**20
+# broadcast chunk (spark.broadcast.blockSize; a bare number would be KiB)
+BROADCAST_BLOCK_SIZE = "256k"
 
 __all__ = ["g1_region_bytes", "get_spark", "page_size_bytes", "stop_spark"]
 
@@ -135,6 +137,12 @@ def get_spark(
         # region size; a page is the unit of compression, so large column
         # chunks get 4x the pages at a slightly lower zstd ratio.
         .config("spark.hadoop.parquet.page.size", str(256 * 1024))
+        # a broadcast is serialized into blockSize chunks, each one byte[]:
+        # at the 4 MB default every broadcast, even of five rows, holds a
+        # humongous chunk on heaps under 32 GB (three regions at 4 GB).
+        # 256 KB, like the Parquet page, stays under every region size's
+        # humongous threshold
+        .config("spark.broadcast.blockSize", BROADCAST_BLOCK_SIZE)
         .config("spark.ui.enabled", "true" if ui else "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # plan-text audits (plans/audit.py, tests/test_physical.py) parse

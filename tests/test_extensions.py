@@ -1578,7 +1578,7 @@ def test_fresh_cache_recaches_a_slot_dropped_outside_it(spark, sf_dir):
     spark.catalog.clearCache()
     minhash_near_duplicates(docs).count()
     minhash_near_duplicates(docs).count()
-    assert _LAST_CACHED["minhash_doc_arrays"][0].storageLevel != StorageLevel.NONE
+    assert _LAST_CACHED["set_signatures"][0].storageLevel != StorageLevel.NONE
 
 
 def _signature_aggregate_runs(spark, df) -> int:
@@ -1607,19 +1607,27 @@ def _signature_aggregate_runs(spark, df) -> int:
     return runs
 
 
-def test_minhash_signatures_aggregate_once_per_call(spark, sf_dir):
-    """The LSH band self-join reads the signature frame on both sides; both
-    MinHash callers hold it in one cached slot, so a call computes the
-    16-lane aggregate once, not once per join side."""
+def test_minhash_signatures_aggregate_once_per_call(spark, sf_dir, monkeypatch):
+    """The LSH band self-join reads the signature frame on both sides and
+    the verify once per pair end; every MinHash caller holds it in one
+    cached slot, so a call computes the 16-lane aggregate once, not once
+    per reference. The calibration report is returned checkpointed, so its
+    count is read off the frame it checkpointed."""
     from adventureworkslakehousepoc_spark.catalog import load_tables
-    from adventureworkslakehousepoc_spark.operators.dedup import minhash_near_duplicates
+    from adventureworkslakehousepoc_spark.operators import dedup
     from adventureworkslakehousepoc_spark.queries.extensions import dedup_containment_pairs_q
 
+    checkpointed, checkpoint = [], dedup.eager_checkpoint
+    monkeypatch.setattr(
+        dedup, "eager_checkpoint", lambda df, label: checkpointed.append(df) or checkpoint(df, label)
+    )
     spark.catalog.clearCache()
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    for df in (minhash_near_duplicates(docs), dedup_containment_pairs_q(spark, sf_dir)):
+    for df in (dedup.minhash_near_duplicates(docs), dedup_containment_pairs_q(spark, sf_dir)):
         assert df.collect()
         assert _signature_aggregate_runs(spark, df) == 1
+    assert dedup.minhash_estimate_calibration(docs).collect()
+    assert _signature_aggregate_runs(spark, checkpointed[-1]) == 1
 
 
 def test_winsorize_excludes_nulls(spark):

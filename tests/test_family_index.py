@@ -1,22 +1,29 @@
 """Property tests of the dedup family index (``dedup._set_index``): on
 corpora with planted families of identical shingle sets, the joins that
 verify on representatives and expand verdicts from the carried ``members``
-arrays must return exactly what a pure-Python all-pairs join returns.
+arrays must return exactly what a pure-Python join over every doc returns:
+the all-pairs join for the prefix-filtered containment, and MinHash LSH
+banding for near-duplicates, LSH containment and the calibration report.
 Families of three or more copies exercise the intra-family pairs (each
 member paired with the slice after it) and cross-family pairs whose member
 ids interleave, so ``n_a``/``n_b`` must swap with the ids."""
 
 from __future__ import annotations
 
+import ast
 import hashlib
 from itertools import combinations
+from pathlib import Path
 
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
+import adventureworkslakehousepoc_spark as pkg
 from adventureworkslakehousepoc_spark.operators.dedup import (
     containment_prefix_pairs,
+    lsh_containment_pairs,
     minhash_estimate_calibration,
+    minhash_near_duplicates,
     prefix_filter_jaccard_pairs,
 )
 from adventureworkslakehousepoc_spark.plans.audit import capture_plans
@@ -31,8 +38,11 @@ _SETTINGS = dict(
     derandomize=True,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
 )
-# one family of four copies, one of three, a near copy and a one-off
-_PLANTED = [("a b c d a b", 4), ("a b c d a c", 3), ("a b c d a", 1), ("d c b a", 2)]
+# one family of four copies, one of three, a near copy, a one-off and two
+# docs under 3 words (no shingles, so in no pair)
+_PLANTED = [
+    ("a b c d a b", 4), ("a b c d a c", 3), ("a b c d a", 1), ("d c b a", 2), ("c a", 2),
+]
 
 
 def _corpus(fams, stride):
@@ -63,6 +73,46 @@ def _signature(ss):
     ]
 
 
+def _lsh_pairs(sets):
+    """Every doc pair (a < b) whose ``_signature`` collides on one of 8
+    bands of 2 lanes, over all docs: no family collapse."""
+    sigs = {i: _signature(ss) for i, ss in sets.items()}
+    for a, b in combinations(sorted(sets), 2):
+        if any(sigs[a][2 * j : 2 * j + 2] == sigs[b][2 * j : 2 * j + 2] for j in range(8)):
+            yield a, b, sigs[a], sigs[b]
+
+
+@given(fams=families, stride=st.sampled_from([1, 7, 37]))
+@example(fams=_PLANTED, stride=37)
+@settings(**_SETTINGS)
+def test_minhash_near_duplicates_equal_pure_lsh(spark, fams, stride):
+    rows = _corpus(fams, stride)
+    sets = _shingle_sets(rows)
+    want = set()
+    for a, b, _, _ in _lsh_pairs(sets):
+        j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        if j >= 0.5:
+            want.add((a, b, j))
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    assert {tuple(r) for r in minhash_near_duplicates(docs).collect()} == want
+
+
+@given(fams=families, stride=st.sampled_from([1, 7, 37]))
+@example(fams=_PLANTED, stride=37)
+@settings(**_SETTINGS)
+def test_lsh_containment_equals_pure_lsh(spark, fams, stride):
+    rows = _corpus(fams, stride)
+    sets = _shingle_sets(rows)
+    want = set()
+    for a, b, _, _ in _lsh_pairs(sets):
+        inter, n_a, n_b = len(sets[a] & sets[b]), len(sets[a]), len(sets[b])
+        c_a, c_b = inter * 10**6 // n_a, inter * 10**6 // n_b
+        if c_a >= 700000 or c_b >= 700000:
+            want.add((a, b, inter, n_a, n_b, c_a, c_b))
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    assert {tuple(r) for r in lsh_containment_pairs(docs).collect()} == want
+
+
 @given(fams=families, stride=st.sampled_from([1, 7, 37]))
 @example(fams=_PLANTED, stride=37)
 @settings(**_SETTINGS)
@@ -84,12 +134,9 @@ def test_containment_equals_all_pairs_join(spark, fams, stride):
 def test_calibration_equals_all_pairs_join(spark, fams, stride):
     rows = _corpus(fams, stride)
     sets = _shingle_sets(rows)
-    sigs = {i: _signature(ss) for i, ss in sets.items()}
     want = set()
-    for a, b in combinations(sorted(sets), 2):
-        if not any(sigs[a][2 * j : 2 * j + 2] == sigs[b][2 * j : 2 * j + 2] for j in range(8)):
-            continue
-        n_match = sum(x == y for x, y in zip(sigs[a], sigs[b]))
+    for a, b, sig_a, sig_b in _lsh_pairs(sets):
+        n_match = sum(x == y for x, y in zip(sig_a, sig_b))
         est = n_match * 10**6 // 16
         exact = len(sets[a] & sets[b]) * 10**6 // len(sets[a] | sets[b])
         want.add((a, b, n_match, est, exact, est - exact))
@@ -125,3 +172,22 @@ def test_minhash_verify_intersects_once(spark, sf_dir):
     # the result is a cached frame: once it has run, its adaptive plan
     # prints the final plan and then the initial one
     assert plan.split("== Initial Plan ==")[0].count("array_intersect(") == 1
+
+
+def test_dedup_internals_stay_in_dedup():
+    """Queries and other modules reach the set-similarity core through
+    dedup's public operators: a module importing its underscore helpers
+    builds a second copy of a path that dedup owns (its caches, slots and
+    verify)."""
+    root = Path(pkg.__file__).parent
+    dedup = root / "operators" / "dedup.py"
+    hits = [
+        (str(p.relative_to(root)), alias.name)
+        for p in sorted(root.rglob("*.py"))
+        if p != dedup
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[-1] == "dedup"
+        for alias in node.names
+        if alias.name.startswith("_")
+    ]
+    assert hits == []

@@ -15,6 +15,7 @@ import textwrap
 from adventureworkslakehousepoc_spark.catalog import load_tables
 from adventureworkslakehousepoc_spark.operators.dedup import doc_shingle_arrays
 from adventureworkslakehousepoc_spark.session import (
+    G1_MIN_REGION,
     LONG_ARRAY_OFFSET,
     PAGE_TABLE_SIZE,
     RESERVED_BYTES,
@@ -64,6 +65,16 @@ def test_shared_session_page_fills_one_region(spark):
     assert jvm.org.apache.spark.unsafe.Platform.LONG_ARRAY_OFFSET == LONG_ARRAY_OFFSET
     assert memory.pageSizeBytes() + LONG_ARRAY_OFFSET == region == 4 * MB
     assert PAGE_TABLE_SIZE * memory.pageSizeBytes() >= memory.maxHeapMemory()
+
+
+def test_broadcast_chunk_is_never_humongous(spark):
+    """A broadcast is written in ``spark.broadcast.blockSize`` chunks, one
+    ``byte[]`` each (Spark reads the size in KiB): under half the smallest
+    G1 region, no chunk is a humongous object on any heap."""
+    conf = spark.sparkContext._jsc.sc().conf()
+    chunk = conf.getSizeAsKb("spark.broadcast.blockSize", "4m") * 1024
+    assert chunk == 256 * 1024
+    assert chunk + LONG_ARRAY_OFFSET < G1_MIN_REGION // 2
 
 
 _CAPPED_SESSION = textwrap.dedent("""

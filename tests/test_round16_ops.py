@@ -48,11 +48,12 @@ def test_doc_shingle_arrays_equal_distinct_stream(spark):
 
 
 def test_jaccard_verify_arrays_exact(spark):
-    """_jaccard_verify over the array frame computes the exact set Jaccard
-    for given candidate pairs — hand-computed values, including a
+    """The pair-overlap verify over the array frame computes the exact set
+    Jaccard for given candidate pairs — hand-computed values, including a
     threshold-boundary pair and a no-overlap pair (dropped)."""
     from adventureworkslakehousepoc_spark.operators.dedup import (
-        _jaccard_verify,
+        _jaccard_at_least,
+        _pair_overlap,
         doc_shingle_arrays,
     )
 
@@ -63,7 +64,7 @@ def test_jaccard_verify_arrays_exact(spark):
     )
     got = {
         (r["doc_a"], r["doc_b"]): round(r["jaccard"], 9)
-        for r in _jaccard_verify(pairs, arrs, 0.4).collect()
+        for r in _jaccard_at_least(_pair_overlap(pairs, arrs, arrs), 0.4).collect()
     }
     # doc1: 5 shingles of 'a b c d e f g'; doc2 identical -> J = 1
     # doc3: 8 shingles, intersection = 5 -> J = 5/8 = 0.625
