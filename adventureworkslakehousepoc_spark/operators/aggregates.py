@@ -329,11 +329,7 @@ def quantile_normalize(
     # passes each = the caller's input evaluated SIX times. Materialize
     # the narrow (group, id, value) projection once — one row per scored
     # entity — and run both rank passes over it.
-    from ..plans.audit import eager_checkpoint
-
-    base = eager_checkpoint(
-        df.select(group_col, id_col, value_col), "quantile_normalize_input"
-    )
+    base = df.select(group_col, id_col, value_col).localCheckpoint(eager=True)
     gr = grouped_exact_ranks(base, group_col, value_col, id_col)
     glob = grouped_exact_ranks(
         base.select(F.lit(0).alias("_all"), F.col(id_col), F.col(value_col)),

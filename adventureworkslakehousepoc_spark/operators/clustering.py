@@ -182,9 +182,7 @@ def semantic_prune_pairs(
     )
     try:
         # pair-list-sized; eager so the assignment cache releases on return
-        from ..plans.audit import eager_checkpoint
-
-        return eager_checkpoint(out, "semantic_prune_pairs_out")
+        return out.localCheckpoint(eager=True)
     finally:
         e.unpersist()
 

@@ -225,8 +225,6 @@ def embedding_pca_power(
     )
     try:
         # d-row output; eager so the corpus cache is released on return
-        from ..plans.audit import eager_checkpoint
-
-        return eager_checkpoint(out, "embedding_pca_power_out")
+        return out.localCheckpoint(eager=True)
     finally:
         base.unpersist()

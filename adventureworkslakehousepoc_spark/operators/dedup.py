@@ -63,7 +63,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..catalog import file_versions
-from ..plans.audit import eager_checkpoint, record_plan
 
 __all__ = [
     "spread",
@@ -536,8 +535,7 @@ def _fresh_cache(key: str, df: DataFrame) -> DataFrame:
                     if prev.storageLevel == StorageLevel.NONE:
                         # dropped outside the slot (clearCache): cache again
                         prev.persist()
-                    record_plan(key, prev)  # consumer plans only show the
-                    return prev  # InMemoryTableScan — surface the cached tree
+                    return prev
             except Exception:
                 pass
             try:
@@ -545,7 +543,6 @@ def _fresh_cache(key: str, df: DataFrame) -> DataFrame:
             except Exception:
                 pass  # previous frame's session may be gone (tests cycle sessions)
             del _LAST_CACHED[key]
-        record_plan(key, df)
         df = df.persist()
         _LAST_CACHED[key] = (df, versions)
         return df
@@ -656,12 +653,9 @@ def incremental_minhash_new_duplicates(
         verified = _jaccard_at_least(_pair_overlap(cand, arr_new, arr_old), threshold)
         # duplicate-pair-list-sized: checkpointed eagerly so the array
         # caches can be released before returning
-        return eager_checkpoint(
-            verified.select(
-                F.col("doc_a").alias("new_id"), F.col("doc_b").alias("corpus_id"), "jaccard"
-            ),
-            "incremental_minhash_new_duplicates",
-        )
+        return verified.select(
+            F.col("doc_a").alias("new_id"), F.col("doc_b").alias("corpus_id"), "jaccard"
+        ).localCheckpoint(eager=True)
     finally:
         arr_new.unpersist()
         arr_old.unpersist()
@@ -1372,9 +1366,7 @@ def prefix_filter_jaccard_pairs(
     overlap = _pair_overlap(cands, index, index, "hs", ("members",))
     # verified-pair-list-sized; eager so the result never reads a set-index
     # slot that the next call on another input evicts
-    return eager_checkpoint(
-        _jaccard_pairs(index, overlap, threshold), "prefix_filter_jaccard_pairs"
-    )
+    return _jaccard_pairs(index, overlap, threshold).localCheckpoint(eager=True)
 
 
 def containment_prefix_pairs(
@@ -1500,9 +1492,7 @@ def containment_prefix_pairs(
     overlap = _pair_overlap(cands, index, index, "hs", ("members",))
     # verified-pair-list-sized: materialized so the result never reads a
     # set-index slot that the next call on another input evicts
-    return eager_checkpoint(
-        _containment_pairs(index, overlap, t_num, t_den), "containment_prefix_pairs"
-    )
+    return _containment_pairs(index, overlap, t_num, t_den).localCheckpoint(eager=True)
 
 
 def band_selectivity_curve(
@@ -1599,7 +1589,7 @@ def minhash_estimate_calibration(
     out = _member_pairs(rep_report).unionByName(intra).withColumn(
         "err_micros", F.col("est_jaccard_micros") - F.col("exact_jaccard_micros")
     )
-    return eager_checkpoint(out, "minhash_estimate_calibration")
+    return out.localCheckpoint(eager=True)
 
 
 def soft_dedup_weights(

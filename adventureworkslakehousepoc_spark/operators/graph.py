@@ -5,7 +5,8 @@ The canonical use here: collapse near-duplicate *pairs* (MinHash/SimHash
 output) into duplicate *clusters* and elect one representative per cluster —
 the final step of corpus dedup. Each iteration is one shuffle
 (join + min-aggregate); convergence takes O(log(diameter)) rounds and the
-loop's only driver-side work is the convergence check (a count), never data.
+loop's only driver-side work is the convergence check (``isEmpty``, a
+local take of one row), never data.
 
 At 100 TB: the edge list is the (tiny) near-dup pair set, not the corpus, so
 iterations run on |pairs| rows; every round is checkpointed to truncate
@@ -76,12 +77,12 @@ def connected_components(
         # cache entry to leak (the PageRank pattern); the seed labels are
         # released once the first round has materialized from them
         stepped = stepped.localCheckpoint(eager=True)
-        changed = stepped.filter("chg").limit(1).count()
+        converged = stepped.filter("chg").isEmpty()
         if cached is not None:
             cached.unpersist()
             cached = None
         labels = stepped.select("u", F.col("new_label").alias("label"))
-        if changed == 0:
+        if converged:
             break
     out = labels.select(F.col("u").alias("node"), F.col("label").alias("component"))
     if cached is not None:

@@ -386,8 +386,6 @@ def rho_loss_selection(
     out = top.withColumn("rank", F.row_number().over(w).cast("int"))
     try:
         # top-k-sized; eager so the bigram cache is released before return
-        from ..plans.audit import eager_checkpoint
-
-        return eager_checkpoint(out, "rho_loss_selection_topk")
+        return out.localCheckpoint(eager=True)
     finally:
         big.unpersist()

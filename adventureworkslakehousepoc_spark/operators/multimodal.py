@@ -31,7 +31,6 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.audit import eager_checkpoint
 from .dedup import check_pigeonhole, hamming_pairs
 
 __all__ = [
@@ -694,19 +693,16 @@ def image_ahash_pairs(
     # whole hex→gray→mean→bits chain re-inlines into every band row and
     # BOTH join sides (measured 30× slower); this is also the "index this
     # builds" of the docstring — fingerprints persist, payloads don't
-    fp = eager_checkpoint(
-        grays.select(
-            "doc_id",
-            "w",
-            "h",
-            F.expr(
-                "aggregate(zip_with(gs, sequence(0, size(gs) - 1),"
-                " (g, i) -> if(g >= mean_gray, shiftleft(cast(1 as bigint), i),"
-                " cast(0 as bigint))), cast(0 as bigint), (acc, x) -> acc + x)"
-            ).alias("fp"),
-        ),
-        "image_ahash_fingerprints",
-    )
+    fp = grays.select(
+        "doc_id",
+        "w",
+        "h",
+        F.expr(
+            "aggregate(zip_with(gs, sequence(0, size(gs) - 1),"
+            " (g, i) -> if(g >= mean_gray, shiftleft(cast(1 as bigint), i),"
+            " cast(0 as bigint))), cast(0 as bigint), (acc, x) -> acc + x)"
+        ).alias("fp"),
+    ).localCheckpoint(eager=True)
     return hamming_pairs(fp, bands, 12, max_hamming, keys=("w", "h")).select(
         "doc_a", "doc_b", F.col("w").alias("width"), F.col("h").alias("height"), "hamming"
     )
@@ -834,19 +830,11 @@ def image_phash_pairs(
         )
 
     rowdct, coefs = dct_sign_fp_terms(grid, elem)
-    gs_df = eager_checkpoint(
-        _content_ppm_gray(docs, text_col, id_col), "image_phash_gray"
-    )
-    rd_df = eager_checkpoint(
-        gs_df.select(
-            "doc_id", F.expr("array(" + ", ".join(rowdct) + ")").alias("rd")
-        ),
-        "image_phash_rowdct",
-    )
-    fp = eager_checkpoint(
-        rd_df.select("doc_id", _sign_fp(coefs).alias("fp")),
-        "image_phash_fingerprints",
-    )
+    gs_df = _content_ppm_gray(docs, text_col, id_col).localCheckpoint(eager=True)
+    rd_df = gs_df.select(
+        "doc_id", F.expr("array(" + ", ".join(rowdct) + ")").alias("rd")
+    ).localCheckpoint(eager=True)
+    fp = rd_df.select("doc_id", _sign_fp(coefs).alias("fp")).localCheckpoint(eager=True)
     # ceil: every one of the grid**2 - 1 bits lands in exactly one band
     return hamming_pairs(fp, bands, -(-(grid * grid - 1) // bands), max_hamming)
 
@@ -1050,18 +1038,15 @@ def audio_fingerprint_pairs(
         "  'prev', s)), 1)), 1),"
         " a -> named_struct('en', a.en, 'sa', a.sa, 'zc', a.zc, 'fx', a.fx))"
     )
-    wf_df = eager_checkpoint(
-        base.select(
-            "doc_id",
-            F.expr(
-                "element_at(transform(array(hx), hv ->"
-                f" transform(sequence(0, {windows - 1}), w ->"
-                f" if((w + 1) * n div {windows} <= w * n div {windows},"
-                f" {zeros}, {window_fold}))), 1)"
-            ).alias("wf"),
-        ),
-        "audio_fp_window_features",
-    )
+    wf_df = base.select(
+        "doc_id",
+        F.expr(
+            "element_at(transform(array(hx), hv ->"
+            f" transform(sequence(0, {windows - 1}), w ->"
+            f" if((w + 1) * n div {windows} <= w * n div {windows},"
+            f" {zeros}, {window_fold}))), 1)"
+        ).alias("wf"),
+    ).localCheckpoint(eager=True)
     # stage 3: mean-threshold bits. The per-feature totals are let-bound
     # in a one-element struct so they fold ONCE, not once per bit.
     tot = ", ".join(
@@ -1075,17 +1060,14 @@ def audio_fingerprint_pairs(
             f"if(element_at(wf, {w + 1}).{f} * {windows} > t.t{f},"
             f" cast({1 << k} as bigint), 0L)"
         )
-    fp = eager_checkpoint(
-        wf_df.select(
-            "doc_id",
-            F.expr(
-                f"element_at(transform(array(named_struct({tot})), t -> "
-                + " + ".join(bit_terms)
-                + "), 1)"
-            ).alias("fp"),
-        ),
-        "audio_fp_fingerprints",
-    )
+    fp = wf_df.select(
+        "doc_id",
+        F.expr(
+            f"element_at(transform(array(named_struct({tot})), t -> "
+            + " + ".join(bit_terms)
+            + "), 1)"
+        ).alias("fp"),
+    ).localCheckpoint(eager=True)
     return hamming_pairs(fp, bands, -(-n_bits // bands), max_hamming)
 
 
@@ -1133,36 +1115,29 @@ def video_frame_fingerprints(
         f" + 2 * (((c div {grid}) * h div {grid}) * w"
         f" + ((c % {grid}) * w div {grid})) + 1, 2), 16, 10) as bigint)"
     )
-    gs_df = eager_checkpoint(
-        base.select(
-            "doc_id",
-            "nf",
-            F.posexplode(
-                F.expr(
-                    "element_at(transform(array(hx), hv ->"
-                    " transform(sequence(0, nf - 1), fi ->"
-                    f" transform(sequence(0, {grid * grid - 1}),"
-                    f" c -> {cell}))), 1)"
-                )
-            ).alias("fi", "gs"),
-        ),
-        "video_phash_gray",
-    )
+    gs_df = base.select(
+        "doc_id",
+        "nf",
+        F.posexplode(
+            F.expr(
+                "element_at(transform(array(hx), hv ->"
+                " transform(sequence(0, nf - 1), fi ->"
+                f" transform(sequence(0, {grid * grid - 1}),"
+                f" c -> {cell}))), 1)"
+            )
+        ).alias("fi", "gs"),
+    ).localCheckpoint(eager=True)
     rowdct, coefs = dct_sign_fp_terms(
         grid, lambda n, i: f"element_at({'gs' if n == 'gr' else 'rd'}, {i})"
     )
-    rd_df = eager_checkpoint(
-        gs_df.select(
-            "doc_id",
-            "nf",
-            "fi",
-            F.expr("array(" + ", ".join(rowdct) + ")").alias("rd"),
-        ),
-        "video_phash_rowdct",
-    )
-    return eager_checkpoint(
-        rd_df.select("doc_id", "nf", "fi", _sign_fp(coefs).alias("fp")),
-        "video_phash_frame_fps",
+    rd_df = gs_df.select(
+        "doc_id",
+        "nf",
+        "fi",
+        F.expr("array(" + ", ".join(rowdct) + ")").alias("rd"),
+    ).localCheckpoint(eager=True)
+    return rd_df.select("doc_id", "nf", "fi", _sign_fp(coefs).alias("fp")).localCheckpoint(
+        eager=True
     )
 
 

@@ -88,21 +88,16 @@ def skew_key_diagnostics(
                     "key_count",
                 )
             )
-            from ..plans.audit import eager_checkpoint
-
-            rows = eager_checkpoint(
-                top.crossJoin(F.broadcast(stats)).select(
-                    "key_column",
-                    "key_value",
-                    "key_count",
-                    "n_rows_total",
-                    "n_keys_total",
-                    F.expr(
-                        "(max_count * n_keys_total * 1000000) div n_rows_total"
-                    ).alias("skew_factor_micros"),
-                ),
-                f"skew_key_profile:{c}",
-            )
+            rows = top.crossJoin(F.broadcast(stats)).select(
+                "key_column",
+                "key_value",
+                "key_count",
+                "n_rows_total",
+                "n_keys_total",
+                F.expr(
+                    "(max_count * n_keys_total * 1000000) div n_rows_total"
+                ).alias("skew_factor_micros"),
+            ).localCheckpoint(eager=True)
         finally:
             counts.unpersist()
         out = rows if out is None else out.unionByName(rows)

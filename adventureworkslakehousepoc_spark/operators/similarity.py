@@ -351,15 +351,12 @@ def ivf_incremental_update(
     makes the two bit-identical when every append vector contributed
     exactly once.
     """
-    from ..plans.audit import eager_checkpoint, record_plan
-
     base = embeddings.filter(F.col("vec_id") % append_mod != 0)
     codebook = ivf_base_codebook(embeddings, n_centroids, append_mod)
 
     # the base index materializes ONCE (persist, released in the finally
     # below — an eager checkpoint here leaked the embedding-bearing index
     # frame across calls); the append assignment never re-reads it
-    record_plan("ivf_incremental_base_index", ivf_assign_to_codebook(base, codebook))
     cells_base = ivf_assign_to_codebook(base, codebook).persist()
 
     base_cd, base_n = ivf_cell_sketch(cells_base, "sb", "nb")
@@ -403,7 +400,7 @@ def ivf_incremental_update(
     )
     try:
         # K-row output; eager so the base-index cache is released on return
-        return eager_checkpoint(out, "ivf_incremental_update_out")
+        return out.localCheckpoint(eager=True)
     finally:
         cells_base.unpersist()
 

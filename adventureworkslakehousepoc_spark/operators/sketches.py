@@ -389,9 +389,7 @@ def kmv_source_overlap(
     try:
         # |sources|²-bounded; eager so the distinct shingle cache is
         # released before returning (containment_prefix_pairs discipline)
-        from ..plans.audit import eager_checkpoint
-
-        return eager_checkpoint(out, "kmv_source_overlap_pairs")
+        return out.localCheckpoint(eager=True)
     finally:
         hs.unpersist()
 
@@ -589,9 +587,7 @@ def bloom_decontaminate(
     )
     try:
         # per-doc-sized; eager so the gram cache is released on return
-        from ..plans.audit import eager_checkpoint
-
-        return eager_checkpoint(out, "bloom_decontaminate_out")
+        return out.localCheckpoint(eager=True)
     finally:
         grams.unpersist()
 

@@ -753,20 +753,15 @@ def vocab_coverage(
         # |ks| rows — materialize eagerly so the vocabulary-scale counts
         # cache can be released before returning (no cache accumulation
         # across repeated calls in one session)
-        from ..plans.audit import eager_checkpoint
-
-        return eager_checkpoint(
-            curve.crossJoin(F.broadcast(total)).select(
-                "top_k",
-                "covered_tokens",
-                "n_types_used",
-                "total_tokens",
-                F.expr("(covered_tokens * 1000000) div total_tokens").alias(
-                    "coverage_micros"
-                ),
+        return curve.crossJoin(F.broadcast(total)).select(
+            "top_k",
+            "covered_tokens",
+            "n_types_used",
+            "total_tokens",
+            F.expr("(covered_tokens * 1000000) div total_tokens").alias(
+                "coverage_micros"
             ),
-            "vocab_coverage_curve",
-        )
+        ).localCheckpoint(eager=True)
     finally:
         counts.unpersist()
 
@@ -989,7 +984,6 @@ def perplexity_buckets(
     assignment is deterministic and the DuckDB oracle replays it.
     """
     from .aggregates import grouped_exact_ranks
-    from ..plans.audit import eager_checkpoint
 
     scores = unigram_lm_scores(docs, text_col, id_col).select(
         "doc_id",
@@ -1002,12 +996,9 @@ def perplexity_buckets(
     # row per DOC, so materialize it once; the three machinery passes then
     # scan doc-scale rows. Measured: ccnet_perplexity_buckets 3.2 → ~1.3 s
     # at sf0.1.
-    scored = eager_checkpoint(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang")).join(
-            scores, "doc_id"
-        ),
-        "perplexity_scored",
-    )
+    scored = docs.select(F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang")).join(
+        scores, "doc_id"
+    ).localCheckpoint(eager=True)
     ranks = grouped_exact_ranks(scored, "lang", "mean_micros", "doc_id")
     bucket_idx = F.expr("((rank - 1) * 3) div n")
     return ranks.select(

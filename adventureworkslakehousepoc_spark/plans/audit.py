@@ -1,60 +1,141 @@
-"""Physical-plan capture for eagerly-materializing operators.
+"""Plan audit: what Spark ran, read from its own status stores, and the
+loop-invariant higher-order-function detector.
 
-The round-6 leak sweep made several operators eagerly
-``localCheckpoint(eager=True)`` their (pair-list-scale) results so
-corpus-scale caches can be released before returning. Correct — but it
-blinded the mechanical plan audit: by the time ``scripts/plan_report.py``
-explains the returned frame, the plan is a checkpoint scan and every
-feature counter reads zero, so the anti-pattern scan never sees the real
-execution plan. Same story for one-slot-cached frames, which downstream
-plans show only as ``InMemoryTableScan``.
+``StatusWindow`` marks the newest job id and the newest SQL execution id
+when it opens and later returns the jobs and SQL executions started since
+that mark, each execution with the plan description Spark recorded for it
+(``physicalPlanDescription``). It is the one reader of the status stores
+for the plan audit (``tests/test_physical.py``), ``scripts/plan_report.py``
+and ``scripts/probe_query.py``: an operator that materializes at build
+time (``localCheckpoint(eager=True)``, an iterative loop, a write
+round-trip) leaves its real plans there, so the audit sees them without
+any hook in the operators. A consumer of a cached frame needs none either:
+its executed plan prints ``InMemoryTableScan`` over the ``InMemoryRelation``
+and the cached plan.
 
-Fix: operators route their final materialization through
-``eager_checkpoint`` (and ``_fresh_cache`` calls ``record_plan``), which —
-ONLY while a ``capture_plans()`` context is active — stringifies the
-pre-checkpoint executed plan into the active sink. Zero overhead outside
-the audit: the sink is None and the helpers reduce to the plain calls.
+Spark records each description in ``spark.sql.ui.explainMode``; a caller
+that audits plans holds it at ``extended`` (``extended_plans``), so every
+description carries the optimized logical plan the HOF detector reads and
+the same physical ``toString`` an ``executedPlan()`` gives. The engine's
+own sessions keep Spark's default.
 """
 
 from __future__ import annotations
 
+import re
+import time
 from contextlib import contextmanager
+from itertools import takewhile
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import SparkSession
 
-_SINK: list[tuple[str, str]] | None = None
+_SECTION = re.compile(r"^== (.+) ==$", re.M)
+_INITIAL_PLAN = re.compile(r"^\+- == Initial Plan ==$", re.M)
+
+
+def _items(seq):
+    """A Scala ``Seq``'s items, one py4j call each, lazily."""
+    return (seq.apply(i) for i in range(seq.size()))
+
+
+class Execution(NamedTuple):
+    """One SQL execution: its id and the plan description Spark recorded."""
+
+    id: int
+    description: str
+
+    def section(self, name: str) -> str:
+        """The text under the description's ``== <name> ==`` header (for
+        example ``Optimized Logical Plan``), '' if there is none."""
+        parts = _SECTION.split(self.description)
+        return dict(zip(parts[1::2], parts[2::2])).get(name, "")
+
+    @property
+    def physical(self) -> str:
+        """The physical plan that ran. An adaptive plan that has run prints
+        its final plan, then (at the margin) its initial plan, left out."""
+        return _INITIAL_PLAN.split(self.section("Physical Plan"))[0]
 
 
 @contextmanager
-def capture_plans():
-    """Collect (label, executed-plan string) for every audited
-    materialization that runs inside the block. Not reentrant; the plan
-    report is a single-threaded sweep."""
-    global _SINK
-    prev, _SINK = _SINK, []
+def extended_plans(spark: SparkSession):
+    """Record every SQL execution started inside the block with its
+    optimized logical and physical plans (``extended`` explain mode)."""
+    key = "spark.sql.ui.explainMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "extended")
     try:
-        yield _SINK
+        yield
     finally:
-        _SINK = prev
+        spark.conf.set(key, prev)
 
 
-def record_plan(label: str, df: DataFrame) -> None:
-    """If a capture is active, record df's pre-materialization physical
-    plan. Explain failures never break the operator — the audit is
-    best-effort by design."""
-    if _SINK is not None:
-        try:
-            _SINK.append(
-                (label, df._jdf.queryExecution().executedPlan().toString())
-            )
-        except Exception:
-            pass
+class StatusWindow:
+    """The Spark jobs and SQL executions started since the window opened.
 
+    Keyed on ids, never on list positions: the stores keep only the newest
+    1000 jobs and executions, so a position shifts as old entries go. Each
+    read drains the listener bus first, then walks the store newest-first
+    and stops at the mark, so it costs a few py4j calls per entry started
+    in the window, however long the session has run."""
 
-def eager_checkpoint(df: DataFrame, label: str) -> DataFrame:
-    """``df.localCheckpoint(eager=True)`` with plan capture for the audit."""
-    record_plan(label, df)
-    return df.localCheckpoint(eager=True)
+    def __init__(self, spark: SparkSession) -> None:
+        sc = spark.sparkContext._jsc.sc()
+        self._bus, self._jobs = sc.listenerBus(), sc.statusStore()
+        self._sql = spark._jsparkSession.sharedState().statusStore()
+        self._opened_ms = int(time.time() * 1000)
+        self._job_mark = self._execution_mark = -1
+        job, run = next(self._newest_jobs(), None), next(self._newest_executions(), None)
+        self._job_mark = job.jobId() if job else -1
+        self._execution_mark = run.executionId() if run else -1
+
+    def _newest_jobs(self):
+        self._bus.waitUntilEmpty(30_000)
+        jobs = _items(self._jobs.jobsList(None))  # the store lists newest first
+        return takewhile(lambda j: j.jobId() > self._job_mark, jobs)
+
+    def _newest_executions(self):
+        self._bus.waitUntilEmpty(30_000)
+        execs = _items(self._sql.executionsList().reverse())  # listed oldest first
+        return takewhile(lambda e: e.executionId() > self._execution_mark, execs)
+
+    def jobs(self) -> list:
+        """The started jobs (JVM ``JobData``), oldest first."""
+        return list(self._newest_jobs())[::-1]
+
+    def executions(self) -> list[Execution]:
+        """The started SQL executions, oldest first."""
+        runs = self._newest_executions()
+        return [Execution(e.executionId(), e.physicalPlanDescription()) for e in runs][::-1]
+
+    def stages(self) -> list:
+        """The last attempts (JVM ``StageData``) of the stages the started
+        jobs ran in the window. A stage a job lists but skipped, because an
+        earlier job had already written its shuffle, ran before the window
+        opened and is left out."""
+        ids = sorted({sid for job in self.jobs() for sid in _items(job.stageIds())})
+        stages = (self._jobs.lastStageAttempt(sid) for sid in ids)
+        return [
+            s
+            for s in stages
+            if s.submissionTime().isDefined() and s.submissionTime().get().getTime() >= self._opened_ms
+        ]
+
+    def node_metric(self, execution_id: int, node: str, metric: str) -> int:
+        """Sum of ``metric`` over the execution's plan-graph nodes whose name
+        starts with ``node``, as its own tasks reported it. The graph also
+        lists the plan that filled each cache the execution reads, whose
+        metrics this execution never updates."""
+        values = self._sql.executionMetrics(execution_id)
+        accumulators = [
+            m.accumulatorId()
+            for n in _items(self._sql.planGraph(execution_id).allNodes())
+            if n.name().startswith(node)
+            for m in _items(n.metrics())
+            if m.name() == metric
+        ]
+        return sum(int(values.get(a).get()) for a in accumulators if values.get(a).isDefined())
 
 
 # ---------------------------------------------------------------------------

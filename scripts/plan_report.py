@@ -63,25 +63,23 @@ def main() -> None:
             "dedup_clusters",
         }
     ]
-    from adventureworkslakehousepoc_spark.plans.audit import capture_plans
+    from adventureworkslakehousepoc_spark.plans.audit import StatusWindow, extended_plans
 
     rows = []
-    for name in names:
-        try:
-            # eager operators materialize during BUILD — capture the
-            # pre-checkpoint plans they run then, or the final explain
-            # below reads an all-zero checkpoint scan (r6 blind spot)
-            with capture_plans() as fragments:
+    with extended_plans(spark):
+        for name in names:
+            try:
+                window = StatusWindow(spark)
                 df = qs[name](spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            plan += "".join(frag for _, frag in fragments)
-            n_frag = len(fragments)
-        except Exception as e:  # noqa: BLE001 — report, don't abort the sweep
-            rows.append((name, f"ERROR: {e}"))
-            continue
-        counts = {k: len(re.findall(rx, plan)) for k, rx in FEATURES.items()}
-        counts["fragments"] = n_frag
-        rows.append((name, counts))
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                runs = window.executions()
+            except Exception as e:  # noqa: BLE001 — report, don't abort the sweep
+                rows.append((name, f"ERROR: {e}"))
+                continue
+            plan += "".join(e.physical for e in runs)
+            counts = {k: len(re.findall(rx, plan)) for k, rx in FEATURES.items()}
+            counts["runs"] = len(runs)
+            rows.append((name, counts))
 
     out = [
         "# PLANS — physical-plan audit (generated by scripts/plan_report.py)",
@@ -93,16 +91,14 @@ def main() -> None:
         "iterative builders (BPE, k-means, PageRank, CC) are audited there too",
         "but excluded here because constructing them runs their loops.",
         "",
-        "Eagerly-materializing operators (round-6 leak sweep: prefix/",
-        "containment joins, skew diagnostics, vocab coverage, incremental",
-        "MinHash) run their real plans at BUILD time; those plans are captured",
-        "pre-checkpoint via plans/audit.py and merged into the counts — the",
-        "`frags` column shows how many captured fragments a row includes, so",
-        "an all-zero row with frags=0 is a genuinely narrow scan-side plan,",
-        "not a blind spot. Loop-running builders (BPE, k-means, CC, PageRank)",
-        "remain excluded; their loop structure is documented in SCALE.md.",
+        "Operators that materialize while the query is built (eager",
+        "checkpoints, iterative loops, write round-trips) run their real",
+        "plans then. Each row adds the plans of every SQL execution its build",
+        "started, read from Spark's status store (`plans/audit.StatusWindow`)",
+        "— the `runs` column counts them, so an all-zero row with runs=0 is a",
+        "genuinely narrow scan-side plan, not a blind spot.",
         "",
-        "| query | exchanges | 1-part | BHJ | SMJ | pushed filters | top-k | arrow | row-py | cartesian | frags |",
+        "| query | exchanges | 1-part | BHJ | SMJ | pushed filters | top-k | arrow | row-py | cartesian | runs |",
         "|---|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name, c in rows:
@@ -113,7 +109,7 @@ def main() -> None:
             f"| {name} | {c['exchanges']} | {c['single_part']} | {c['bhj']} | "
             f"{c['smj']} | {'yes' if c['pushed'] else '—'} | "
             f"{c['top_k']} | {c['py_arrow']} | {c['py_row']} | {c['cartesian']} | "
-            f"{c['fragments']} |"
+            f"{c['runs']} |"
         )
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")

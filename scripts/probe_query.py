@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Isolate and time registered queries with the noop sink (guide §1.4):
 warm-up + min-of-N, inter-rep GC, per-query job descriptions, the Spark
-jobs each build started (status-store job ids before and after the builder
-call: schema inference, eager checkpoints, streaming runs at build time),
-the shuffle bytes written by the jobs each build and execute started, and
+jobs each build started (schema inference, eager checkpoints, streaming
+runs at build time), the shuffle bytes written by the stages each build
+and execute ran (both read through ``plans/audit.StatusWindow``), and
 the memory plus disk the persisted RDDs hold after each call (operator
 caches, local checkpoints).
 
@@ -21,35 +21,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from adventureworkslakehousepoc_spark.plans.audit import StatusWindow  # noqa: E402
 from adventureworkslakehousepoc_spark.session import get_spark  # noqa: E402
-
-
-def newest_job_id(spark) -> int:
-    """Id of the newest job in the status store (-1 if none)."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty(30_000)
-    jobs = sc.statusStore().jobsList(None)
-    if jobs.size() == 0:
-        return -1
-    return max(jobs.apply(0).jobId(), jobs.apply(jobs.size() - 1).jobId())
-
-
-def shuffle_mb(spark, first_job: int, last_job: int, since_ms: int) -> float:
-    """Shuffle-write MB of the stages that jobs ``first_job..last_job`` ran:
-    a stage they list but skipped, or ran before ``since_ms`` for an earlier
-    job, wrote nothing in this window."""
-    store = spark.sparkContext._jsc.sc().statusStore()
-    stage_ids = set()
-    for job_id in range(first_job, last_job + 1):
-        ids = store.job(job_id).stageIds()
-        stage_ids.update(ids.apply(k) for k in range(ids.size()))
-    written = 0
-    for sid in stage_ids:
-        stage = store.lastStageAttempt(sid)
-        submitted = stage.submissionTime()
-        if submitted.isDefined() and submitted.get().getTime() >= since_ms:
-            written += stage.shuffleWriteBytes()
-    return written / 1e6
 
 
 def cached_mb(spark) -> float:
@@ -75,12 +48,11 @@ def main() -> None:
     for name in args:
         def once() -> tuple[float, int, float, float]:
             t0 = time.perf_counter()
-            since_ms = int(time.time() * 1000)
-            j0 = newest_job_id(spark)
+            window = StatusWindow(spark)
             df = queries[name](spark, sf_dir)
-            build_jobs = newest_job_id(spark) - j0
+            build_jobs = len(window.jobs())
             df.write.format("noop").mode("overwrite").save()
-            mb = shuffle_mb(spark, j0 + 1, newest_job_id(spark), since_ms)
+            mb = sum(s.shuffleWriteBytes() for s in window.stages()) / 1e6
             return time.perf_counter() - t0, build_jobs, mb, cached_mb(spark)
 
         spark.sparkContext.setJobDescription(f"probe: {name}")

@@ -1479,42 +1479,25 @@ def test_set_index_is_shared_by_containment_and_prefix(spark, sf_dir):
         prefix_filter_jaccard_pairs,
         word_shingles,
     )
-    from adventureworkslakehousepoc_spark.plans.audit import capture_plans
+    from adventureworkslakehousepoc_spark.plans.audit import StatusWindow, extended_plans
 
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def execution_ids():
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-        seq = store.executionsList()
-        return {seq.apply(i).executionId() for i in range(seq.size())}
-
-    def parquet_files_read(eid):
-        # a plan graph also lists the plan that filled each cache it reads;
-        # the metric counts only what this execution's tasks scanned
-        nodes, values = store.planGraph(eid).allNodes(), store.executionMetrics(eid)
-        n = 0
-        for i in range(nodes.size()):
-            node = nodes.apply(i)
-            ms = node.metrics()
-            for k in range(ms.size() if node.name().startswith("Scan parquet") else 0):
-                if ms.apply(k).name() == "number of files read":
-                    v = values.get(ms.apply(k).accumulatorId())
-                    n += int(v.get()) if v.isDefined() else 0
-        return n
+    def parquet_files_read(window, runs):
+        return sum(window.node_metric(e.id, "Scan parquet", "number of files read") for e in runs)
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     small = docs.filter(F.col("doc_id") % 3 == 0)
-    with capture_plans() as fragments:
+    with extended_plans(spark):
         containment_prefix_pairs(small)
-        before = execution_ids()
+        window = StatusWindow(spark)
         pairs = prefix_filter_jaccard_pairs(small)
-        ran = execution_ids() - before
+        ran = window.executions()
+        calibration = StatusWindow(spark)
         minhash_estimate_calibration(small)
-        ran_calibration = execution_ids() - before - ran
-    plans = [plan for label, plan in fragments if label == "prefix_filter_jaccard_pairs"]
-    assert len(plans) == 1 and "InMemoryTableScan" in plans[0]
-    assert ran and sum(parquet_files_read(e) for e in ran) == 0, "the prefix join re-read its input"
-    assert ran_calibration and sum(parquet_files_read(e) for e in ran_calibration) == 0, (
+        ran_calibration = calibration.executions()
+    # the last execution is the eager checkpoint of the verified pairs
+    assert ran and "InMemoryTableScan" in ran[-1].physical
+    assert parquet_files_read(window, ran) == 0, "the prefix join re-read its input"
+    assert ran_calibration and parquet_files_read(window, ran_calibration) == 0, (
         "the calibration re-read its input"
     )
 
@@ -1617,12 +1600,14 @@ def test_minhash_signatures_aggregate_once_per_call(spark, sf_dir, monkeypatch):
     from adventureworkslakehousepoc_spark.operators import dedup
     from adventureworkslakehousepoc_spark.queries.extensions import dedup_containment_pairs_q
 
-    checkpointed, checkpoint = [], dedup.eager_checkpoint
-    monkeypatch.setattr(
-        dedup, "eager_checkpoint", lambda df, label: checkpointed.append(df) or checkpoint(df, label)
-    )
     spark.catalog.clearCache()
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
+    checkpointed, checkpoint = [], type(docs).localCheckpoint
+    monkeypatch.setattr(
+        type(docs),
+        "localCheckpoint",
+        lambda df, *args, **kw: checkpointed.append(df) or checkpoint(df, *args, **kw),
+    )
     for df in (dedup.minhash_near_duplicates(docs), dedup_containment_pairs_q(spark, sf_dir)):
         assert df.collect()
         assert _signature_aggregate_runs(spark, df) == 1
@@ -2692,11 +2677,13 @@ def test_pca_power_dimension_scalable_at_d512(spark):
         noise = np.array([rng.uniform(-0.05, 0.05) for _ in range(d)])
         rows.append((i, [float(x) for x in (strength * axis + noise)]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    from adventureworkslakehousepoc_spark.plans.audit import capture_plans
+    from adventureworkslakehousepoc_spark.plans.audit import StatusWindow, extended_plans
 
-    with capture_plans() as fragments:
+    with extended_plans(spark):
+        window = StatusWindow(spark)
         res = embedding_pca_power(df, iterations=4, dim=d)
-    plan = "".join(frag for _, frag in fragments)
+    # the last execution is the eager checkpoint of the result
+    plan = window.executions()[-1].physical
     assert "Generate" in plan  # posexplode by dim, not unrolled aggregates
     assert len(plan) < 400_000, len(plan)  # plan size O(1) in d
 

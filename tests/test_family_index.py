@@ -26,7 +26,7 @@ from adventureworkslakehousepoc_spark.operators.dedup import (
     minhash_near_duplicates,
     prefix_filter_jaccard_pairs,
 )
-from adventureworkslakehousepoc_spark.plans.audit import capture_plans
+from adventureworkslakehousepoc_spark.plans.audit import StatusWindow, extended_plans
 
 # a 4-word vocabulary keeps shingle sets small and overlapping
 text = st.lists(st.sampled_from("abcd"), min_size=1, max_size=8).map(" ".join)
@@ -152,10 +152,15 @@ def test_pair_intersection_is_computed_once(spark):
     docs = spark.createDataFrame(
         [(1, quote), (2, quote + " x y z"), (4, quote)], "doc_id bigint, text string"
     )
-    with capture_plans() as fragments:
-        containment_prefix_pairs(docs)
-        prefix_filter_jaccard_pairs(docs)
-    counts = {label: plan.count("array_intersect(") for label, plan in fragments}
+    counts = {}
+    with extended_plans(spark):
+        for join in (containment_prefix_pairs, prefix_filter_jaccard_pairs):
+            window = StatusWindow(spark)
+            join(docs)
+            # the join's last execution is the eager checkpoint of its
+            # verified pairs
+            plan = window.executions()[-1].physical
+            counts[join.__name__] = plan.count("array_intersect(")
     assert counts["containment_prefix_pairs"] == 1
     assert counts["prefix_filter_jaccard_pairs"] == 1
 

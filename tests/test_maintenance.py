@@ -4,7 +4,6 @@ reference-breadth bronze fan-out."""
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 from pyspark.sql import functions as F
@@ -13,20 +12,12 @@ from adventureworkslakehousepoc_spark.catalog import load_tables
 from adventureworkslakehousepoc_spark.operators.maintenance import compact_parquet
 from adventureworkslakehousepoc_spark.pipelines.bronze import bronze_fanout
 from adventureworkslakehousepoc_spark.plans.registry import DatasetRegistry
-from adventureworkslakehousepoc_spark.streaming.runner import run_available_now
+from adventureworkslakehousepoc_spark.streaming.runner import run_available_now, scratch_dir
 
-
-def _stream_root():
-    from adventureworkslakehousepoc_spark.streaming.runner import stream_tmp_root
-    import os as _os
-
-    root = stream_tmp_root()
-    _os.makedirs(root, exist_ok=True)
-    return root
 
 def test_compaction_reduces_files_preserves_rows(spark, sf_dir):
     ev = load_tables(spark, sf_dir, ("events",))["events"]
-    path = tempfile.mkdtemp(prefix="compact-", dir=_stream_root()) + "/t"
+    path = scratch_dir("compact") + "/t"
     ev.repartition(24).write.parquet(path)  # simulate micro-batch small files
     before = [f for f in os.listdir(path) if f.endswith(".parquet")]
     assert len(before) >= 24
@@ -40,7 +31,7 @@ def test_compaction_reduces_files_preserves_rows(spark, sf_dir):
 
 def test_schema_evolution_merge(spark, sf_dir):
     c = load_tables(spark, sf_dir, ("customer",))["customer"]
-    path = tempfile.mkdtemp(prefix="evolve-", dir=_stream_root()) + "/t"
+    path = scratch_dir("evolve") + "/t"
     c.select("c_custkey", "c_name").write.parquet(path)
     c.select("c_custkey", "c_name", "c_acctbal").write.mode("append").parquet(path)
     merged = spark.read.option("mergeSchema", "true").parquet(path)
@@ -53,7 +44,7 @@ def test_schema_evolution_merge(spark, sf_dir):
 def test_incremental_multibatch_equals_batch(spark, sf_dir):
     """SURVEY §5.3: running incrementally (4 micro-batches) == one batch."""
     ev = load_tables(spark, sf_dir, ("events",))["events"]
-    src = tempfile.mkdtemp(prefix="inc-", dir=_stream_root())
+    src = scratch_dir("inc")
     now = time.time()
     for i in range(4):
         part = ev.filter((F.col("event_id") % 4) == i)

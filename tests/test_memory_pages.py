@@ -82,6 +82,7 @@ _CAPPED_SESSION = textwrap.dedent("""
     sys.path.insert(0, {root!r})
     from adventureworkslakehousepoc_spark.catalog import load_tables
     from adventureworkslakehousepoc_spark.operators.dedup import doc_shingle_arrays
+    from adventureworkslakehousepoc_spark.plans.audit import StatusWindow
     from adventureworkslakehousepoc_spark.session import get_spark
 
     spark = get_spark(
@@ -89,23 +90,15 @@ _CAPPED_SESSION = textwrap.dedent("""
         extra_conf={{"spark.memory.fraction": {fraction!r}}},
     )
     docs = load_tables(spark, {sf_dir!r}, ("documents",))["documents"]
+    window = StatusWindow(spark)
     n_docs, n_shingles = doc_shingle_arrays(docs, "text", "doc_id", 5).selectExpr(
         "count(*)", "sum(size(shs))"
     ).first()
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty(30000)
-    store = sc.statusStore()
-    jobs = store.jobsList(None)
-    stages = {{
-        j.stageIds().apply(k)
-        for j in (jobs.apply(i) for i in range(jobs.size()))
-        for k in range(j.stageIds().size())
-    }}
-    memory = sc.env().memoryManager()
+    memory = spark.sparkContext._jsc.sc().env().memoryManager()
     print(json.dumps({{
         "n_docs": n_docs,
         "n_shingles": n_shingles,
-        "spilled": sum(store.lastStageAttempt(s).diskBytesSpilled() for s in stages),
+        "spilled": sum(s.diskBytesSpilled() for s in window.stages()),
         "page": memory.pageSizeBytes(),
         "pool": memory.maxHeapMemory(),
     }}))

@@ -159,62 +159,164 @@ def test_hash_sample_is_scan_side_filter(spark, sf_dir):
     assert "Exchange" not in plan, plan
 
 
-def test_plan_audit_all_batch_queries(spark, sf_dir):
-    """Sweep every batch query's physical plan: no CartesianProduct, no
-    row-at-a-time Python (BatchEvalPython), and any Exchange SinglePartition
-    must sit directly above a KEYLESS PARTIAL aggregate — the canonical
-    global-aggregate shape where one pre-combined row per partition crosses
-    the exchange. A single-partition exchange over anything else is a funnel
-    that dies at scale.
+_LOOP = "iterative loop: each round is checkpointed or probed for convergence"
+_WRITE = "write round-trip: writes files and reads them back"
+_TAKE = "driver-side take: a value read to the driver shapes the plan"
+_RELEASE = "release-before-return: the result is checkpointed so a cache it reads is freed"
+_ONCE = "materialize-once: several plan arms read one checkpointed frame"
 
-    Eagerly-materializing operators run their real plans at BUILD time
-    behind a checkpoint boundary; plans/audit.capture_plans surfaces those
-    pre-checkpoint plans so the sweep covers them too (the r6 report-side
-    blind spot, closed for the hard gate as well)."""
+# Batch queries whose build starts Spark jobs with every input schema warm,
+# each with the reason the build cannot stay lazy yet (ROADMAP Direction 2).
+# The sweep fails on a listed query that builds without a job, so the map
+# shrinks as builds turn lazy; it must not grow.
+BUILD_JOBS = {
+    "ann_pandas_udf_scores": _TAKE,
+    "ann_pq_adc_topk": _TAKE,
+    "ann_recall_calibration": _TAKE,
+    "audio_fingerprint_dedup": _ONCE,
+    "bloom_decontaminate": _RELEASE,
+    "bpe_apply_encode": _LOOP,
+    "bpe_merge_induction": _LOOP,
+    "bt_preference_strengths": _LOOP,
+    "bt_winrate_calibration": _LOOP,
+    "ccnet_perplexity_buckets": _ONCE,
+    "cdf_scd2_history": _WRITE,
+    "cdf_schema_evolution_read": _WRITE,
+    "cdf_snapshot_diff": _WRITE,
+    "cdf_time_travel_asof_v2": _WRITE,
+    "corpus_datasheet": _ONCE,
+    "dawid_skene_labelers": _LOOP,
+    "dedup_clusters": _LOOP,
+    "dedup_containment_exact": _RELEASE,
+    "dedup_prefix_filter_jaccard": _RELEASE,
+    "doremi_domain_weights": _LOOP,
+    "embedding_dim_ablation": _TAKE,
+    "embedding_pca_power": _LOOP,
+    "entity_resolution_parts": _LOOP,
+    "exact_quantiles_distributed": _ONCE,
+    "graph_triangle_counts": _ONCE,
+    "histogram_quantile_sketch": _ONCE,
+    "image_ahash_dedup": _ONCE,
+    "image_phash_dedup": _ONCE,
+    "incremental_minhash_index": _RELEASE,
+    "ivf_incremental_update": _RELEASE,
+    "kmv_source_overlap": _RELEASE,
+    "kneser_ney_bigram_scores": _ONCE,
+    "logistic_quality_probe": _LOOP,
+    "minhash_estimate_error": _RELEASE,
+    "mmr_diverse_topk": _LOOP,
+    "pagerank_dup_graph": _LOOP,
+    "probe_calibration_ece": _LOOP,
+    "probe_conformal_gate": _LOOP,
+    "quantile_normalize_doclen": _ONCE,
+    "rho_loss_selection": _RELEASE,
+    "s11_orc_roundtrip": _WRITE,
+    "s8_sink_roundtrip": _WRITE,
+    "scd2_point_in_time_join": _WRITE,
+    "schema_evolution_read": _WRITE,
+    "semantic_prune_pairs": _RELEASE,
+    "semantic_prune_pairs_scaled": _TAKE,
+    "skew_key_diagnostics": _RELEASE,
+    "training_corpus_pipeline_v3": _RELEASE,
+    "training_corpus_pipeline_v4": _ONCE,
+    "training_corpus_pipeline_v5": _ONCE,
+    "training_corpus_pipeline_v6": _ONCE,
+    "training_corpus_pipeline_v7": _RELEASE,
+    "vacuum_apply_roundtrip": _WRITE,
+    "vacuum_retention_plan": _WRITE,
+    "video_phash_dedup": _ONCE,
+    "video_shot_boundaries": _ONCE,
+    "vocab_coverage_curve": _RELEASE,
+    "winsorize_price_stats": _ONCE,
+}
+
+
+def test_plan_audit_all_batch_queries(spark, sf_dir):
+    """Build every batch query once and audit what the build left: the
+    returned frame's plan plus every SQL execution the build started, read
+    from Spark's status store (``plans/audit.StatusWindow``), so eager
+    checkpoints, iterative loops and write round-trips are audited on the
+    plans they really ran.
+
+    - No CartesianProduct and no row-at-a-time Python (BatchEvalPython).
+    - An Exchange SinglePartition must sit directly above a KEYLESS
+      PARTIAL aggregate: the global-aggregate shape where one pre-combined
+      row per partition crosses the exchange. Over anything else it is a
+      funnel that dies at scale.
+    - No loop-invariant expensive call inside a higher-order-function
+      lambda (``find_loop_invariant_hof_calls``), read on the optimized
+      logical plans, where CollapseProject has already inlined producers.
+    - Scalar output columns only: the canonical comparator sorts tuples of
+      scalar cells, and an array/map/struct/binary column crashes it
+      (``TypeError: unhashable type``), as an array column once did for
+      the ``agg_percentiles_approx`` row.
+    - No Spark job while building, once every input schema is warm, unless
+      the query is named in ``BUILD_JOBS`` with its reason; a named query
+      whose build starts none fails too, so the map lists exactly the
+      builds that still run jobs.
+
+    Streaming queries are left out: building one runs its stream by
+    contract, and each sink is a parquet-materialized scalar relation with
+    its own oracle row."""
     import re
 
     import __spark_entry__ as entry_mod
 
+    from adventureworkslakehousepoc_spark.catalog import load_tables
     from adventureworkslakehousepoc_spark.plans.audit import (
-        capture_plans,
+        StatusWindow,
+        extended_plans,
         find_loop_invariant_hof_calls,
     )
 
+    load_tables(spark, sf_dir)  # warm every input table's schema
     qs = entry_mod.queries()
+    assert set(BUILD_JOBS) <= {n for n in qs if not n.startswith("st_")}
     failures = []
-    for name, fn in qs.items():
-        if name.startswith("st_"):
-            continue
-        with capture_plans() as fragments:
-            df = fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        plan += "".join(frag for _, frag in fragments)
-        if "CartesianProduct" in plan:
-            failures.append((name, "CartesianProduct"))
-        if "BatchEvalPython" in plan:
-            failures.append((name, "BatchEvalPython"))
-        # round-12 gate: loop-invariant expensive calls inside HOF lambdas
-        # (the CollapseProject cost-multiplication shape — see
-        # plans/audit.py and SCALE.md round 11). The optimized logical plan
-        # is the authoritative surface: CollapseProject has already run,
-        # so the inlined-producer shape is visible there.
-        logical = df._jdf.queryExecution().optimizedPlan().toString()
-        for hit in find_loop_invariant_hof_calls(logical + plan):
-            failures.append((name, f"loop-invariant HOF call: {hit}"))
-        lines = plan.splitlines()
-        for i, line in enumerate(lines):
-            if "Exchange SinglePartition" not in line:
+    with extended_plans(spark):
+        for name, fn in qs.items():
+            if name.startswith("st_"):
                 continue
-            below = " ".join(lines[i + 1 : i + 2])
-            # partial_ = plain keyless two-phase agg; merge_ = the distinct-
-            # aggregate form (count_distinct): partial per-key dedup below,
-            # keyless MERGE above — both cross the exchange with one
-            # pre-combined row per partition, the shape this gate permits
-            if not re.search(
-                r"(Hash|Sort|Object.*)Aggregate\(keys?=\[\], functions=\[(partial_|merge_)",
-                below,
-            ):
-                failures.append((name, f"SinglePartition over: {below.strip()[:90]}"))
+            window = StatusWindow(spark)
+            df = fn(spark, sf_dir)
+            n_jobs = len(window.jobs())
+            if n_jobs and name not in BUILD_JOBS:
+                failures.append((name, f"{n_jobs} Spark jobs while building"))
+            if not n_jobs and name in BUILD_JOBS:
+                failures.append((name, "builds with no Spark job: drop it from BUILD_JOBS"))
+            runs = window.executions()
+            qe = df._jdf.queryExecution()
+            plan = qe.executedPlan().toString() + "".join(e.physical for e in runs)
+            logical = qe.optimizedPlan().toString() + "".join(
+                e.section("Optimized Logical Plan") for e in runs
+            )
+            nonscalar = [
+                f"{f.name}: {f.dataType.simpleString()}"
+                for f in df.schema.fields
+                if f.dataType.simpleString().startswith(("array", "map", "struct", "binary"))
+            ]
+            if nonscalar:
+                failures.append((name, f"non-scalar columns {nonscalar}"))
+            if "CartesianProduct" in plan:
+                failures.append((name, "CartesianProduct"))
+            if "BatchEvalPython" in plan:
+                failures.append((name, "BatchEvalPython"))
+            for hit in find_loop_invariant_hof_calls(logical + plan):
+                failures.append((name, f"loop-invariant HOF call: {hit}"))
+            lines = plan.splitlines()
+            for i, line in enumerate(lines):
+                if "Exchange SinglePartition" not in line:
+                    continue
+                below = " ".join(lines[i + 1 : i + 2])
+                # partial_ = plain keyless two-phase agg; merge_ = the distinct-
+                # aggregate form (count_distinct): partial per-key dedup below,
+                # keyless MERGE above — both cross the exchange with one
+                # pre-combined row per partition, the shape this gate permits
+                if not re.search(
+                    r"(Hash|Sort|Object.*)Aggregate\(keys?=\[\], functions=\[(partial_|merge_)",
+                    below,
+                ):
+                    failures.append((name, f"SinglePartition over: {below.strip()[:90]}"))
     assert not failures, failures
 
 

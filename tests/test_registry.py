@@ -5,22 +5,16 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from adventureworkslakehousepoc_spark.catalog import load_tables
 from adventureworkslakehousepoc_spark.pipelines.medallion import medallion_context
+from adventureworkslakehousepoc_spark.plans.audit import StatusWindow
 from adventureworkslakehousepoc_spark.plans.registry import DatasetRegistry, PipelineContext
+from adventureworkslakehousepoc_spark.streaming.runner import scratch_dir
 
-
-def _stream_root():
-    from adventureworkslakehousepoc_spark.streaming.runner import stream_tmp_root
-
-    root = stream_tmp_root()
-    os.makedirs(root, exist_ok=True)
-    return root
 
 def test_lazy_topological_resolution(spark):
     dp = DatasetRegistry()
@@ -84,7 +78,7 @@ def test_medallion_run_materializes_warehouse(spark, sf_dir):
     parquet; fact_weather recomputed from the materialized warehouse matches
     the in-memory plan."""
     ctx = medallion_context(spark, sf_dir)
-    wh = tempfile.mkdtemp(prefix="wh-", dir=_stream_root())
+    wh = scratch_dir("wh")
     out = ctx.run(wh, names=["dim_geo", "dim_product", "fact_sales", "fact_weather"])
     assert set(out) == {"dim_geo", "dim_product", "fact_sales", "fact_weather"}
     for name, path in out.items():
@@ -100,7 +94,7 @@ def test_medallion_run_materializes_warehouse(spark, sf_dir):
 def test_partitioned_write(spark, sf_dir):
     """S8 at scale: facts partitioned by date at write time (SURVEY §4.4)."""
     ctx = medallion_context(spark, sf_dir)
-    wh = tempfile.mkdtemp(prefix="whp-", dir=_stream_root())
+    wh = scratch_dir("whp")
     out = ctx.run(wh, names=["fact_sales"], partition_by={"fact_sales": ["order_date"]})
     parts = sorted(
         d
@@ -138,22 +132,9 @@ def _days_ctx(spark, rows):
     return PipelineContext(dp, spark)
 
 
-def _last_write_plan(spark, path):
-    """Physical plan of the latest SQL execution that wrote ``path``, as the
-    SQL status store recorded it (searched newest first: a long session
-    holds hundreds of executions)."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    for i in reversed(range(execs.size())):
-        plan = execs.apply(i).physicalPlanDescription()
-        if "InsertIntoHadoopFsRelationCommand" in plan and path in plan:
-            return plan
-    return None
-
-
 def test_run_rejects_unregistered_partition_by_name(spark):
     ctx = _days_ctx(spark, 10)
-    wh = tempfile.mkdtemp(prefix="whu-", dir=_stream_root())
+    wh = scratch_dir("whu")
     with pytest.raises(ValueError, match="'dys'"):
         ctx.run(wh, partition_by={"dys": ["day"]})
     assert os.listdir(wh) == []
@@ -165,8 +146,10 @@ def test_partitioned_run_writes_one_file_per_partition_value(spark):
     file (the input layout alone would give up to 4) and a NULL day is one
     ``__HIVE_DEFAULT_PARTITION__`` file that reads back as NULL."""
     ctx = _days_ctx(spark, 600)
-    wh = tempfile.mkdtemp(prefix="whl-", dir=_stream_root())
+    wh = scratch_dir("whl")
+    window = StatusWindow(spark)
     path = ctx.run(wh, partition_by={"days": ["day"]})["days"]
+    run = window.executions()
     dirs = [d for d in os.listdir(path) if d.startswith("day=")]
     assert len(dirs) == 50
     assert "day=__HIVE_DEFAULT_PARTITION__" in dirs
@@ -182,13 +165,17 @@ def test_partitioned_run_writes_one_file_per_partition_value(spark):
     assert back.filter(F.col("day").isNull()).count() == 12
 
     n = spark.sparkContext.defaultParallelism
-    plan = _last_write_plan(spark, path)
-    assert plan and re.search(rf"hashpartitioning\(day#\d+, {n}\)", plan), plan
+    writes = [
+        e.description
+        for e in run
+        if "InsertIntoHadoopFsRelationCommand" in e.description and path in e.description
+    ]
+    assert writes and re.search(rf"hashpartitioning\(day#\d+, {n}\)", writes[-1]), writes
 
 
 def test_partitioned_run_of_empty_dataset_writes_no_partitions(spark):
     ctx = _days_ctx(spark, 0)
-    wh = tempfile.mkdtemp(prefix="whe-", dir=_stream_root())
+    wh = scratch_dir("whe")
     path = ctx.run(wh, partition_by={"days": ["day"]})["days"]
     assert [d for d in os.listdir(path) if d.startswith("day=")] == []
 
@@ -382,17 +369,6 @@ def test_timestamp_encoding_rewritten_in_place_is_reinferred(spark, tmp_path):
     )
 
 
-def _newest_job_id(spark):
-    """Id of the newest job in the status store (-1 if none); a difference
-    of two readings is the number of jobs started in between."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty(30_000)
-    jobs = sc.statusStore().jobsList(None)
-    if jobs.size() == 0:
-        return -1
-    return max(jobs.apply(0).jobId(), jobs.apply(jobs.size() - 1).jobId())
-
-
 def test_second_load_and_stream_of_a_file_start_no_jobs(spark, sf_dir, tmp_path):
     """Schema inference runs a footer job the first time a file is read;
     every later load_tables / stream_table of the same file version takes
@@ -403,19 +379,17 @@ def test_second_load_and_stream_of_a_file_start_no_jobs(spark, sf_dir, tmp_path)
 
     for name in ("orders", "events"):
         shutil.copy(os.path.join(sf_dir, f"{name}.parquet"), tmp_path)
-    j0 = _newest_job_id(spark)
-    load_tables(spark, str(tmp_path), ("orders",))
-    j1 = _newest_job_id(spark)
-    assert j1 > j0, "first read of a fresh file should infer its schema"
-    load_tables(spark, str(tmp_path), ("orders",))
-    assert _newest_job_id(spark) == j1
-
-    stream_table(spark, str(tmp_path), "events")
-    j2 = _newest_job_id(spark)
-    assert j2 > j1, "first read of a fresh file should infer its schema"
-    events = stream_table(spark, str(tmp_path), "events")
-    assert _newest_job_id(spark) == j2
-    assert dict(events.dtypes)["ts"] == "timestamp"
+    for read in (
+        lambda: load_tables(spark, str(tmp_path), ("orders",))["orders"],
+        lambda: stream_table(spark, str(tmp_path), "events"),
+    ):
+        window = StatusWindow(spark)
+        read()
+        assert window.jobs(), "first read of a fresh file should infer its schema"
+        window = StatusWindow(spark)
+        df = read()
+        assert not window.jobs()
+    assert dict(df.dtypes)["ts"] == "timestamp"
 
 
 def test_two_loads_of_one_table_self_join(spark, sf_dir):
@@ -432,30 +406,6 @@ def test_two_loads_of_one_table_self_join(spark, sf_dir):
         " ON a.o_custkey = b.o_custkey AND a.o_orderkey < b.o_orderkey"
     ).fetchone()
     assert n == want > 0
-
-
-def test_driver_window_schemas_are_scalar_only(spark):
-    """The scalar-only rule exists for the canonical comparator: it sorts
-    tuples of scalar cells, and an array/map/struct/binary output column
-    crashes it (`TypeError: unhashable type`), which is how round 4 lost the
-    `agg_percentiles_approx` row. Every registered query must therefore
-    emit scalar columns only. Streaming queries are excluded (building them
-    executes streams; their sinks are parquet-materialized scalar relations
-    by construction and each has its own oracle row)."""
-    import __spark_entry__ as entry_mod
-
-    qs = entry_mod.queries()
-    offenders = {}
-    for name in [n for n in qs if not n.startswith("st_")]:
-        df = qs[name](spark, "/root/testdata/sf0.001")
-        nonscalar = {
-            f.name: f.dataType.simpleString()
-            for f in df.schema.fields
-            if f.dataType.simpleString().startswith(("array", "map", "struct", "binary"))
-        }
-        if nonscalar:
-            offenders[name] = nonscalar
-    assert not offenders, offenders
 
 
 def test_query_registry_rejects_duplicate_names(monkeypatch):

@@ -80,12 +80,13 @@ def test_prefix_filter_plan_has_no_window(spark):
     from adventureworkslakehousepoc_spark.operators.dedup import (
         prefix_filter_jaccard_pairs,
     )
-    from adventureworkslakehousepoc_spark.plans.audit import capture_plans
+    from adventureworkslakehousepoc_spark.plans.audit import StatusWindow, extended_plans
 
     docs = _docs(spark)
-    with capture_plans() as sink:
+    with extended_plans(spark):
+        window = StatusWindow(spark)
         prefix_filter_jaccard_pairs(docs).collect()
-    all_plans = "\n".join(plan for _, plan in sink)
+    all_plans = "\n".join(e.physical for e in window.executions())
     assert "Window" not in all_plans, "row_number window is back in the prefix path"
     # the rarest-first order must still be derived somewhere (the struct sort)
     assert "collect_list" in all_plans

@@ -4,7 +4,6 @@ interval-join watermark tail, CDF incremental == batch, bronze fan-out stream.""
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 from pyspark.sql import functions as F
@@ -12,21 +11,13 @@ from pyspark.sql import functions as F
 from adventureworkslakehousepoc_spark.catalog import load_tables
 from adventureworkslakehousepoc_spark.operators.joins import interval_join
 from adventureworkslakehousepoc_spark.queries.streaming_queries import _build_change_log
-from adventureworkslakehousepoc_spark.streaming.runner import run_available_now, stream_table
+from adventureworkslakehousepoc_spark.streaming.runner import run_available_now, scratch_dir, stream_table
 
-
-def _stream_root():
-    from adventureworkslakehousepoc_spark.streaming.runner import stream_tmp_root
-    import os as _os
-
-    root = stream_tmp_root()
-    _os.makedirs(root, exist_ok=True)
-    return root
 
 def test_watermark_drops_late_rows(spark):
     """A row arriving in a later micro-batch, with event time > watermark
     behind, must not resurrect its (already finalized) window."""
-    src = tempfile.mkdtemp(prefix="late-", dir=_stream_root())
+    src = scratch_dir("late")
     on_time = spark.createDataFrame(
         [(1, "2024-01-01 10:05:00"), (2, "2024-01-01 10:10:00"), (3, "2024-01-01 12:30:00")],
         "id int, ts_s string",

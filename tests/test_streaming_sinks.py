@@ -4,7 +4,6 @@ and the full streaming medallion DAG (stream driving path + static dims)."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -14,27 +13,23 @@ from adventureworkslakehousepoc_spark.pipelines.medallion import (
     medallion_streaming_context,
 )
 from adventureworkslakehousepoc_spark.queries.streaming_queries import _build_change_log
-from adventureworkslakehousepoc_spark.streaming.runner import run_available_now, run_foreach_batch
+from adventureworkslakehousepoc_spark.streaming.runner import (
+    run_available_now,
+    run_foreach_batch,
+    scratch_dir,
+)
 from adventureworkslakehousepoc_spark.streaming.sinks import (
     foreach_batch_upsert,
     running_counts_with_state,
 )
 
 
-def _stream_root():
-    from adventureworkslakehousepoc_spark.streaming.runner import stream_tmp_root
-    import os as _os
-
-    root = stream_tmp_root()
-    _os.makedirs(root, exist_ok=True)
-    return root
-
 def test_foreach_batch_upsert_matches_snapshot(spark, sf_dir):
     """Streaming MERGE emulation: applying the change stream via foreachBatch
     must land the same final state as batch snapshot compaction."""
     cf = _build_change_log(spark, sf_dir)
-    state_dir = tempfile.mkdtemp(prefix="upsert-", dir=_stream_root()) + "/state"
-    ckpt = tempfile.mkdtemp(prefix="upsert-ck-", dir=_stream_root())
+    state_dir = scratch_dir("upsert") + "/state"
+    ckpt = scratch_dir("upsert-ck")
     foreach_batch_upsert(cf.read_stream(spark), state_dir, ["c_custkey"], ckpt)
     got = spark.read.parquet(state_dir)
     expected = cf.latest_snapshot(spark, ["c_custkey"])
@@ -53,9 +48,9 @@ def test_foreach_batch_upsert_incremental_batches(spark, sf_dir):
 
     from adventureworkslakehousepoc_spark.streaming.cdf import ChangeFeed
 
-    path = tempfile.mkdtemp(prefix="inc-cdf-", dir=_stream_root()) + "/log"
-    state_dir = tempfile.mkdtemp(prefix="inc-upsert-", dir=_stream_root()) + "/state"
-    ckpt = tempfile.mkdtemp(prefix="inc-upsert-ck-", dir=_stream_root())
+    path = scratch_dir("inc-cdf") + "/log"
+    state_dir = scratch_dir("inc-upsert") + "/state"
+    ckpt = scratch_dir("inc-upsert-ck")
     shutil.rmtree(path, ignore_errors=True)
     cf = ChangeFeed(path)
     base = load_tables(spark, sf_dir, ("customer",))["customer"].select(
@@ -143,9 +138,9 @@ def test_foreach_batch_upsert_one_file_per_microbatch(spark, sf_dir):
 
     from adventureworkslakehousepoc_spark.streaming.cdf import ChangeFeed
 
-    path = tempfile.mkdtemp(prefix="mb-cdf-", dir=_stream_root()) + "/log"
-    state_dir = tempfile.mkdtemp(prefix="mb-upsert-", dir=_stream_root()) + "/state"
-    ckpt = tempfile.mkdtemp(prefix="mb-upsert-ck-", dir=_stream_root())
+    path = scratch_dir("mb-cdf") + "/log"
+    state_dir = scratch_dir("mb-upsert") + "/state"
+    ckpt = scratch_dir("mb-upsert-ck")
     shutil.rmtree(path, ignore_errors=True)
     cf = ChangeFeed(path)
     base = load_tables(spark, sf_dir, ("customer",))["customer"].select(
@@ -209,11 +204,10 @@ def test_snapshot_diff_classifies_all_three_change_types(spark):
     v2 updates 1 (one column), deletes 2, inserts 4 — so 1=updated(1 col),
     2=removed, 4=added, 3 silent."""
     import shutil
-    import tempfile
 
     from adventureworkslakehousepoc_spark.streaming.cdf import ChangeFeed, snapshot_diff
 
-    path = tempfile.mkdtemp(prefix="cdfdiff-", dir=_stream_root())
+    path = scratch_dir("cdfdiff")
     shutil.rmtree(path, ignore_errors=True)
     cf = ChangeFeed(path)
     mk = lambda rows: spark.createDataFrame(rows, "k bigint, a string, b bigint")
@@ -235,7 +229,6 @@ def test_incremental_aggregate_merge_applies_multiple_batches(spark, sf_dir):
     """The streaming IVM sink must actually run incrementally (one
     micro-batch per staged file) and its merged state must equal the full
     batch aggregate."""
-    import tempfile
 
     from adventureworkslakehousepoc_spark.streaming.runner import stage_stream_dir
     from adventureworkslakehousepoc_spark.streaming.sinks import (
@@ -244,10 +237,9 @@ def test_incremental_aggregate_merge_applies_multiple_batches(spark, sf_dir):
     )
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
-    root = _stream_root()
     files = []
     for i in range(3):
-        d = tempfile.mkdtemp(prefix=f"ivmtest-slice{i}-", dir=root)
+        d = scratch_dir(f"ivmtest-slice{i}")
         ev.filter((F.col("event_id") % 3) == i).coalesce(1).write.mode(
             "overwrite"
         ).parquet(d)
@@ -264,9 +256,9 @@ def test_incremental_aggregate_merge_applies_multiple_batches(spark, sf_dir):
             F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("value_cents"),
         )
 
-    state = tempfile.mkdtemp(prefix="ivmtest-state-", dir=root)
+    state = scratch_dir("ivmtest-state")
     os.rmdir(state)
-    ckpt = tempfile.mkdtemp(prefix="ivmtest-ckpt-", dir=root)
+    ckpt = scratch_dir("ivmtest-ckpt")
     n = foreach_batch_merge_aggregates(stream, state, ["user_id"], partials, ckpt)
     assert n >= 2, f"expected multiple micro-batches, got {n}"
     got = {r["user_id"]: (r["n_events"], r["value_cents"])
@@ -312,7 +304,6 @@ def test_merge_state_new_checkpoint_lineage_not_swallowed(spark, sf_dir):
     old batch_id-only dedup silently dropped its first batches as
     'redeliveries'. The lineage id recorded in _CURRENT must scope the
     skip so genuinely new data merges in."""
-    import tempfile
 
     from adventureworkslakehousepoc_spark.streaming.runner import stage_stream_dir
     from adventureworkslakehousepoc_spark.streaming.sinks import (
@@ -321,10 +312,9 @@ def test_merge_state_new_checkpoint_lineage_not_swallowed(spark, sf_dir):
     )
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
-    root = _stream_root()
 
     def stage_slice(pred, tag):
-        d = tempfile.mkdtemp(prefix=f"lineage-{tag}-", dir=root)
+        d = scratch_dir(f"lineage-{tag}")
         ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(d)
         f = sorted(x for x in os.listdir(d) if x.endswith(".parquet"))[0]
         return stage_stream_dir(os.path.join(d, f))
@@ -335,19 +325,19 @@ def test_merge_state_new_checkpoint_lineage_not_swallowed(spark, sf_dir):
         )
 
     schema = ev.schema
-    state = tempfile.mkdtemp(prefix="lineage-state-", dir=root)
+    state = scratch_dir("lineage-state")
     os.rmdir(state)
     # lineage 1: even event ids
     src1 = stage_slice((F.col("event_id") % 2) == 0, "a")
     s1 = spark.readStream.schema(schema).parquet(src1)
-    ckpt1 = tempfile.mkdtemp(prefix="lineage-ck1-", dir=root)
+    ckpt1 = scratch_dir("lineage-ck1")
     n1 = foreach_batch_merge_aggregates(s1, state, ["user_id"], partials, ckpt1)
     assert n1 >= 1
     # lineage 2: odd event ids, FRESH checkpoint, same state_dir — its
     # batch 0 must be applied, not skipped
     src2 = stage_slice((F.col("event_id") % 2) == 1, "b")
     s2 = spark.readStream.schema(schema).parquet(src2)
-    ckpt2 = tempfile.mkdtemp(prefix="lineage-ck2-", dir=root)
+    ckpt2 = scratch_dir("lineage-ck2")
     n2 = foreach_batch_merge_aggregates(s2, state, ["user_id"], partials, ckpt2)
     assert n2 >= 1, "fresh-lineage batches were swallowed as redeliveries"
     got = {r["user_id"]: r["n_events"]
