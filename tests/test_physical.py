@@ -231,8 +231,8 @@ BUILD_JOBS = {
 }
 
 
-def test_plan_audit_all_batch_queries(spark, sf_dir):
-    """Build every batch query once and audit what the build left: the
+def test_plan_audit_all_batch_queries(batch_builds):
+    """Audit what each batch query's one build left (``batch_builds``): the
     returned frame's plan plus every SQL execution the build started, read
     from Spark's status store (``plans/audit.StatusWindow``), so eager
     checkpoints, iterative loops and write round-trips are audited on the
@@ -246,77 +246,45 @@ def test_plan_audit_all_batch_queries(spark, sf_dir):
     - No loop-invariant expensive call inside a higher-order-function
       lambda (``find_loop_invariant_hof_calls``), read on the optimized
       logical plans, where CollapseProject has already inlined producers.
-    - Scalar output columns only: the canonical comparator sorts tuples of
-      scalar cells, and an array/map/struct/binary column crashes it
-      (``TypeError: unhashable type``), as an array column once did for
-      the ``agg_percentiles_approx`` row.
     - No Spark job while building, once every input schema is warm, unless
       the query is named in ``BUILD_JOBS`` with its reason; a named query
       whose build starts none fails too, so the map lists exactly the
       builds that still run jobs.
 
-    Streaming queries are left out: building one runs its stream by
-    contract, and each sink is a parquet-materialized scalar relation with
-    its own oracle row."""
+    The scalar-output rule reads the same builds
+    (``test_registry.py::test_driver_window_schemas_are_scalar_only``)."""
     import re
 
-    import __spark_entry__ as entry_mod
+    from adventureworkslakehousepoc_spark.plans.audit import find_loop_invariant_hof_calls
 
-    from adventureworkslakehousepoc_spark.catalog import load_tables
-    from adventureworkslakehousepoc_spark.plans.audit import (
-        StatusWindow,
-        extended_plans,
-        find_loop_invariant_hof_calls,
-    )
-
-    load_tables(spark, sf_dir)  # warm every input table's schema
-    qs = entry_mod.queries()
-    assert set(BUILD_JOBS) <= {n for n in qs if not n.startswith("st_")}
+    assert set(BUILD_JOBS) <= set(batch_builds)
     failures = []
-    with extended_plans(spark):
-        for name, fn in qs.items():
-            if name.startswith("st_"):
+    for name, build in batch_builds.items():
+        if build.jobs and name not in BUILD_JOBS:
+            failures.append((name, f"{build.jobs} Spark jobs while building"))
+        if not build.jobs and name in BUILD_JOBS:
+            failures.append((name, "builds with no Spark job: drop it from BUILD_JOBS"))
+        plan = build.physical
+        if "CartesianProduct" in plan:
+            failures.append((name, "CartesianProduct"))
+        if "BatchEvalPython" in plan:
+            failures.append((name, "BatchEvalPython"))
+        for hit in find_loop_invariant_hof_calls(build.logical + plan):
+            failures.append((name, f"loop-invariant HOF call: {hit}"))
+        lines = plan.splitlines()
+        for i, line in enumerate(lines):
+            if "Exchange SinglePartition" not in line:
                 continue
-            window = StatusWindow(spark)
-            df = fn(spark, sf_dir)
-            n_jobs = len(window.jobs())
-            if n_jobs and name not in BUILD_JOBS:
-                failures.append((name, f"{n_jobs} Spark jobs while building"))
-            if not n_jobs and name in BUILD_JOBS:
-                failures.append((name, "builds with no Spark job: drop it from BUILD_JOBS"))
-            runs = window.executions()
-            qe = df._jdf.queryExecution()
-            plan = qe.executedPlan().toString() + "".join(e.physical for e in runs)
-            logical = qe.optimizedPlan().toString() + "".join(
-                e.section("Optimized Logical Plan") for e in runs
-            )
-            nonscalar = [
-                f"{f.name}: {f.dataType.simpleString()}"
-                for f in df.schema.fields
-                if f.dataType.simpleString().startswith(("array", "map", "struct", "binary"))
-            ]
-            if nonscalar:
-                failures.append((name, f"non-scalar columns {nonscalar}"))
-            if "CartesianProduct" in plan:
-                failures.append((name, "CartesianProduct"))
-            if "BatchEvalPython" in plan:
-                failures.append((name, "BatchEvalPython"))
-            for hit in find_loop_invariant_hof_calls(logical + plan):
-                failures.append((name, f"loop-invariant HOF call: {hit}"))
-            lines = plan.splitlines()
-            for i, line in enumerate(lines):
-                if "Exchange SinglePartition" not in line:
-                    continue
-                below = " ".join(lines[i + 1 : i + 2])
-                # partial_ = plain keyless two-phase agg; merge_ = the distinct-
-                # aggregate form (count_distinct): partial per-key dedup below,
-                # keyless MERGE above — both cross the exchange with one
-                # pre-combined row per partition, the shape this gate permits
-                if not re.search(
-                    r"(Hash|Sort|Object.*)Aggregate\(keys?=\[\], functions=\[(partial_|merge_)",
-                    below,
-                ):
-                    failures.append((name, f"SinglePartition over: {below.strip()[:90]}"))
+            below = " ".join(lines[i + 1 : i + 2])
+            # partial_ = plain keyless two-phase agg; merge_ = the distinct-
+            # aggregate form (count_distinct): partial per-key dedup below,
+            # keyless MERGE above — both cross the exchange with one
+            # pre-combined row per partition, the shape this gate permits
+            if not re.search(
+                r"(Hash|Sort|Object.*)Aggregate\(keys?=\[\], functions=\[(partial_|merge_)",
+                below,
+            ):
+                failures.append((name, f"SinglePartition over: {below.strip()[:90]}"))
     assert not failures, failures
 
 

@@ -408,6 +408,25 @@ def test_two_loads_of_one_table_self_join(spark, sf_dir):
     assert n == want > 0
 
 
+def test_driver_window_schemas_are_scalar_only(batch_builds):
+    """The scalar-only rule exists for the canonical comparator: it sorts
+    tuples of scalar cells, and an array/map/struct/binary output column
+    crashes it (`TypeError: unhashable type`), as an array column once did
+    for the `agg_percentiles_approx` row. Every batch query must therefore
+    emit scalar columns only; it reads the one build per query that the
+    plan audit reads too (`batch_builds`)."""
+    offenders = {}
+    for name, build in batch_builds.items():
+        nonscalar = {
+            col: kind
+            for col, kind in build.fields
+            if kind.startswith(("array", "map", "struct", "binary"))
+        }
+        if nonscalar:
+            offenders[name] = nonscalar
+    assert not offenders, offenders
+
+
 def test_query_registry_rejects_duplicate_names(monkeypatch):
     """A name registered twice, in one query module or in two, must raise
     instead of silently shadowing the first registration."""
